@@ -383,7 +383,6 @@ object Main {
     val info = ArrayBuffer.empty[(String, String)]
     var attempted = 0L
     var failed = 0L
-    var wallNs = 0L
     val opsOut = ArrayBuffer.empty[String]
 
     val setupTimes = (0 until setupReps).map { rep =>
@@ -412,9 +411,7 @@ object Main {
             .map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}"))
       }
       if (trace) tableRows
-      val t0 = System.nanoTime()
       val results = ops.map(q => runOp(q, data, dump))
-      wallNs = System.nanoTime() - t0
       attempted = results.size
       val checked = results.map { r =>
         val bad: Option[String] = r.error.orElse {
@@ -459,7 +456,7 @@ object Main {
         PlanOps.foreach { case (k, _) =>
           m(s"plan.n.$k", results.map(_.planCounts.getOrElse(k, 0)).sum, "count")
         }
-        layerTotals(all, wallNs / 1e9)
+        layerTotals(all, results.map(_.wall).sum)
         m("core.cache_peak_bytes", results.map(_.cacheBytes.toDouble).max, "bytes")
         val scanned = results.map(_.scannedRows).sum
         m("sources.rescan_ratio",
@@ -560,7 +557,6 @@ object Main {
       val ingestS = (System.nanoTime() - ti) / 1e9
       val ingestSpan =
         rec.fold(-1L)(_.span(-1, "ingest", "ingest", ti, System.nanoTime()))
-      wallNs = ((archiveS + ingestS) * 1e9).toLong
       sampleHeap()
 
       val aps = aq.recentProgress.toSeq.filter(_.numInputRows > 0)
@@ -634,7 +630,7 @@ object Main {
         m("archive_batch_s_p50", median(aps.map(trig)), "s")
         m("ingest_docs_per_s", mixRows / ingestS, "1/s")
         m("ingest_batch_s_p50", median(ips.map(trig)), "s")
-        layerTotals(all, wallNs / 1e9)
+        layerTotals(all, archiveS + ingestS)
         m("core.cache_peak_bytes", 0.0, "bytes")
         m("sources.rescan_ratio", 0.0, "1")
         Seq("latestOffset", "queryPlanning", "addBatch", "walCommit",
