@@ -1147,7 +1147,10 @@ object StatsOps {
     * the serving stage of the classifier, bit-identical to the scores
     * [[qualityClassifierOf]] emits when `w` came from the same corpus
     * (weight literals round-trip through Double.toString, which is
-    * exact). Only the batch is scanned; the model is four doubles. */
+    * exact). Only the batch is scanned; the model is four doubles. Rows
+    * are unordered (callers treat them as a set): a persisted sorted frame
+    * fails Spark 4.1 canonicalization once a view re-instantiates it, as
+    * InMemoryRelation.newInstance keeps its old output ordering. */
   def scoreWithWeights(batch: DataFrame, w: Array[Double]): DataFrame = {
     require(w.length == 4)
     val feats = clsFeatsView(batch)
@@ -1157,8 +1160,7 @@ object StatsOps {
         ${droundSql("0.5 + z / (2.0 * (1.0 + abs(z)))", 6)} AS score
       FROM (SELECT f.doc_id, f.yi,
               $w0 + $w1 * f1 + $w2 * f2 + $w3 * f3 AS z
-            FROM $feats f) fin
-      ORDER BY doc_id""")
+            FROM $feats f) fin""")
   }
 
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame =

@@ -14,20 +14,22 @@ import org.apache.spark.sql.functions._
   *     → BM25 postings/doclen append (q178) for the survivors
   *     → one exact-integer funnel row per micro-batch (q190's readout)
   *
-  * Every stage consumes the PREVIOUS stage's output (the cut text is
-  * what gets signed; only near-dup survivors are indexed) — the staging
-  * q190's batch funnel prescribes — and every stage touches O(batch)
-  * text plus frozen at-rest state only, so a micro-batch costs the same
-  * whether the corpus behind the gram/signature tables is 1 GB or
-  * 100 TB. Per-doc outputs depend only on the doc and frozen state,
-  * never on which micro-batch carried the doc, so the pipeline is
-  * batch-split-invariant by construction; each stage lands under
-  * `<out>/<stage>/batch_run=N` with idempotent overwrite, which makes a
-  * checkpoint-replayed batch REPLACE its own partitions — exactly-once
-  * end to end with a single checkpoint directory
-  * ([[Archive.startMultiSink]]'s discipline, applied to a six-sink
-  * DAG). StreamingAnalyticsSpec proves a two-micro-batch run (with a
-  * mid-run restart replay) equals the one-shot batch chain.
+  * Every stage consumes its parent stage's LANDED output (the cut text
+  * is what gets signed; only near-dup survivors are indexed) — the
+  * staging q190's batch funnel prescribes. Each stage lands under
+  * `<out>/<stage>/batch_run=N` with idempotent overwrite and is read back
+  * from there, so a stage's plan is one stage over a small parquet scan,
+  * never the whole chain re-derived from the stream's input. Every stage
+  * touches O(batch) text plus frozen at-rest state only, so a
+  * micro-batch costs the same whether the corpus behind the
+  * gram/signature tables is 1 GB or 100 TB. Per-doc outputs depend only
+  * on the doc and frozen state, so the pipeline is batch-split-invariant
+  * by construction, and a checkpoint-replayed batch REPLACES its own
+  * partitions before reading them back — exactly-once end to end with a
+  * single checkpoint directory ([[Archive.startMultiSink]]'s discipline,
+  * applied to a seven-sink DAG). StreamingAnalyticsSpec proves a
+  * two-micro-batch run (with a mid-run restart replay) equals the
+  * one-shot batch chain.
   */
 object IngestPipeline {
 
@@ -44,37 +46,47 @@ object IngestPipeline {
                     funnel: DataFrame)
 
   /** Run one batch of (doc_id, text, lang, n_chars) docs through the
-    * whole chain against frozen at-rest state. The SAME function serves
-    * the streaming writer and the batch comparand — the spec's equality
-    * is between two call sites of this code, not two implementations. */
+    * whole chain against frozen at-rest state, each stage persisted.
+    * The SAME stage code serves the streaming writer and the batch
+    * comparand — the spec's equality is between two call sites of this
+    * code, not two implementations. */
   def chainOf(batch: DataFrame, corpusGrams: DataFrame,
-              corpusSig: DataFrame, cfg: Config): Stages = {
-    val scores = graft.operators.StatsOps.scoreWithWeights(batch, cfg.weights)
+              corpusSig: DataFrame, cfg: Config): Stages =
+    stagesOf(batch, corpusGrams, corpusSig, cfg)(
+      (df, _) => graft.core.EngineCache.persisted(df))
+
+  /** The chain, with every stage passed through `barrier(frame, stage)`
+    * in landing order; each downstream stage is built from the
+    * barrier's return value, so a durable barrier cuts the lineage. */
+  private def stagesOf(batch: DataFrame, corpusGrams: DataFrame,
+                       corpusSig: DataFrame, cfg: Config)(
+      barrier: (DataFrame, String) => DataFrame): Stages = {
+    val scores = barrier(
+      graft.operators.StatsOps.scoreWithWeights(batch, cfg.weights), "scores")
     val kept = batch.join(
       scores.filter(col("score") >= cfg.scoreFloor).select("doc_id"),
       "doc_id")
-    val clean = graft.operators.LlmQueries
-      .intradocDedupOf(kept.select("doc_id", "text"))
-      .transform(graft.core.EngineCache.persisted)
+    val clean = barrier(graft.operators.LlmQueries
+      .intradocDedupOf(kept.select("doc_id", "text")), "clean")
     val cleanDocs = clean
       .select(col("doc_id"), col("clean_text").as("text"))
-    val spans = graft.operators.LlmQueries
-      .spanIncrementOf(cleanDocs, corpusGrams)
-      .transform(graft.core.EngineCache.persisted)
-    val hits = graft.llm.Dedup.incrementalLshPairs(
+    val spans = barrier(graft.operators.LlmQueries
+      .spanIncrementOf(cleanDocs, corpusGrams), "spans")
+    val hits = barrier(graft.llm.Dedup.incrementalLshPairs(
       corpusSig,
       graft.llm.Dedup.signatureFrame(
         cleanDocs, "doc_id", "text", cfg.shingleN, cfg.numHashes),
-      cfg.numHashes, cfg.bands, cfg.tau)
-      .transform(graft.core.EngineCache.persisted)
+      cfg.numHashes, cfg.bands, cfg.tau), "neardup")
     val survivors = cleanDocs.join(
       hits.select(col("batch_id").as("doc_id")).distinct(),
       Seq("doc_id"), "left_anti")
-    val postings = graft.operators.CorpusOps.bm25PostingsOf(survivors)
-    val doclen = graft.operators.CorpusOps.bm25DoclenOf(survivors)
+    val postings = barrier(
+      graft.operators.CorpusOps.bm25PostingsOf(survivors), "postings")
+    val doclen = barrier(
+      graft.operators.CorpusOps.bm25DoclenOf(survivors), "doclen")
     // q190's per-batch funnel row: every count an exact integer, every
-    // stage monotone vs the previous one — six 1-row aggregates, cheap
-    val funnel = batch.agg(count(lit(1)).as("n_raw"))
+    // stage monotone vs the previous one
+    val funnel = barrier(batch.agg(count(lit(1)).as("n_raw"))
       .crossJoin(kept.agg(count(lit(1)).as("n_quality")))
       .crossJoin(clean.agg(
         coalesce(sum(col("n_tokens")), lit(0L)).as("tokens_raw"),
@@ -83,31 +95,26 @@ object IngestPipeline {
         coalesce(sum(col("dup_tokens")), lit(0L)).as("corpus_dup_tokens")))
       .crossJoin(hits.select("batch_id").distinct()
         .agg(count(lit(1)).as("n_near_dup")))
-      .crossJoin(survivors.agg(count(lit(1)).as("n_indexed")))
+      .crossJoin(survivors.agg(count(lit(1)).as("n_indexed"))), "funnel")
     Stages(scores, clean, spans, hits, postings, doclen, funnel)
   }
 
-  /** Start the composed pipeline: one stream, one checkpoint, six
-    * batch_run-partitioned sinks. */
+  /** Start the composed pipeline: one stream, one checkpoint, seven
+    * batch_run-partitioned sinks, each stage read back from its own
+    * landed directory. */
   def start(docStream: DataFrame, corpusGrams: DataFrame,
             corpusSig: DataFrame, cfg: Config, outPath: String,
             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val s = chainOf(batch, corpusGrams, corpusSig, cfg)
-          def land(df: DataFrame, stage: String): Unit =
-            df.write.mode("overwrite")
-              .parquet(s"$outPath/$stage/batch_run=$batchId")
-          land(s.scores, "scores")
-          land(s.clean, "clean")
-          land(s.spans, "spans")
-          land(s.hits, "neardup")
-          land(s.postings, "postings")
-          land(s.doclen, "doclen")
-          land(s.funnel, "funnel")
-          // release THIS thread's persisted stage frames between batches
-          graft.core.EngineCache.releaseOwned()
+          try stagesOf(batch, corpusGrams, corpusSig, cfg) { (df, stage) =>
+            val dir = s"$outPath/$stage/batch_run=$batchId"
+            df.write.mode("overwrite").parquet(dir)
+            batch.sparkSession.read.parquet(dir)
+          }
+          // release THIS thread's persisted frames, also when a write throws
+          finally graft.core.EngineCache.releaseOwned()
         }
         () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
       }

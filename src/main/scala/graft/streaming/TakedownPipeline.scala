@@ -99,17 +99,18 @@ object TakedownPipeline {
     docStream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          val a = artifactsOf(batch)
-          def land(df: DataFrame, stage: String): Unit =
-            df.write.mode("overwrite")
-              .parquet(s"$outPath/$stage/batch_run=$batchId")
-          land(a.ids, "ids")
-          land(a.gramDec, "gramdec")
-          land(a.cbloomDec, "cbloomdec")
-          land(a.cmsDec, "cmsdec")
-          land(a.ddqDec, "ddqdec")
-          land(a.report, "report")
-          graft.core.EngineCache.releaseOwned()
+          try {
+            val a = artifactsOf(batch)
+            def land(df: DataFrame, stage: String): Unit =
+              df.write.mode("overwrite")
+                .parquet(s"$outPath/$stage/batch_run=$batchId")
+            land(a.ids, "ids")
+            land(a.gramDec, "gramdec")
+            land(a.cbloomDec, "cbloomdec")
+            land(a.cmsDec, "cmsdec")
+            land(a.ddqDec, "ddqdec")
+            land(a.report, "report")
+          } finally graft.core.EngineCache.releaseOwned()
         }
         () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
       }

@@ -1215,6 +1215,137 @@ class StreamingAnalyticsSpec extends SparkSpec {
     graft.core.EngineCache.releaseAll()
   }
 
+  /** The ingest DAG's frozen at-rest state over the fixture corpus
+    * (gram set, signatures, classifier weights) and its arriving docs,
+    * built as the restart spec above builds them. */
+  private case class IngestFixture(
+      grams: org.apache.spark.sql.DataFrame,
+      sig: org.apache.spark.sql.DataFrame, weights: Array[Double],
+      docs: Seq[(Long, String, String, Long)]) {
+    def cfg(scoreFloor: Double) = graft.streaming.IngestPipeline.Config(
+      weights, scoreFloor, graft.operators.LlmQueries.WordShingleN,
+      graft.operators.LlmQueries.MinhashK,
+      graft.operators.LlmQueries.MinhashBands,
+      graft.operators.LlmQueries.MinhashTau)
+  }
+
+  private def ingestFixture(): IngestFixture = {
+    val sq = spark
+    import sq.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.operators.LlmQueries
+    val d = graft.core.Tables.load(spark, sfDir, "documents")
+    IngestFixture(
+      LlmQueries.corpusGramsAtRest(spark, sfDir)
+        .transform(graft.core.EngineCache.persisted),
+      graft.llm.Dedup.signatureFrame(
+        d.filter(col("source") =!= LlmQueries.BatchSource), "doc_id", "text",
+        LlmQueries.WordShingleN, LlmQueries.MinhashK)
+        .transform(graft.core.EngineCache.persisted),
+      graft.operators.StatsOps.trainedClsWeights(
+        d.select("doc_id", "text", "lang", "n_chars")),
+      d.filter(col("source") === LlmQueries.BatchSource)
+        .select("doc_id", "text", "lang", "n_chars")
+        .as[(Long, String, String, Long)].collect().toSeq)
+  }
+
+  /** Stream `docs` as ONE micro-batch (batch_run=0) through the ingest
+    * DAG into a fresh directory; returns that directory. */
+  private def ingestOneBatch(fx: IngestFixture,
+                             cfg: graft.streaming.IngestPipeline.Config,
+                             prefix: String): String = {
+    val sq = spark
+    import sq.implicits._
+    implicit val ctx = sq.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    val source = MemoryStream[(Long, String, String, Long)]
+    val q = graft.streaming.IngestPipeline.start(
+      source.toDF().toDF("doc_id", "text", "lang", "n_chars"),
+      fx.grams, fx.sig, cfg, dir, s"$dir/ckpt")
+    try {
+      source.addData(fx.docs: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    dir
+  }
+
+  test("ingest DAG lands a batch with no doc above the quality floor as empty stages") {
+    val sq = spark
+    import sq.implicits._
+    import org.apache.spark.sql.functions.col
+    val fx = ingestFixture()
+    // scores lie in (0, 1): a floor of 2.0 admits no doc
+    val cfg = fx.cfg(scoreFloor = 2.0)
+    val dir = ingestOneBatch(fx, cfg, "graft-ingest-empty")
+    val want = graft.streaming.IngestPipeline.chainOf(
+      fx.docs.toDF("doc_id", "text", "lang", "n_chars"), fx.grams, fx.sig, cfg)
+    def landed(stage: String) = spark.read.parquet(s"$dir/$stage/batch_run=0")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(col): _*).collect().map(_.toSeq).toSet
+    val stages = Seq("scores" -> want.scores, "clean" -> want.clean,
+      "spans" -> want.spans, "neardup" -> want.hits,
+      "postings" -> want.postings, "doclen" -> want.doclen,
+      "funnel" -> want.funnel)
+    stages.foreach { case (stage, w) =>
+      if (stage != "scores" && stage != "funnel")
+        assert(landed(stage).isEmpty, s"$stage must land empty")
+      assert(rows(landed(stage)) === rows(w), s"$stage differs from chainOf")
+    }
+    val f = landed("funnel").collect()
+    assert(f.length === 1)
+    assert(f.head.getAs[Long]("n_raw") === fx.docs.length)
+    assert(f.head.getAs[Long]("n_quality") === 0L)
+    assert(f.head.getAs[Long]("n_indexed") === 0L)
+    graft.core.EngineCache.releaseAll()
+  }
+
+  test("ingest postings and doclen scan their parents' landed output, not the stream") {
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+      InsertIntoHadoopFsRelationCommand, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val fx = ingestFixture()
+    // each write's leaves: a landed directory as "<stage>/batch_run=N",
+    // anything else (the stream's input, an in-memory relation) by name
+    def leaves(p: LogicalPlan): Set[String] = p.collectLeaves().map {
+      case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] =>
+        l.relation.asInstanceOf[HadoopFsRelation].location.rootPaths
+          .map(r => s"${r.getParent.getName}/${r.getName}").mkString(",")
+      case other => other.nodeName
+    }.toSet
+    val scans = new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        qe.analyzed.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
+          val out = new org.apache.hadoop.fs.Path(c.outputPath.toString)
+          scans.put(s"${out.getParent.getName}/${out.getName}", leaves(c.query))
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    // registered BEFORE start: the stream runs on a clone of this session,
+    // which copies the listeners it has at that moment
+    spark.listenerManager.register(listener)
+    val dir = try ingestOneBatch(fx, fx.cfg(scoreFloor = 0.0), "graft-ingest-lineage")
+      finally spark.listenerManager.unregister(listener)
+    assert(!spark.read.parquet(s"$dir/postings/batch_run=0").isEmpty,
+      "every doc passes a 0.0 floor, so some survivor is indexed")
+    eventually(timeout(30.seconds)) {
+      assert(scans.containsKey("postings/batch_run=0") &&
+        scans.containsKey("doclen/batch_run=0"))
+    }
+    Seq("postings", "doclen").foreach { stage =>
+      assert(scans.get(s"$stage/batch_run=0") ===
+        Set("clean/batch_run=0", "neardup/batch_run=0"),
+        s"$stage must read only its parents' landed directories")
+    }
+    graft.core.EngineCache.releaseAll()
+  }
+
   test("streaming quality scores with frozen weights equal the batch classifier") {
     val sq = spark
     import sq.implicits._
