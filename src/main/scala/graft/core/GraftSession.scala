@@ -32,6 +32,15 @@ object GraftSession {
       // test suite). Checkpoint integrity at scale comes from the object
       // store; disable the checksum wrapper.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // `file:` paths through the NIO local filesystem (NioLocalFs.scala).
+      // Without the native libhadoop, which the Spark distribution does
+      // not ship, stock Hadoop forks a `chmod` for every file, `.crc` and
+      // `_temporary` dir it creates and a `readlink` for every FileContext
+      // rename (each checkpoint-log commit). Both classes keep the `.crc`
+      // checksums on. Other schemes are untouched.
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[NioLocalFs].getName)
       // Dimension tables (region/nation/supplier/customer at any SF that
       // matters) broadcast; 64 MB is safe with multi-GB executors.
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)

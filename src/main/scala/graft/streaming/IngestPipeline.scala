@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The COMPOSED streaming ingest edge — q190's cleaning funnel run at
@@ -18,8 +18,10 @@ import org.apache.spark.sql.functions._
   * is what gets signed; only near-dup survivors are indexed) — the
   * staging q190's batch funnel prescribes. Each stage lands under
   * `<out>/<stage>/batch_run=N` with idempotent overwrite and is read back
-  * from there, so a stage's plan is one stage over a small parquet scan,
-  * never the whole chain re-derived from the stream's input. Every stage
+  * from there with the stage's own schema (no Parquet footer-inference
+  * job), so a stage's plan is one stage over a small parquet scan, never
+  * the whole chain re-derived from the stream's input. The funnel row is
+  * one aggregate over all stages, not one aggregate per stage. Every stage
   * touches O(batch) text plus frozen at-rest state only, so a
   * micro-batch costs the same whether the corpus behind the
   * gram/signature tables is 1 GB or 100 TB. Per-doc outputs depend only
@@ -39,6 +41,10 @@ object IngestPipeline {
     * discipline). */
   case class Config(weights: Array[Double], scoreFloor: Double,
                     shingleN: Int, numHashes: Int, bands: Int, tau: Double)
+
+  /** The funnel row's columns, in order. */
+  private val FunnelCols = Seq("n_raw", "n_quality", "tokens_raw",
+    "tokens_after_cut", "corpus_dup_tokens", "n_near_dup", "n_indexed")
 
   /** The stage outputs for one batch of arriving docs. */
   case class Stages(scores: DataFrame, clean: DataFrame, spans: DataFrame,
@@ -85,17 +91,24 @@ object IngestPipeline {
     val doclen = barrier(
       graft.operators.CorpusOps.bm25DoclenOf(survivors), "doclen")
     // q190's per-batch funnel row: every count an exact integer, every
-    // stage monotone vs the previous one
-    val funnel = barrier(batch.agg(count(lit(1)).as("n_raw"))
-      .crossJoin(kept.agg(count(lit(1)).as("n_quality")))
-      .crossJoin(clean.agg(
-        coalesce(sum(col("n_tokens")), lit(0L)).as("tokens_raw"),
-        coalesce(sum(col("kept_tokens")), lit(0L)).as("tokens_after_cut")))
-      .crossJoin(spans.agg(
-        coalesce(sum(col("dup_tokens")), lit(0L)).as("corpus_dup_tokens")))
-      .crossJoin(hits.select("batch_id").distinct()
-        .agg(count(lit(1)).as("n_near_dup")))
-      .crossJoin(survivors.agg(count(lit(1)).as("n_indexed"))), "funnel")
+    // stage monotone vs the previous one. ONE aggregate over a union of
+    // per-stage projections: each branch puts 1 (a count) or the summed
+    // column into its own funnel column and null into the others.
+    def counted(df: DataFrame, cols: (String, Column)*): DataFrame = {
+      val own = cols.toMap
+      df.select(FunnelCols.map(c =>
+        own.getOrElse(c, lit(null)).cast("long").as(c)): _*)
+    }
+    val sums = FunnelCols.map(c => coalesce(sum(c), lit(0L)).as(c))
+    val funnel = barrier(Seq(
+      counted(batch, "n_raw" -> lit(1L)),
+      counted(kept, "n_quality" -> lit(1L)),
+      counted(clean, "tokens_raw" -> col("n_tokens"),
+        "tokens_after_cut" -> col("kept_tokens")),
+      counted(spans, "corpus_dup_tokens" -> col("dup_tokens")),
+      counted(hits.select("batch_id").distinct(), "n_near_dup" -> lit(1L)),
+      counted(survivors, "n_indexed" -> lit(1L))
+    ).reduce(_ unionByName _).agg(sums.head, sums.tail: _*), "funnel")
     Stages(scores, clean, spans, hits, postings, doclen, funnel)
   }
 
@@ -111,7 +124,8 @@ object IngestPipeline {
           try stagesOf(batch, corpusGrams, corpusSig, cfg) { (df, stage) =>
             val dir = s"$outPath/$stage/batch_run=$batchId"
             df.write.mode("overwrite").parquet(dir)
-            batch.sparkSession.read.parquet(dir)
+            // the stage's own schema: no footer-inference job per read-back
+            batch.sparkSession.read.schema(df.schema).parquet(dir)
           }
           // release THIS thread's persisted frames, also when a write throws
           finally graft.core.EngineCache.releaseOwned()

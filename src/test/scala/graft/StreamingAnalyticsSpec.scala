@@ -1207,6 +1207,21 @@ class StreamingAnalyticsSpec extends SparkSpec {
         sum("n_near_dup"), sum("n_indexed")).head()
     val w1 = want.funnel.head()
     assert((0 until 7).map(f.getLong) === (0 until 7).map(w1.getLong))
+    // pinned to counts derived WITHOUT the funnel code: from the fixture
+    // and the chainOf stages, so a funnel redefinition cannot hide
+    def longs(df: org.apache.spark.sql.DataFrame, c: String): Seq[Long] =
+      df.select(c).collect().toSeq.map(_.getAs[Number](0).longValue)
+    val scoreOf = want.scores.select("doc_id", "score").collect()
+      .map(r => r.getAs[Number](0).longValue -> r.getDouble(1)).toMap
+    val hitIds = longs(want.hits, "batch_id").toSet
+    assert((0 until 7).map(f.getLong) === Seq(
+      batchDocs.length.toLong,
+      batchDocs.count(d => scoreOf.get(d._1).exists(_ >= cfg.scoreFloor)).toLong,
+      longs(want.clean, "n_tokens").sum,
+      longs(want.clean, "kept_tokens").sum,
+      longs(want.spans, "dup_tokens").sum,
+      hitIds.size.toLong,
+      longs(want.clean, "doc_id").count(id => !hitIds(id)).toLong))
     assert(f.getLong(0) >= f.getLong(1) && f.getLong(1) >= f.getLong(6),
       "funnel counts must be monotone: raw >= quality >= indexed")
     assert(f.getLong(2) >= f.getLong(3),
