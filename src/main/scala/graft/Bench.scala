@@ -213,6 +213,7 @@ object Bench {
       // query; dropping them between timings keeps query N's storage
       // from evicting query N+1's working set (the timing should be the
       // query, not neighbors' leftover cache pressure)
+      graft.core.EngineCache.releaseAll()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       spark.catalog.clearCache()
       // Spark frees broadcast/shuffle blocks via the ContextCleaner, which

@@ -64,12 +64,4 @@ object Determinism {
 
   def xhashSql(expr: String): String =
     s"(('0x' || substr(md5($expr), 1, 15))::BIGINT)"
-
-  /** Family of derived hashes for MinHash/LSH: mix a seed into the input so
-    * each seed is an independent hash function, still cross-engine. */
-  def xhashSeeded(c: Column, seed: Int): Column =
-    xhash(concat(lit(s"s$seed:"), c))
-
-  def xhashSeededSql(expr: String, seed: Int): String =
-    xhashSql(s"'s$seed:' || ($expr)")
 }

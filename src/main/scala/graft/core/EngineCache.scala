@@ -14,14 +14,16 @@ import org.apache.spark.storage.StorageLevel
   * contract: every engine persist routes through [[persisted]], and a
   * caller (bench harness, test suite, library user) reclaims all engine
   * cache in one call with [[releaseAll]] once it has consumed the
-  * results it needs. Entries are weakly held, so frames the caller
-  * drops without releasing are still GC-reclaimable.
+  * results it needs. Entries are held strongly until released: the
+  * session's CacheManager keys a cache by plan, so the cache outlives
+  * the Dataset object, and an operator that keeps only a temp view of a
+  * persisted frame must still find that frame here at release.
   */
 object EngineCache {
   // value = id of the thread that registered the frame (the thread that
   // BUILT the query plan), for [[releaseOwned]]'s concurrency scoping
   private val tracked =
-    new java.util.WeakHashMap[Dataset[_], java.lang.Long]()
+    new java.util.IdentityHashMap[Dataset[_], java.lang.Long]()
 
   /** Persist `ds` at MEMORY_AND_DISK and track it for release. */
   def persisted[T](ds: Dataset[T]): Dataset[T] = synchronized {

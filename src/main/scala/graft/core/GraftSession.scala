@@ -53,12 +53,11 @@ object GraftSession {
       // PER-PARTITION bound, so at 100 TB (where partitions are sized
       // 100 MB-1 GB) it degrades to the sort-merge default on its own.
       // Skew stays covered: AQE skew-join splitting applies to SHJ too.
-      // Both env-overridable for A/B and for clusters that want the
-      // conservative default back.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
+      // Both are runtime SQL confs: a cluster that wants the conservative
+      // default back sets them with `spark.conf.set`.
+      .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCAL_MAP", (64L * 1024 * 1024).toString))
+        (64L * 1024 * 1024).toString)
       // events.ts is parquet TIMESTAMP(NANOS) in some fixture generations,
       // which the vectorized reader rejects; read nanos as long session-wide
       // (Tables.load converts, and passes TIMESTAMP_NTZ fixtures through).

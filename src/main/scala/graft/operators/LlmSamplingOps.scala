@@ -468,7 +468,7 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
   /** [[cdcChunks]] over an arbitrary (doc_id, text) frame — the spec
     * entry point for shift-robustness (edit a doc, most fps survive).
     *
-    * Shape (guide §2.3/§2.4, measured in ScratchTiming `cdc2`): the
+    * Shape (guide §2.3/§2.4, measured in OPTIMIZATION_r14.md "q152"): the
     * boundary hash runs on EXPLODED rows — whole-stage-codegen md5, the
     * hot path — and the per-doc chunking happens on ONE packed row per
     * doc: a single aggregate collects the boundary positions (a few

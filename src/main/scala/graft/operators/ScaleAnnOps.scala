@@ -115,7 +115,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     sub AS (
       SELECT vec_id, m, slice(embedding, m * $sub + 1, $sub) AS v
       FROM embeddings CROSS JOIN ms)"""
-  private[operators] def pqSubSql: String = pqSubSqlP(PqM, PqSub)
 
   /** The Lloyd codebook, built ROUND BY ROUND with a driver-side
     * materialization barrier between iterations.

@@ -35,7 +35,7 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     * rule). Old spelling: self-join + distinct exchange + union +
     * repartition exchange (3 exchanges, join fan-out shuffled twice).
     * Edge SETS are identical (A/B: except() both ways = 0 over the
-    * fixture; ScratchTiming `edges2` is the measurement record). */
+    * fixture; OPTIMIZATION_r14.md "Batch 2" records the run). */
   private[graft] def coPurchaseEdges(li: DataFrame, layout: String): DataFrame = {
     import org.apache.spark.sql.functions._
     li.groupBy(col("l_orderkey"))

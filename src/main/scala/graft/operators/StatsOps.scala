@@ -110,19 +110,6 @@ object StatsOps {
     * subsequent sum is exact int64. The oracle computes the same bounds
     * with `quantile_cont` over raw rows (same linear interpolation on
     * identical integer inputs). */
-  def winsorSpark: String = s"""
-    WITH h AS (
-      SELECT l_returnflag AS flag,
-        CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS c,
-        count(1) AS cnt
-      FROM lineitem GROUP BY l_returnflag, floor(l_extendedprice * 100 + 0.5)),
-    q AS (
-      SELECT flag,
-        CAST(floor(percentile(c, 0.1, cnt) + 0.5) AS BIGINT) AS lo,
-        CAST(floor(percentile(c, 0.9, cnt) + 0.5) AS BIGINT) AS hi
-      FROM h GROUP BY flag),
-    ${winsorTail}"""
-
   def winsorOracle: String = s"""
     WITH r0 AS (
       SELECT l_returnflag AS flag,
@@ -158,8 +145,8 @@ object StatsOps {
 
   /** r13: the `h` histogram CTE is referenced by BOTH the percentile
     * branch (`q`) and the clip/trim branch (`w`); Spark inlines CTEs,
-    * so [[winsorSpark]] scanned lineitem and rebuilt the (flag, c)
-    * hash aggregate TWICE (plan-verified: two parquet scans + two
+    * so an inline `h` scans lineitem and rebuilds the (flag, c) hash
+    * aggregate TWICE (plan-verified: two parquet scans + two
     * Exchange/HashAggregate pairs). Materialize `h` once behind a
     * per-call temp view and run the identical `q`/`w`/tail arithmetic
     * against the cache — same expressions, one scan (guide §1.2).

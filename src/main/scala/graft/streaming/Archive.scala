@@ -139,42 +139,30 @@ object Archive {
                       maxBatchId: Long): DataFrame =
     spark.read.parquet(path).filter(col("batch_id") <= maxBatchId)
 
-  /** Multi-sink delivery via `foreachBatch`: one micro-batch fans out to
-    * (1) the parquet archive and (2) a per-batch topic-count index table
-    * — the "rotated-file event" metadata stream the reference pushes to
-    * its uploaders (kafka.clj:93-97) turned into a queryable table.
-    *
-    * foreachBatch gives at-least-once per batch; exactly-once is restored
-    * by making EVERY sink write idempotent on batchId: each batch lands
-    * in its own `batch_id=N` partition directory with `overwrite` mode,
-    * so a replayed batch overwrites its own previous (possibly partial)
-    * attempt instead of appending duplicates — the §2.1.6-7 ordering
-    * argument, one directory per batch instead of one manifest entry.
+  /** Multi-sink delivery via [[BatchSink]]: one micro-batch (one
+    * rotation) fans out to (1) the parquet archive and (2) a per-batch
+    * topic-count index table — the "rotated-file event" metadata stream
+    * the reference pushes to its uploaders (kafka.clj:93-97) turned into
+    * a queryable table. Both sinks overwrite their own `batch_id=N`
+    * directory — one directory per batch instead of one manifest entry.
     * Readers see a normal Hive-partitioned table with batch_id as a
     * column (and can prune on it). */
   def startMultiSink(stream: DataFrame, cfg: ArchiveConfig,
                      indexPath: String): StreamingQuery =
-    stream
-      .filter(topicFilter(cfg))
-      .selectExpr(archiveColumns: _*)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) { // §2.1.5: no empty files on either sink
-          batch.write.mode("overwrite")
-            .partitionBy("topic", "partition")
-            .parquet(s"${cfg.outputPath}/batch_id=$batchId")
-          batch.groupBy(col("topic"))
-            .agg(count(lit(1)).as("n_records"),
-              min(col("offset")).as("first_offset"),
-              max(col("offset")).as("last_offset"))
-            .write.mode("overwrite")
-            .parquet(s"$indexPath/batch_id=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", cfg.checkpointPath)
-      .trigger(Trigger.ProcessingTime(cfg.rotationInterval))
-      .start()
+    BatchSink.start(
+      stream.filter(topicFilter(cfg)).selectExpr(archiveColumns: _*),
+      cfg.checkpointPath, Trigger.ProcessingTime(cfg.rotationInterval)) {
+      (batch, batchId) =>
+        batch.write.mode("overwrite")
+          .partitionBy("topic", "partition")
+          .parquet(s"${cfg.outputPath}/batch_id=$batchId")
+        batch.groupBy(col("topic"))
+          .agg(count(lit(1)).as("n_records"),
+            min(col("offset")).as("first_offset"),
+            max(col("offset")).as("last_offset"))
+          .write.mode("overwrite")
+          .parquet(s"$indexPath/batch_id=$batchId")
+    }
 
   /** Schema-evolution read: a long-lived archive accumulates files
     * written by different producer versions (new columns appear; old

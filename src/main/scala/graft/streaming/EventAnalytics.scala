@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import java.sql.Timestamp
 
 /** Streaming analytics over event streams: event-time windows +
@@ -26,25 +26,6 @@ object EventAnalytics {
       .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
       .select(col("window.start").as("win_start"), col("event_type"),
         col("n"), col("sum_value"))
-
-  /** Sliding window variant. */
-  def slidingCounts(events: DataFrame, watermark: String = "10 minutes",
-                    window_ : String = "10 minutes", slide: String = "5 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), window_, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("event_type"), col("n"))
-
-  /** Session windows (gap-based) via the built-in session_window. */
-  def sessionCounts(events: DataFrame, watermark: String = "10 minutes",
-                    gap: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("sess_start"),
-        col("session_window.end").as("sess_end"), col("user_id"), col("n_events"))
 
   /** Per-window per-type distinct-user HLL sketches built AT STREAM TIME
     * — the ingest end of q135's sketch-at-rest lifecycle: the stream job
@@ -128,37 +109,28 @@ object EventAnalytics {
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
 
+  // ---- stream twins: each lands its micro-batches through BatchSink,
+  // which owns the exactly-once sink policy ----
+
   /** Streaming incremental near-dedup against SIGNATURES at rest — the
     * stream-time twin of q145's daily-batch path: each arriving
     * micro-batch of documents is the ONLY text that gets shingled and
     * MinHash-signed; its signatures banded-join the stored corpus
     * signature table ([[graft.llm.Dedup.signatureFrame]], built once and
     * persisted in the warehouse) and the near-dup hits land under
-    * `hits/batch_run=N`. Per-batch idempotent overwrite of that
-    * directory restores exactly-once under foreachBatch replay — the
-    * same batch-id-keyed discipline as [[Archive.startMultiSink]].
-    * At 100 TB/day the corpus is never re-signed and each micro-batch
-    * costs O(batch): sign, band-join, verify against stored shingle
-    * hash sets. */
+    * `hits/batch_run=N`. At 100 TB/day the corpus is never re-signed and
+    * each micro-batch costs O(batch): sign, band-join, verify against
+    * stored shingle hash sets. */
   def startStreamingNearDedup(docStream: DataFrame, corpusSig: DataFrame,
                               shingleN: Int, numHashes: Int, bands: Int,
                               tau: Double, hitsPath: String,
-                              checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val batchSig = graft.llm.Dedup.signatureFrame(
-            batch, "doc_id", "text", shingleN, numHashes)
-          graft.llm.Dedup.incrementalLshPairs(
-              corpusSig, batchSig, numHashes, bands, tau)
-            .write.mode("overwrite")
-            .parquet(s"$hitsPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                              checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      val batchSig = graft.llm.Dedup.signatureFrame(
+        batch, "doc_id", "text", shingleN, numHashes)
+      BatchSink.land(graft.llm.Dedup.incrementalLshPairs(
+        corpusSig, batchSig, numHashes, bands, tau), hitsPath, batchId)
+    }
 
   /** [[startStreamingNearDedup]] with GROWING at-rest state — the full
     * incremental lifecycle rather than a frozen-corpus check: each
@@ -170,73 +142,52 @@ object EventAnalytics {
     * `sigs/batch_run=N` so later batches dedup against them. The prior
     * filter is STRICTLY `batch_run < id`: a checkpoint-replayed batch
     * can never see its own earlier (possibly partial) signature write,
-    * which keeps replay idempotent — the same discipline as every
-    * other twin, extended to read-your-own-kind state. Hits carry
-    * (id_a = arriving doc, id_b = state-or-batch doc, jaccard). */
+    * which keeps replay idempotent for read-your-own-kind state. Hits
+    * carry (id_a = arriving doc, id_b = state-or-batch doc, jaccard). */
   def startStreamingNearDedupAccumulating(
       docStream: DataFrame, corpusSig: DataFrame,
       shingleN: Int, numHashes: Int, bands: Int, tau: Double,
-      outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val batchSig = graft.llm.Dedup.signatureFrame(
-            batch, "doc_id", "text", shingleN, numHashes)
-            .transform(graft.core.EngineCache.persisted)
-          val prior =
-            try Some(spark.read.parquet(s"$outPath/sigs")
-              .filter(col("batch_run") < batchId)
-              .select("id", "hs", "sig"))
-            catch { // first batch: no sigs directory yet
-              case _: org.apache.spark.sql.AnalysisException => None
-            }
-          val state = prior.fold(corpusSig.select("id", "hs", "sig"))(
-            corpusSig.select("id", "hs", "sig").unionByName(_))
-          val cross = graft.llm.Dedup.incrementalLshPairs(
-              state, batchSig, numHashes, bands, tau)
-            .select(col("batch_id").as("id_a"),
-              col("corpus_id").as("id_b"), col("jaccard"))
-          val within = graft.llm.Dedup.minhashLshPairs(
-            batch, "doc_id", "text", shingleN, numHashes, bands, tau)
-          cross.unionByName(within)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/hits/batch_run=$batchId")
-          batchSig.write.mode("overwrite")
-            .parquet(s"$outPath/sigs/batch_run=$batchId")
-          graft.core.EngineCache.releaseOwned()
+      outPath: String, checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val batchSig = graft.llm.Dedup.signatureFrame(
+        batch, "doc_id", "text", shingleN, numHashes)
+        .transform(graft.core.EngineCache.persisted)
+      val prior =
+        try Some(spark.read.parquet(s"$outPath/sigs")
+          .filter(col("batch_run") < batchId)
+          .select("id", "hs", "sig"))
+        catch { // first batch: no sigs directory yet
+          case _: org.apache.spark.sql.AnalysisException => None
         }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+      val state = prior.fold(corpusSig.select("id", "hs", "sig"))(
+        corpusSig.select("id", "hs", "sig").unionByName(_))
+      val cross = graft.llm.Dedup.incrementalLshPairs(
+          state, batchSig, numHashes, bands, tau)
+        .select(col("batch_id").as("id_a"),
+          col("corpus_id").as("id_b"), col("jaccard"))
+      val within = graft.llm.Dedup.minhashLshPairs(
+        batch, "doc_id", "text", shingleN, numHashes, bands, tau)
+      BatchSink.land(cross.unionByName(within), s"$outPath/hits", batchId)
+      BatchSink.land(batchSig, s"$outPath/sigs", batchId)
+    }
 
   /** Streaming IVF-PQ index maintenance — the stream-time twin of
     * q151's batch append: each arriving micro-batch of (vec_id,
     * embedding) rows is PQ-encoded with the FROZEN memoized codebook
     * ([[graft.operators.ScaleOps.encodeWithFrozenCodebook]] — only the
     * batch is scanned, the codebook never shifts) and its codes land
-    * under `index/batch_run=N` with per-batch idempotent overwrite
-    * (exactly-once under foreachBatch replay, the multi-sink
-    * discipline). A search tier reading the base index plus these
-    * partitions sees new vectors one trigger after they arrive, with
-    * no corpus re-encode anywhere. */
+    * under `index/batch_run=N`. A search tier reading the base index
+    * plus these partitions sees new vectors one trigger after they
+    * arrive, with no corpus re-encode anywhere. */
   def startStreamingIndexAppend(vecStream: DataFrame, dir: String,
-                                indexPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.ScaleOps
-            .encodeWithFrozenCodebook(batch.sparkSession, dir, batch)
-            .write.mode("overwrite")
-            .parquet(s"$indexPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                indexPath: String,
+                                checkpoint: String): StreamingQuery =
+    BatchSink.start(vecStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.ScaleOps
+        .encodeWithFrozenCodebook(batch.sparkSession, dir, batch),
+        indexPath, batchId)
+    }
 
   /** Streaming NSW graph-index maintenance — the stream-time twin of
     * q264's batch append, completing the at-rest maintenance verbs'
@@ -244,8 +195,7 @@ object EventAnalytics {
     * the IVM views already have twins): each arriving micro-batch of
     * (vec_id, embedding) rows is SRP-SIGNED on its own (signatures are
     * per-row pure, so the landed rows are batch-split-invariant by
-    * construction) and lands under `sigs/batch_run=N` with idempotent
-    * overwrite — exactly-once under foreachBatch replay. Landing
+    * construction) and lands under `sigs/batch_run=N`. Landing
     * SIGNATURES, not adjacency, is the honest stream/batch split: edge
     * repair needs the affected set's corpus context, and a per-trigger
     * adjacency rewrite would make batch N's artifact depend on batches
@@ -257,21 +207,13 @@ object EventAnalytics {
     * adjacency equal to the batch verb's — the spec's equality,
     * restart included. */
   def startStreamingNswSigAppend(vecStream: DataFrame, sigsPath: String,
-                                 checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.GraftFunctions.register(batch.sparkSession)
-          batch.selectExpr("vec_id",
-            s"srp_sig(embedding, ${graft.operators.LlmQueries.SrpBits}) AS sig")
-            .write.mode("overwrite")
-            .parquet(s"$sigsPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                 checkpoint: String): StreamingQuery =
+    BatchSink.start(vecStream, checkpoint) { (batch, batchId) =>
+      graft.functions.GraftFunctions.register(batch.sparkSession)
+      BatchSink.land(batch.selectExpr("vec_id",
+        s"srp_sig(embedding, ${graft.operators.LlmQueries.SrpBits}) AS sig"),
+        sigsPath, batchId)
+    }
 
   /** Streaming z-order append — the stream-time twin of q200's encode
     * half under the frozen-artifact discipline (q151's codebook,
@@ -280,55 +222,39 @@ object EventAnalytics {
     * is Morton-encoded against those bounds alone
     * ([[graft.operators.ScaleOps.zorderEncodeFrozen]] — per-row pure,
     * so the emitted codes are batch-split-invariant) into
-    * `zrows/batch_run=N` with idempotent overwrite. File assignment is
-    * deliberately NOT streamed: clustering is a compaction-time
-    * decision (the periodic OPTIMIZE re-ranks fresh rows into layout
-    * files), exactly how lakehouse ingestion lands row-files that a
-    * later pass z-orders. */
+    * `zrows/batch_run=N`. File assignment is deliberately NOT streamed:
+    * clustering is a compaction-time decision (the periodic OPTIMIZE
+    * re-ranks fresh rows into layout files), exactly how lakehouse
+    * ingestion lands row-files that a later pass z-orders. */
   def startStreamingZorderAppend(rowStream: DataFrame, dir: String,
-                                 layoutPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                                 layoutPath: String,
+                                 checkpoint: String): StreamingQuery = {
     // the frozen-artifact read happens ONCE, before the stream starts:
     // every micro-batch closes over these four constants instead of
     // re-aggregating the whole base layout per trigger
     val (pmn, pmx, smn, smx) = graft.operators.ScaleOps
       .zorderFrozenBounds(rowStream.sparkSession, dir)
-    rowStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.ScaleOps
-            .zorderEncodeWithBounds(batch, pmn, pmx, smn, smx)
-            .write.mode("overwrite")
-            .parquet(s"$layoutPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    BatchSink.start(rowStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.ScaleOps
+        .zorderEncodeWithBounds(batch, pmn, pmx, smn, smx),
+        layoutPath, batchId)
+    }
   }
 
   /** Streaming winnowing-fingerprint maintenance — the stream-time twin
     * of q229's increment: each arriving micro-batch of documents is
     * gram-hashed and window-minimized ON ITS OWN (fingerprints are
     * per-document pure, so the emitted rows are batch-split-invariant
-    * by construction) and lands under `fps/batch_run=N` with idempotent
-    * overwrite; a reader unions base ∪ batch_run partitions exactly as
-    * q229 serves. The spec proves two micro-batches merge to the
-    * one-shot fingerprint set row-for-row. */
+    * by construction) and lands under `fps/batch_run=N`; a reader
+    * unions base ∪ batch_run partitions exactly as q229 serves. The
+    * spec proves two micro-batches merge to the one-shot fingerprint
+    * set row-for-row. */
   def startStreamingWinnowFps(docStream: DataFrame, fpsPath: String,
-                              checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.CorpusFilterOps.winnowFps(batch)
-            .write.mode("overwrite")
-            .parquet(s"$fpsPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                              checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.CorpusFilterOps.winnowFps(batch),
+        fpsPath, batchId)
+    }
 
   /** Streaming CUSUM monitoring — the stream-time twin of q211's
     * changepoint scan, built on the idempotent-increment discipline:
@@ -339,89 +265,58 @@ object EventAnalytics {
     * re-combines partials exactly and runs the q211 prefix identity.
     * Because the landed rows are additive partials, the monitor is
     * batch-split-invariant even when a micro-batch cuts an hour in
-    * half, and a foreachBatch RETRY simply overwrites its own
-    * batch_run directory — no stateful fold exists to double-apply,
+    * half, and no stateful fold exists to double-apply on a retry,
     * which is why the state is at rest instead of in
     * mapGroupsWithState. Spec proves mid-hour splits reproduce the
     * batch detector exactly. */
   def startStreamingCusumHourly(eventStream: DataFrame, hourlyPath: String,
-                                checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions._
-          batch.groupBy(col("event_type"),
-              date_trunc("hour", col("ts")).as("hour"))
-            .agg(sum(col("value")
-              .cast(org.apache.spark.sql.types.DataTypes
-                .createDecimalType(30, 8))).as("vsum"),
-              count(lit(1)).as("vn"))
-            .write.mode("overwrite")
-            .parquet(s"$hourlyPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                checkpoint: String): StreamingQuery =
+    BatchSink.start(eventStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(batch.groupBy(col("event_type"),
+          date_trunc("hour", col("ts")).as("hour"))
+        .agg(sum(col("value")
+          .cast(org.apache.spark.sql.types.DataTypes
+            .createDecimalType(30, 8))).as("vsum"),
+          count(lit(1)).as("vn")), hourlyPath, batchId)
+    }
 
   /** Streaming PROFILE maintenance — the stream-time twin of q224's
     * refresh: each arriving micro-batch of lineitem-shaped rows is
     * profiled on its own (per-column counts, typed min/max, HLL value
     * sketch) and the per-batch profile rows land under
-    * `prof/batch_run=N` with idempotent overwrite. The CURRENT profile
-    * at any moment is the same pure merge q224 serves — counts add,
-    * min/max fold, sketches hll_merge — over however many batch_run
-    * partitions exist; because every statistic is a commutative,
-    * associative monoid (FunctionsSpec property-tests the sketch laws),
-    * the merged profile is batch-split-invariant, which the spec proves
-    * against the one-shot profile. */
+    * `prof/batch_run=N`. The CURRENT profile at any moment is the same
+    * pure merge q224 serves — counts add, min/max fold, sketches
+    * hll_merge — over however many batch_run partitions exist; because
+    * every statistic is a commutative, associative monoid
+    * (FunctionsSpec property-tests the sketch laws), the merged profile
+    * is batch-split-invariant, which the spec proves against the
+    * one-shot profile. */
   def startStreamingProfileRefresh(rowStream: DataFrame, profPath: String,
-                                   checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rowStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.ScaleOps.profileRowsOfProjected(batch)
-            .write.mode("overwrite")
-            .parquet(s"$profPath/batch_run=$batchId")
-          graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                   checkpoint: String): StreamingQuery =
+    BatchSink.start(rowStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.ScaleOps.profileRowsOfProjected(batch),
+        profPath, batchId)
+    }
 
   /** Streaming bitmap-index ENCODE — the stream-time twin of q214's
     * append half: each arriving micro-batch of lineitem-shaped rows is
     * encoded into (col, val, word_id, word) bitmap shards with the SAME
     * rid scheme the at-rest index uses, landing under
-    * `words/batch_run=N` with idempotent overwrite. A reader serves
-    * conjunctions over base ∪ stream by the same word-wise bit_or
-    * merge, because bits stay disjoint as long as micro-batches split
-    * on l_orderkey — a prefix of the rid key, the exact contract q214
-    * documents for its batch split (Kafka keyed by orderkey gives this
-    * for free: one key never spans partitions mid-group). Under that
-    * contract the emitted words are batch-split-invariant up to the
-    * word grouping, and the merged index is — the spec proves the
-    * two-batch merge equals the one-shot index bit-for-bit. */
+    * `words/batch_run=N`. A reader serves conjunctions over base ∪
+    * stream by the same word-wise bit_or merge, because bits stay
+    * disjoint as long as micro-batches split on l_orderkey — a prefix
+    * of the rid key, the exact contract q214 documents for its batch
+    * split (Kafka keyed by orderkey gives this for free: one key never
+    * spans partitions mid-group). Under that contract the emitted words
+    * are batch-split-invariant up to the word grouping, and the merged
+    * index is — the spec proves the two-batch merge equals the one-shot
+    * index bit-for-bit. */
   def startStreamingBitmapEncode(rowStream: DataFrame, wordsPath: String,
-                                 checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rowStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.ScaleOps.bitmapIndexOf(batch)
-            .write.mode("overwrite")
-            .parquet(s"$wordsPath/batch_run=$batchId")
-          // bitmapIndexOf persists its rid frame for the guard pass;
-          // release this thread's frames between batches
-          graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                 checkpoint: String): StreamingQuery =
+    BatchSink.start(rowStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.ScaleOps.bitmapIndexOf(batch),
+        wordsPath, batchId)
+    }
 
   /** Streaming Bloom-shard encode — the stream-time twin of the q255
     * membership manifest, keyed by a ROW-PURE shard (l_orderkey mod 8)
@@ -429,70 +324,48 @@ object EventAnalytics {
     * notion, but a shard function gives a row the same home whichever
     * micro-batch carries it, so the merged filters are
     * batch-split-invariant BY CONSTRUCTION. Each micro-batch lands one
-    * filter per shard under `batch_run=N` with idempotent overwrite; a
-    * serve `bloom_merge`s every run's shard filters. Bit-OR is
-    * commutative, associative, AND idempotent — a double-merged
-    * replayed batch changes nothing, so unlike the counting family
-    * (q239's merge-once discipline) this sink needs no exactly-once
-    * care beyond the overwrite itself. The price is the same monotone
-    * trade the q255 scaladoc records: stream-time deletes are
-    * impossible; a takedown rebuilds affected shards or tolerates
-    * stale positives. */
+    * filter per shard under `batch_run=N`; a serve `bloom_merge`s every
+    * run's shard filters. Bit-OR is commutative, associative, AND
+    * idempotent — a double-merged replayed batch changes nothing, so
+    * unlike the counting family (q239's merge-once discipline) this sink
+    * needs no exactly-once care beyond the overwrite itself. The price
+    * is the same monotone trade the q255 scaladoc records: stream-time
+    * deletes are impossible; a takedown rebuilds affected shards or
+    * tolerates stale positives. */
   def startStreamingBloomShards(rowStream: DataFrame, path: String,
-                                checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rowStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.BloomSketch.register(batch.sparkSession)
-          batch
-            .selectExpr("CAST(l_orderkey % 8 AS INT) AS shard",
-              "l_partkey AS p")
-            .groupBy("shard")
-            .agg(org.apache.spark.sql.functions.expr("bloom_build(p)")
-              .as("sk"))
-            .write.mode("overwrite")
-            .parquet(s"$path/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                checkpoint: String): StreamingQuery =
+    BatchSink.start(rowStream, checkpoint) { (batch, batchId) =>
+      graft.functions.BloomSketch.register(batch.sparkSession)
+      BatchSink.land(batch
+        .selectExpr("CAST(l_orderkey % 8 AS INT) AS shard", "l_partkey AS p")
+        .groupBy("shard")
+        .agg(expr("bloom_build(p)").as("sk")), path, batchId)
+    }
 
   /** Streaming KMV-shard encode — the stream-time twin of q267's
     * set-expression sketches: events arrive in micro-batches, each
     * batch lands one KMV user sketch per (event_type, shard) under
-    * `batch_run=N` with idempotent overwrite, and a serve `kmv_merge`s
-    * every run's sketches per type before answering any set
-    * expression. The KMV merge is set union capped at the K smallest
-    * hashes in canonical sorted-byte form — commutative, associative,
-    * AND idempotent — so the merged sketch is batch-split-invariant by
-    * construction and a replayed (double-landed) batch changes nothing;
-    * like the Bloom family and unlike the counting sketches (q239's
-    * merge-once discipline), no exactly-once care is needed beyond the
-    * overwrite. The same monotone trade applies: a min-sketch cannot
-    * retract, so stream-time deletes rebuild affected shards or
-    * tolerate stale members — stated, not papered over. */
+    * `batch_run=N`, and a serve `kmv_merge`s every run's sketches per
+    * type before answering any set expression. The KMV merge is set
+    * union capped at the K smallest hashes in canonical sorted-byte
+    * form — commutative, associative, AND idempotent — so the merged
+    * sketch is batch-split-invariant by construction and a replayed
+    * (double-landed) batch changes nothing; like the Bloom family and
+    * unlike the counting sketches (q239's merge-once discipline), no
+    * exactly-once care is needed beyond the overwrite. The same monotone
+    * trade applies: a min-sketch cannot retract, so stream-time deletes
+    * rebuild affected shards or tolerate stale members — stated, not
+    * papered over. */
   def startStreamingKmvShards(eventStream: DataFrame, path: String,
-                              checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.KmvSketch.register(batch.sparkSession)
-          batch
-            .selectExpr("event_type",
-              "CAST(user_id % 8 AS INT) AS shard", "user_id")
-            .groupBy("event_type", "shard")
-            .agg(org.apache.spark.sql.functions.expr("kmv_build(user_id)")
-              .as("sk"))
-            .write.mode("overwrite")
-            .parquet(s"$path/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                              checkpoint: String): StreamingQuery =
+    BatchSink.start(eventStream, checkpoint) { (batch, batchId) =>
+      graft.functions.KmvSketch.register(batch.sparkSession)
+      BatchSink.land(batch
+        .selectExpr("event_type", "CAST(user_id % 8 AS INT) AS shard",
+          "user_id")
+        .groupBy("event_type", "shard")
+        .agg(expr("kmv_build(user_id)").as("sk")), path, batchId)
+    }
 
   /** Streaming SUMMARY-DELTA feed — the stream-time twin of q270's
     * aggregate-view maintenance, generalized to the full CDC verb set:
@@ -500,42 +373,29 @@ object EventAnalytics {
     * NULL old is an INSERT, a NULL new is a DELETE, and both present
     * is a REVISION; the batch aggregates to per-group signed deltas
     * (Δn = inserts − deletes, Δrev = Σ new − Σ old) landed under
-    * `batch_run=N` with idempotent overwrite. COUNT/SUM form an
-    * abelian group, so the folded deltas are batch-split-invariant by
-    * construction and a serve is stored-summary + one O(groups·runs)
-    * fold — the fact table never rescans at stream time. Deltas are
-    * NOT idempotent under re-merge (the q239 counting discipline, not
-    * the Bloom/KMV one): exactly-once rides the per-batch directory
-    * overwrite — a replayed batch rewrites its own run, never
-    * double-lands. */
+    * `batch_run=N`. COUNT/SUM form an abelian group, so the folded
+    * deltas are batch-split-invariant by construction and a serve is
+    * stored-summary + one O(groups·runs) fold — the fact table never
+    * rescans at stream time. Deltas are NOT idempotent under re-merge
+    * (the q239 counting discipline, not the Bloom/KMV one): exactly-once
+    * rides the per-batch directory overwrite — a replayed batch
+    * rewrites its own run, never double-lands. */
   def startStreamingViewDeltas(cdcStream: DataFrame, deltaPath: String,
-                               checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cdcStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          batch
-            .selectExpr("grp",
-              "CASE WHEN old_cents IS NULL THEN 1L ELSE 0L END - " +
-                "CASE WHEN new_cents IS NULL THEN 1L ELSE 0L END AS dn",
-              "coalesce(new_cents, 0L) - coalesce(old_cents, 0L) AS drev")
-            .groupBy("grp")
-            .agg(org.apache.spark.sql.functions.expr(
-                "CAST(sum(dn) AS BIGINT)").as("d_n"),
-              org.apache.spark.sql.functions.expr(
-                "CAST(sum(drev) AS BIGINT)").as("d_rev"))
-            .write.mode("overwrite")
-            .parquet(s"$deltaPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                               checkpoint: String): StreamingQuery =
+    BatchSink.start(cdcStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(batch
+        .selectExpr("grp",
+          "CASE WHEN old_cents IS NULL THEN 1L ELSE 0L END - " +
+            "CASE WHEN new_cents IS NULL THEN 1L ELSE 0L END AS dn",
+          "coalesce(new_cents, 0L) - coalesce(old_cents, 0L) AS drev")
+        .groupBy("grp")
+        .agg(expr("CAST(sum(dn) AS BIGINT)").as("d_n"),
+          expr("CAST(sum(drev) AS BIGINT)").as("d_rev")), deltaPath, batchId)
+    }
 
   /** Read-side serve over the delta shards: stored summary + the
     * additive fold of every run — O(groups · runs), no fact scan. */
   def summaryFromDeltas(base: DataFrame, deltaPath: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val spark = base.sparkSession
     val deltas = spark.read.parquet(deltaPath)
       .groupBy("grp")
@@ -551,118 +411,75 @@ object EventAnalytics {
 
   /** Streaming DELETE feed for the bitmap index — the stream-time twin
     * of q231's tombstone build: deleted rows arrive in micro-batches,
-    * each batch's tombstone words land under `batch_run=N` with
-    * idempotent overwrite, and a serve merges every run's words by
-    * bit_or before the AND-NOT — bit_or is a commutative-associative
-    * monoid, so the merged bitmap is batch-split-invariant. Same
-    * contract as the encode twin: batches must split on l_orderkey (a
-    * PREFIX of the rid key), so an occurrence group never spans two
-    * batches and per-batch occ numbering cannot alias two different
-    * rows onto one rid. The index itself is never touched — deletes at
-    * stream time are pure tombstone appends, the Druid/Lucene
-    * soft-delete shape. */
+    * each batch's tombstone words land under `batch_run=N`, and a serve
+    * merges every run's words by bit_or before the AND-NOT — bit_or is
+    * a commutative-associative monoid, so the merged bitmap is
+    * batch-split-invariant. Same contract as the encode twin: batches
+    * must split on l_orderkey (a PREFIX of the rid key), so an
+    * occurrence group never spans two batches and per-batch occ
+    * numbering cannot alias two different rows onto one rid. The index
+    * itself is never touched — deletes at stream time are pure
+    * tombstone appends, the Druid/Lucene soft-delete shape. */
   def startStreamingTombstones(rowStream: DataFrame, tombPath: String,
-                               checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rowStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.ScaleOps.bitmapTombstoneOf(batch)
-            .write.mode("overwrite")
-            .parquet(s"$tombPath/batch_run=$batchId")
-          // bitmapRidded persists for the capacity guard; release
-          graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                               checkpoint: String): StreamingQuery =
+    BatchSink.start(rowStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.ScaleOps.bitmapTombstoneOf(batch),
+        tombPath, batchId)
+    }
 
   /** Streaming DELETE feed for the refcounted gram set — the
     * stream-time twin of q234's decrement build: tombstoned documents
     * arrive in micro-batches, each batch's (ghash, dec) refcount
-    * decrements land under `batch_run=N` with idempotent overwrite,
-    * and a serve sums every run's decrements before subtracting from
-    * the stored (ghash, df) table — counts are an additive monoid, and
-    * a document is an atomic row, so the merged decrement is
-    * batch-split-invariant with no cross-batch contract to honor (the
-    * easier cousin of the bitmap twin's rid-prefix rule). The gram
-    * table itself is never touched at stream time — deletes are pure
-    * decrement appends, folded in by compaction. */
+    * decrements land under `batch_run=N`, and a serve sums every run's
+    * decrements before subtracting from the stored (ghash, df) table —
+    * counts are an additive monoid, and a document is an atomic row, so
+    * the merged decrement is batch-split-invariant with no cross-batch
+    * contract to honor (the easier cousin of the bitmap twin's
+    * rid-prefix rule). The gram table itself is never touched at stream
+    * time — deletes are pure decrement appends, folded in by
+    * compaction. */
   def startStreamingGramDeletes(docStream: DataFrame, decPath: String,
-                                checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.LlmQueries.gramDecrementsOf(batch)
-            .write.mode("overwrite")
-            .parquet(s"$decPath/batch_run=$batchId")
-          // the gram view persists for the distinct pass; release
-          graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.LlmQueries.gramDecrementsOf(batch),
+        decPath, batchId)
+    }
 
   /** Streaming DELETE feed for the counting-bloom filter — the
     * stream-time twin of q239's subtraction: tombstoned documents
     * arrive in micro-batches, each batch cbloom_builds its own
-    * decrement SKETCH under `batch_run=N` with idempotent overwrite,
-    * and a serve cbloom_merges every run's sketch before ONE
-    * cbloom_diff from the stored filter. The counting bloom is a
-    * LINEAR map of the inserted multiset, so batch-split-invariance
-    * here is BYTE equality of the subtracted filter, not merely
-    * equal query answers (the spec pins the bytes) — the strongest
-    * invariance any twin in this file can claim. The stored filter is
-    * never touched at stream time; decrements fold in at serve or by
-    * compaction. */
+    * decrement SKETCH under `batch_run=N`, and a serve cbloom_merges
+    * every run's sketch before ONE cbloom_diff from the stored filter.
+    * The counting bloom is a LINEAR map of the inserted multiset, so
+    * batch-split-invariance here is BYTE equality of the subtracted
+    * filter, not merely equal query answers (the spec pins the bytes) —
+    * the strongest invariance any twin in this file can claim. The
+    * stored filter is never touched at stream time; decrements fold in
+    * at serve or by compaction. */
   def startStreamingCbloomDeletes(docStream: DataFrame, decPath: String,
-                                  checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.functions.CountingBloom.register(batch.sparkSession)
-          batch.select(graft.functions.TextFunctions
-              .bagFingerprint("text").as("fp"))
-            .agg(org.apache.spark.sql.functions.expr("cbloom_build(fp)")
-              .as("dsk"))
-            .write.mode("overwrite")
-            .parquet(s"$decPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                  checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      graft.functions.CountingBloom.register(batch.sparkSession)
+      BatchSink.land(batch
+        .select(graft.functions.TextFunctions.bagFingerprint("text").as("fp"))
+        .agg(expr("cbloom_build(fp)").as("dsk")), decPath, batchId)
+    }
 
   /** Streaming WITHIN-document repetition cut — the stream-time twin of
     * q184. The operator is per-document (a doc's cut depends only on
     * its own grams), so unlike the other twins it needs NO at-rest
     * state at all: each arriving micro-batch is cut on its own and the
-    * cleaned docs land under `clean/batch_run=N` with idempotent
-    * overwrite. Batch-split-invariant by construction — a doc's
-    * cleaned text is the same whichever batch carries it — which makes
-    * this the cheapest pass to push to the ingest edge: template spam
-    * shrinks to one period before it ever reaches the archive. */
+    * cleaned docs land under `clean/batch_run=N`. Batch-split-invariant
+    * by construction — a doc's cleaned text is the same whichever batch
+    * carries it — which makes this the cheapest pass to push to the
+    * ingest edge: template spam shrinks to one period before it ever
+    * reaches the archive. */
   def startStreamingIntradocCut(docStream: DataFrame, cleanPath: String,
-                                checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.LlmQueries.intradocDedupOf(batch)
-            .write.mode("overwrite")
-            .parquet(s"$cleanPath/batch_run=$batchId")
-          // the per-batch gram frame persists for the span join;
-          // release this thread's frames between batches
-          graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.LlmQueries.intradocDedupOf(batch),
+        cleanPath, batchId)
+    }
 
   /** Streaming skip-gram training-pair generation — the stream-time
     * twin of q186 under the frozen-artifact discipline (q151's
@@ -674,30 +491,16 @@ object EventAnalytics {
     * are strictly within-document and every hash draw keys on
     * (doc, pos), the emitted stream is batch-split-invariant: any
     * partition of the docs into micro-batches lands the identical pair
-    * set under `pairs/batch_run=N` (idempotent overwrite, the
-    * multi-sink exactly-once discipline). Batch words outside the base
-    * vocab drop out — the stats never shift mid-stream. */
+    * set under `pairs/batch_run=N`. Batch words outside the base vocab
+    * drop out — the stats never shift mid-stream. */
   def startStreamingSkipgram(docStream: DataFrame, baseDocs: DataFrame,
-                             pairsPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                             pairsPath: String,
+                             checkpoint: String): StreamingQuery = {
     val pairsFor = graft.operators.LlmQueries
       .skipgramPairsWithFrozenStats(baseDocs)
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          pairsFor(batch)
-            .write.mode("overwrite")
-            .parquet(s"$pairsPath/batch_run=$batchId")
-          // the per-batch kept frame persists for the pair self-join;
-          // release THIS thread's frames so batches don't accrete cache
-          // (the frozen stats views belong to the driver thread and
-          // stay)
-          graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(pairsFor(batch), pairsPath, batchId)
+    }
   }
 
   /** Streaming BPE tokenization with a FROZEN trained vocabulary — the
@@ -708,26 +511,16 @@ object EventAnalytics {
     * micro-batch tokenizes against those artifacts alone — vocab
     * pieces by broadcast join, unseen pieces by folding the frozen
     * merges — and its per-doc token accounting lands under
-    * `batch_run=N` with idempotent overwrite. The ingest edge thus
-    * prices every document in tokens (budget accounting, packing
-    * input) the moment it arrives, with a tokenizer that cannot drift
-    * mid-stream. */
+    * `batch_run=N`. The ingest edge thus prices every document in
+    * tokens (budget accounting, packing input) the moment it arrives,
+    * with a tokenizer that cannot drift mid-stream. */
   def startStreamingBpeTokenize(docStream: DataFrame, baseDocs: DataFrame,
-                                outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                                outPath: String,
+                                checkpoint: String): StreamingQuery = {
     val tokenizeFor = graft.operators.LlmQueries.bpeTokenizeFrozen(baseDocs)
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          tokenizeFor(batch)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/batch_run=$batchId")
-          graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(tokenizeFor(batch), outPath, batchId)
+    }
   }
 
   /** Streaming WordPiece tokenization with a FROZEN vocabulary — the
@@ -735,25 +528,18 @@ object EventAnalytics {
     * (kind, piece) vocab derives ONCE from the base corpus before the
     * stream starts; each arriving micro-batch segments against it
     * alone (greedy longest-match, [UNK] for OOV words) and lands its
-    * per-doc piece accounting under `batch_run=N` with idempotent
-    * overwrite. Segmentation is per-document under a frozen vocab, so
-    * the output is batch-split-invariant by construction. */
+    * per-doc piece accounting under `batch_run=N`. Segmentation is
+    * per-document under a frozen vocab, so the output is
+    * batch-split-invariant by construction. */
   def startStreamingWordpiece(docStream: DataFrame, baseDocs: DataFrame,
-                              outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                              outPath: String,
+                              checkpoint: String): StreamingQuery = {
     val vocab = graft.core.EngineCache.persisted(
       graft.operators.LlmQueries.wordpieceVocabOf(baseDocs))
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.LlmQueries.wordpieceFrozenOf(batch, vocab)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.LlmQueries.wordpieceFrozenOf(batch, vocab),
+        outPath, batchId)
+    }
   }
 
   /** Streaming frozen-unigram segmentation — the stream-time twin of
@@ -763,52 +549,35 @@ object EventAnalytics {
     * through the [[graft.functions.UnigramViterbi]] kernel —
     * per-document pure under a frozen distribution, so outputs are
     * batch-split-invariant by construction — landing under
-    * `batch_run=N` with idempotent overwrite. Safe under foreachBatch
-    * with zero temp views: the kernel transports the bounded piece
-    * table as a plan constant. */
+    * `batch_run=N`. Safe under foreachBatch with zero temp views: the
+    * kernel transports the bounded piece table as a plan constant. */
   def startStreamingUnigram(docStream: DataFrame, baseDocs: DataFrame,
-                            outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+                            outPath: String,
+                            checkpoint: String): StreamingQuery = {
     val pieces = graft.core.EngineCache.persisted(
       graft.operators.LlmQueries.unigramPiecesOf(baseDocs))
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.LlmQueries.unigramFrozenOf(batch, pieces)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.LlmQueries.unigramFrozenOf(batch, pieces),
+        outPath, batchId)
+    }
   }
 
   /** Streaming BM25 index maintenance — the stream-time twin of q178:
     * each arriving micro-batch of (doc_id, text) rows is tokenized
     * alone and its postings (term, doc_id, tf, shard) land under
     * `postings/batch_run=N`, its doc lengths under
-    * `doclen/batch_run=N`, both with idempotent overwrite. A serve
-    * tier reading the base tables plus these partitions answers with
-    * the new docs one trigger after they arrive — no base re-tokenize
-    * anywhere (BM25's statistics decompose over disjoint doc sets). */
+    * `doclen/batch_run=N`. A serve tier reading the base tables plus
+    * these partitions answers with the new docs one trigger after they
+    * arrive — no base re-tokenize anywhere (BM25's statistics decompose
+    * over disjoint doc sets). */
   def startStreamingPostingsAppend(docStream: DataFrame, outPath: String,
-                                   checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.CorpusOps.bm25PostingsOf(batch)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/postings/batch_run=$batchId")
-          graft.operators.CorpusOps.bm25DoclenOf(batch)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/doclen/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                   checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.CorpusOps.bm25PostingsOf(batch),
+        s"$outPath/postings", batchId)
+      BatchSink.land(graft.operators.CorpusOps.bm25DoclenOf(batch),
+        s"$outPath/doclen", batchId)
+    }
 
   /** Streaming quality-DRIFT monitor — the stream-time twin of q167:
     * every arriving micro-batch of (doc_id, text) rows is scored
@@ -819,66 +588,44 @@ object EventAnalytics {
     * longer looks like the corpus). Only the batch is scanned; the
     * baseline is 10 stored rows. */
   def startStreamingQualityDrift(docStream: DataFrame, baseline: DataFrame,
-                                 outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.CorpusOps.psiOfBatch(batch, baseline)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                 outPath: String,
+                                 checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.CorpusOps.psiOfBatch(batch, baseline),
+        outPath, batchId)
+    }
 
   /** Streaming incremental SUBSTRING dedup — the stream-time twin of
     * q171: each arriving micro-batch of (doc_id, text) rows is the only
     * text tokenized; its positional gram hashes semi-join the AT-REST
     * corpus gram set (built once, [[graft.operators.LlmQueries
     * .corpusGramsAtRest]]) and the matched spans merge into the q162
-    * profile for just that batch, landing under `batch_run=N` with
-    * idempotent overwrite. Per-doc output is independent of batch
-    * splits (the profile only consults the stored set), so replay and
-    * re-batching cannot change a row. */
+    * profile for just that batch, landing under `batch_run=N`. Per-doc
+    * output is independent of batch splits (the profile only consults
+    * the stored set), so replay and re-batching cannot change a row. */
   def startStreamingSpanDedup(docStream: DataFrame, corpusGrams: DataFrame,
-                              outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.LlmQueries.spanIncrementOf(batch, corpusGrams)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                              outPath: String,
+                              checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(
+        graft.operators.LlmQueries.spanIncrementOf(batch, corpusGrams),
+        outPath, batchId)
+    }
 
   /** Streaming quality scoring with a FROZEN trained classifier — the
     * stream-time twin of q163: the model (four doubles from
     * [[graft.operators.StatsOps.trainedClsWeights]], trained once on the
     * at-rest corpus) is closed over and applied to each arriving
-    * micro-batch; scores land under `batch_run=N` with idempotent
-    * overwrite (exactly-once under foreachBatch replay). Only the batch
-    * is ever scanned — train-once / score-forever, the q151
+    * micro-batch; scores land under `batch_run=N`. Only the batch is
+    * ever scanned — train-once / score-forever, the q151
     * frozen-codebook discipline for the text-quality leg. */
   def startStreamingQualityScore(docStream: DataFrame, weights: Array[Double],
-                                 outPath: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.StatsOps.scoreWithWeights(batch, weights)
-            .write.mode("overwrite")
-            .parquet(s"$outPath/batch_run=$batchId")
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+                                 outPath: String,
+                                 checkpoint: String): StreamingQuery =
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      BatchSink.land(graft.operators.StatsOps.scoreWithWeights(batch, weights),
+        outPath, batchId)
+    }
 
   // ---- custom stateful sessionization (flatMapGroupsWithState) ----
 
@@ -988,17 +735,17 @@ object EventAnalytics {
       // session would silently flip every later overwrite write on this
       // SparkSession to dynamic mode
       batch.persist()
-      batch.withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(rawPath)
-      batch.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("batch_id", lit(batchId))
-        .write.partitionBy("batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(aggPath)
-      batch.unpersist()
-      ()
+      try {
+        batch.withColumn("batch_id", lit(batchId))
+          .write.partitionBy("batch_id")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").parquet(rawPath)
+        batch.groupBy(col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .withColumn("batch_id", lit(batchId))
+          .write.partitionBy("batch_id")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode("overwrite").parquet(aggPath)
+      } finally batch.unpersist() // also when a write throws
     }
 }

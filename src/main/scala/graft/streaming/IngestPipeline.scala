@@ -27,11 +27,10 @@ import org.apache.spark.sql.functions._
   * gram/signature tables is 1 GB or 100 TB. Per-doc outputs depend only
   * on the doc and frozen state, so the pipeline is batch-split-invariant
   * by construction, and a checkpoint-replayed batch REPLACES its own
-  * partitions before reading them back — exactly-once end to end with a
-  * single checkpoint directory ([[Archive.startMultiSink]]'s discipline,
-  * applied to a seven-sink DAG). StreamingAnalyticsSpec proves a
-  * two-micro-batch run (with a mid-run restart replay) equals the
-  * one-shot batch chain.
+  * partitions before reading them back ([[BatchSink]]'s exactly-once
+  * discipline, applied to a seven-sink DAG). StreamingAnalyticsSpec
+  * proves a two-micro-batch run (with a mid-run restart replay) equals
+  * the one-shot batch chain.
   */
 object IngestPipeline {
 
@@ -118,20 +117,12 @@ object IngestPipeline {
   def start(docStream: DataFrame, corpusGrams: DataFrame,
             corpusSig: DataFrame, cfg: Config, outPath: String,
             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          try stagesOf(batch, corpusGrams, corpusSig, cfg) { (df, stage) =>
-            val dir = s"$outPath/$stage/batch_run=$batchId"
-            df.write.mode("overwrite").parquet(dir)
-            // the stage's own schema: no footer-inference job per read-back
-            batch.sparkSession.read.schema(df.schema).parquet(dir)
-          }
-          // release THIS thread's persisted frames, also when a write throws
-          finally graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      stagesOf(batch, corpusGrams, corpusSig, cfg) { (df, stage) =>
+        BatchSink.land(df, s"$outPath/$stage", batchId)
+        // the stage's own schema: no footer-inference job per read-back
+        batch.sparkSession.read.schema(df.schema)
+          .parquet(s"$outPath/$stage/batch_run=$batchId")
       }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    }
 }

@@ -36,10 +36,9 @@ import org.apache.spark.sql.functions._
   * whether the stores behind it hold 1 GB or 100 TB. Every artifact is
   * a commutative monoid under its serve-side merge (set union, count
   * sum, counter sum), and a document is an atomic row, so the pipeline
-  * is batch-split-invariant by construction; idempotent batch_run
-  * overwrite makes a checkpoint-replayed batch replace its own
-  * partitions — exactly-once across all six sinks with a single
-  * checkpoint directory. StreamingAnalyticsSpec proves a two-batch run
+  * is batch-split-invariant by construction; [[BatchSink]] makes it
+  * exactly-once across all six sinks with a single checkpoint
+  * directory. StreamingAnalyticsSpec proves a two-batch run
   * (with a mid-run restart replay) serves every store rebuild-equal:
   * the pair table by anti-join, the gram set by decrement fold, the
   * counting bloom / CMS / DDSketch by byte-equal linear subtraction,
@@ -96,24 +95,11 @@ object TakedownPipeline {
     * batch_run-partitioned sinks. */
   def start(docStream: DataFrame, outPath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          try {
-            val a = artifactsOf(batch)
-            def land(df: DataFrame, stage: String): Unit =
-              df.write.mode("overwrite")
-                .parquet(s"$outPath/$stage/batch_run=$batchId")
-            land(a.ids, "ids")
-            land(a.gramDec, "gramdec")
-            land(a.cbloomDec, "cbloomdec")
-            land(a.cmsDec, "cmsdec")
-            land(a.ddqDec, "ddqdec")
-            land(a.report, "report")
-          } finally graft.core.EngineCache.releaseOwned()
-        }
-        () // Unit, not DataFrameWriter — keep the VoidFunction2 overload
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
+      val a = artifactsOf(batch)
+      Seq("ids" -> a.ids, "gramdec" -> a.gramDec, "cbloomdec" -> a.cbloomDec,
+        "cmsdec" -> a.cmsDec, "ddqdec" -> a.ddqDec, "report" -> a.report)
+        .foreach { case (stage, df) =>
+          BatchSink.land(df, s"$outPath/$stage", batchId) }
+    }
 }

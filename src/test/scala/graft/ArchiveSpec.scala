@@ -202,13 +202,21 @@ class ArchiveSpec extends SparkSpec {
     source.addData(msg("orders", 0, 0), msg("orders", 0, 1), msg("clicks", 0, 0))
     val q1 = Archive.startMultiSink(source.toDF(), cfg, idx)
     q1.processAllAvailable()
+    // §2.1.5: an empty micro-batch (batch 1) writes nothing to either sink
+    source.addData()
+    q1.processAllAvailable()
     q1.stop()
+    assert(!new java.io.File(s"$out/batch_id=1").exists() &&
+      !new java.io.File(s"$idx/batch_id=1").exists(),
+      "an empty batch must land no directory")
 
     // restart from the same checkpoint; only the new data may appear
     source.addData(msg("orders", 0, 2))
     val q2 = Archive.startMultiSink(source.toDF(), cfg, idx)
     q2.processAllAvailable()
     q2.stop()
+    assert(new java.io.File(s"$out/batch_id=2").exists(),
+      "the restarted run's data is batch 2, after the empty batch 1")
 
     val archived = Archive.readArchive(spark, out)
     assert(archived.count() === 4)

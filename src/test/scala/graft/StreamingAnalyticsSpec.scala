@@ -921,13 +921,21 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val batchRows = Seq((50L, "abab ababab ba"), (51L, "ab ab abab"))
     val dir = java.nio.file.Files.createTempDirectory("graft-swp").toString
     val source = MemoryStream[(Long, String)]
+    graft.core.EngineCache.releaseAll() // no engine frames from earlier tests
     val q = EventAnalytics.startStreamingWordpiece(
       source.toDF().toDF("doc_id", "text"), base, s"$dir/out", s"$dir/ckpt")
+    val cachedAtStart = spark.sparkContext.getPersistentRDDs.size
     source.addData(batchRows.take(1).toIndexedSeq: _*)
     q.processAllAvailable()
     source.addData(batchRows.drop(1).toIndexedSeq: _*)
     q.processAllAvailable()
     q.stop()
+    // the frozen vocab is this thread's and is cached lazily (the first
+    // batch materializes it); once it is released, nothing a micro-batch
+    // persisted may be left
+    graft.core.EngineCache.releaseOwned()
+    assert(spark.sparkContext.getPersistentRDDs.size === cachedAtStart,
+      "micro-batches must not leave persisted frames behind")
     def key(df: org.apache.spark.sql.DataFrame) = df
       .select("doc_id", "n_words", "n_pieces", "n_unk", "ck").collect()
       .map(r => r.getLong(0) ->

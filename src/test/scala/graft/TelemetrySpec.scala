@@ -209,5 +209,9 @@ class TelemetrySpec extends SparkSpec {
     ObjectStore.configureAzure(spark, "prodacct", "base64key==")
     assert(spark.sparkContext.hadoopConfiguration
       .get("fs.azure.account.key.prodacct.dfs.core.windows.net") === "base64key==")
+    ObjectStore.configureS3(spark, "AKIDEXAMPLE", "s3secret")
+    val hc = spark.sparkContext.hadoopConfiguration
+    assert(hc.get("fs.s3a.access.key") === "AKIDEXAMPLE")
+    assert(hc.get("fs.s3a.secret.key") === "s3secret")
   }
 }
