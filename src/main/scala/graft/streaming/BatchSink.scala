@@ -24,6 +24,27 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    is [[graft.core.EngineCache.releaseOwned]] on the stream thread, so
   *    state the caller persisted before starting the query (a frozen
   *    vocab, a corpus table) stays cached for every batch.
+  *
+  * A body that lands several independent frames per batch lands them
+  * with [[landAll]], which writes them at the same time:
+  *
+  *  - each frame of two or more gets its own lander thread, started by
+  *    the calling (stream) thread, so it inherits the batch's Spark local
+  *    properties. One of them is the query's job group (its run id),
+  *    which `StreamingQuery.stop()` cancels, so a stop reaches every
+  *    lander's jobs. There is no pool (a pooled thread keeps the job
+  *    group of the query that created it) and no thread-count setting:
+  *    a call starts one thread per frame it is given;
+  *  - it returns only after every lander has finished. A failure is
+  *    rethrown after that join: the first one, with any others attached
+  *    as suppressed. An interrupt of the calling thread (a stop) is also
+  *    held until the join ends, then rethrown ahead of the failures the
+  *    cancelled writes report. The body's `finally` release therefore
+  *    never unpersists a cache a sibling write is still scanning, which
+  *    can yield an empty, not a recomputed, scan;
+  *  - frames are BUILT on the calling thread and the landers only write
+  *    them, so the release above, scoped to that thread, finds every
+  *    frame.
   */
 object BatchSink {
 
@@ -43,5 +64,43 @@ object BatchSink {
 
   /** Land `df` as batch `batchId` of the table at `dir`. */
   def land(df: DataFrame, dir: String, batchId: Long): Unit =
+    landAll(batchId)(Seq(df -> dir))
+
+  /** Name prefix of the threads [[landAll]] starts. */
+  private[graft] val LanderPrefix = "batch-sink-lander"
+
+  /** Land each independent `(frame, dir)` as batch `batchId` of its
+    * table, all at once; returns when every write has finished. A single
+    * frame has nothing to overlap with and lands on the calling thread. */
+  def landAll(batchId: Long)(frames: Seq[(DataFrame, String)]): Unit =
+    frames match {
+      case Seq((df, dir)) => write(df, dir, batchId)
+      case _ =>
+        val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+        val landers = frames.zipWithIndex.map { case ((df, dir), i) =>
+          val t = new Thread(() =>
+            try write(df, dir, batchId)
+            catch { case e: Throwable => failures.add(e) },
+            s"$LanderPrefix-$batchId-$i")
+          t.setDaemon(true)
+          t.start()
+          t
+        }
+        var interrupt: Option[InterruptedException] = None
+        landers.foreach { t =>
+          while (t.isAlive)
+            try t.join()
+            catch { case e: InterruptedException => interrupt = interrupt.orElse(Some(e)) }
+        }
+        // a stop surfaces as the interrupt it is, not as the cancelled
+        // writes it caused
+        val errors = interrupt.toSeq ++ failures.toArray(Array.empty[Throwable])
+        errors.headOption.foreach { first =>
+          errors.tail.foreach(first.addSuppressed)
+          throw first
+        }
+    }
+
+  private def write(df: DataFrame, dir: String, batchId: Long): Unit =
     df.write.mode("overwrite").parquet(s"$dir/batch_run=$batchId")
 }

@@ -153,13 +153,18 @@ object EventAnalytics {
       val batchSig = graft.llm.Dedup.signatureFrame(
         batch, "doc_id", "text", shingleN, numHashes)
         .transform(graft.core.EngineCache.persisted)
+      // the first batch finds no sigs directory yet; later ones read it
+      // with the landed schema, so no footer-inference job runs and a
+      // directory holding only an interrupted first write reads as empty
+      val sigsDir = new org.apache.hadoop.fs.Path(s"$outPath/sigs")
       val prior =
-        try Some(spark.read.parquet(s"$outPath/sigs")
+        if (!sigsDir.getFileSystem(spark.sessionState.newHadoopConf())
+              .exists(sigsDir)) None
+        else Some(spark.read
+          .schema(batchSig.schema.add("batch_run", "long"))
+          .parquet(sigsDir.toString)
           .filter(col("batch_run") < batchId)
           .select("id", "hs", "sig"))
-        catch { // first batch: no sigs directory yet
-          case _: org.apache.spark.sql.AnalysisException => None
-        }
       val state = prior.fold(corpusSig.select("id", "hs", "sig"))(
         corpusSig.select("id", "hs", "sig").unionByName(_))
       val cross = graft.llm.Dedup.incrementalLshPairs(
@@ -168,8 +173,11 @@ object EventAnalytics {
           col("corpus_id").as("id_b"), col("jaccard"))
       val within = graft.llm.Dedup.minhashLshPairs(
         batch, "doc_id", "text", shingleN, numHashes, bands, tau)
-      BatchSink.land(cross.unionByName(within), s"$outPath/hits", batchId)
-      BatchSink.land(batchSig, s"$outPath/sigs", batchId)
+      // hits never reads this batch's own sigs (batch_run < id), so
+      // the two land together
+      BatchSink.landAll(batchId)(Seq(
+        cross.unionByName(within) -> s"$outPath/hits",
+        batchSig -> s"$outPath/sigs"))
     }
 
   /** Streaming IVF-PQ index maintenance — the stream-time twin of
@@ -573,10 +581,9 @@ object EventAnalytics {
   def startStreamingPostingsAppend(docStream: DataFrame, outPath: String,
                                    checkpoint: String): StreamingQuery =
     BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
-      BatchSink.land(graft.operators.CorpusOps.bm25PostingsOf(batch),
-        s"$outPath/postings", batchId)
-      BatchSink.land(graft.operators.CorpusOps.bm25DoclenOf(batch),
-        s"$outPath/doclen", batchId)
+      BatchSink.landAll(batchId)(Seq(
+        graft.operators.CorpusOps.bm25PostingsOf(batch) -> s"$outPath/postings",
+        graft.operators.CorpusOps.bm25DoclenOf(batch) -> s"$outPath/doclen"))
     }
 
   /** Streaming quality-DRIFT monitor — the stream-time twin of q167:

@@ -92,14 +92,15 @@ object TakedownPipeline {
   }
 
   /** Start the composed takedown: one stream, one checkpoint, six
-    * batch_run-partitioned sinks. */
+    * batch_run-partitioned sinks, landed together (the artifacts are
+    * independent of each other). */
   def start(docStream: DataFrame, outPath: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
     BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
       val a = artifactsOf(batch)
-      Seq("ids" -> a.ids, "gramdec" -> a.gramDec, "cbloomdec" -> a.cbloomDec,
-        "cmsdec" -> a.cmsDec, "ddqdec" -> a.ddqDec, "report" -> a.report)
-        .foreach { case (stage, df) =>
-          BatchSink.land(df, s"$outPath/$stage", batchId) }
+      BatchSink.landAll(batchId)(
+        Seq("ids" -> a.ids, "gramdec" -> a.gramDec, "cbloomdec" -> a.cbloomDec,
+          "cmsdec" -> a.cmsDec, "ddqdec" -> a.ddqDec, "report" -> a.report)
+          .map { case (stage, df) => df -> s"$outPath/$stage" })
     }
 }
