@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions._
 import graft.core.Determinism.xhashSql
@@ -799,169 +799,72 @@ object Dedup {
 
   /** Connected components over a dup-pair graph (id_a, id_b) — the step
     * that turns pairwise near-dup hits into dedup CLUSTERS (keep
-    * min-id per component, drop the rest). Min-label propagation to a
-    * fixpoint: each iteration every node takes the min of its own and its
-    * neighbors' labels — converges in O(component diameter) rounds, and
-    * dup clusters are shallow (near-cliques), so 2-3 rounds in practice.
-    * All driver-side control flow is one `isEmpty` probe per round; the
-    * data never leaves the cluster. At extreme scale the same loop with
-    * the large-star/small-star transforms (Kiveris et al., "Connected
-    * Components in MapReduce") halves the round count; the per-round plan
-    * here (shuffle join on id + min-agg) is already the right shape.
-    * Output: (doc_id, component = min doc_id reachable).
-    *
-    * Adaptive small-graph path: the dup-pair graph is orders of magnitude
-    * smaller than the corpus (it is the OUTPUT of thresholded LSH), and a
-    * multi-round distributed fixpoint on a few thousand edges is pure
-    * job-scheduling latency. Below `driverEdgeLimit` edges the id-pairs
-    * are streamed (`toLocalIterator` — one partition buffered at a time,
-    * never an Array[Row] of the whole edge list) into two primitive
-    * long arrays and solved with index-based path-compressed union-find
-    * — the same size-gated strategy switch Spark itself makes when it
-    * broadcasts a small join side. Measured driver heap at the default
-    * 2M-edge gate: 32 MB for the edge arrays (16 B/edge) plus ≤ 80 MB
-    * for the sorted-id, parent, and component arrays at the 4M-node
-    * worst case (20 B/node) — transient, all reclaimed after the result
-    * frame is built from a broadcast of the two final arrays. The
-    * distributed loop remains the over-limit path and the two are
-    * cross-validated in DedupSpec (`driverEdgeLimit = 0` forces the
-    * loop on identical input). */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          driverEdgeLimit: Long = 2000000L): DataFrame = {
-    val spark = pairs.sparkSession
+    * min-id per component, drop the rest). Output: (doc_id, component =
+    * min doc_id reachable). Up to [[graft.core.DriverGraph.EdgeLimit]]
+    * edges the pairs are solved on the driver with index-based
+    * path-compressed union-find; above it [[connectedComponentsStar]]
+    * runs, and the two are cross-validated in DedupSpec. */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val idPairs = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .transform(graft.core.EngineCache.persisted)
-    val nEdges = idPairs.count()
-    if (nEdges <= driverEdgeLimit) {
-      val n = nEdges.toInt
-      val src = new Array[Long](n)
-      val dst = new Array[Long](n)
-      val it = idPairs.toLocalIterator()
-      var i = 0
-      while (it.hasNext) {
-        val r = it.next(); src(i) = r.getLong(0); dst(i) = r.getLong(1); i += 1
-      }
-      idPairs.unpersist()
-      // dense relabel: sorted distinct endpoint ids -> [0, m)
-      val all = new Array[Long](2 * n)
-      System.arraycopy(src, 0, all, 0, n)
-      System.arraycopy(dst, 0, all, n, n)
-      java.util.Arrays.sort(all)
-      var m = 0
-      var j = 0
-      while (j < all.length) {
-        if (m == 0 || all(j) != all(m - 1)) { all(m) = all(j); m += 1 }
-        j += 1
-      }
-      val ids = java.util.Arrays.copyOf(all, m)
-      val parent = Array.tabulate(m)(identity)
-      def find(x: Int): Int = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x // path compression
-        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-        r
-      }
-      var e = 0
-      while (e < n) {
-        // ids are sorted, so min root index == min root id: union-by-min
-        // keeps the contract "component = MIN reachable id"
-        val ra = find(java.util.Arrays.binarySearch(ids, src(e)))
-        val rb = find(java.util.Arrays.binarySearch(ids, dst(e)))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-        e += 1
-      }
-      val comp = Array.tabulate(m)(i => ids(find(i)))
-      // result frame from broadcast arrays — no driver-side Seq of rows
-      val bIds = spark.sparkContext.broadcast(ids)
-      val bComp = spark.sparkContext.broadcast(comp)
-      val sq = spark
-      import sq.implicits._
-      return spark.range(0, m.toLong)
-        .map(i => (bIds.value(i.toInt), bComp.value(i.toInt)))
-        .toDF("doc_id", "component")
+    graft.core.DriverGraph.load(idPairs) match {
+      case None => connectedComponentsStar(idPairs)
+      case Some(g) =>
+        val parent = Array.tabulate(g.ids.length)(identity)
+        def find(x: Int): Int = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x // path compression
+          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+          r
+        }
+        var e = 0
+        while (e < g.src.length) {
+          // ids are sorted, so min root index == min root id: union-by-min
+          // keeps the contract "component = MIN reachable id"
+          val ra = find(g.src(e))
+          val rb = find(g.dst(e))
+          if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+          e += 1
+        }
+        g.frame(pairs.sparkSession, Array.tabulate(g.ids.length)(i => g.ids(find(i))),
+          "doc_id", "component")
     }
-    idPairs.unpersist()
-    val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .transform(graft.core.EngineCache.persisted)
-    // Fused first round: with label(id)=id the first propagation is just
-    // least(src, min(dst)) — one groupBy over the (symmetrized) edge list
-    // instead of distinct + join + agg + join. Every node appears as src,
-    // so this seeds a complete label frame one round ahead.
-    var labels = edges.groupBy(col("src")).agg(min(col("dst")).as("mind"))
-      .select(col("src").as("id"), least(col("src"), col("mind")).as("label"))
-    var cached: Option[DataFrame] = None
-    var iter = 1
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val neighborMin = edges
-        .join(labels, edges("dst") === labels("id"))
-        .groupBy(col("src")).agg(min(col("label")).as("nlabel"))
-      // min-propagation only ever lowers a label, so "changed" is just
-      // nlabel < label — computed inline and read back from the cache, no
-      // extra compare-join per round
-      val next = labels
-        .join(neighborMin, labels("id") === neighborMin("src"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"),
-          (coalesce(col("nlabel"), col("label")) < col("label")).as("changed"))
-        .transform(graft.core.EngineCache.persisted)
-      converged = next.filter(col("changed")).isEmpty
-      cached.foreach(_.unpersist()) // next is materialized; free last round
-      cached = Some(next)
-      labels = next.select(col("id"), col("label"))
-      iter += 1
-    }
-    // a silent partial result would under-merge dup clusters (keep-min
-    // dedup then keeps extra copies) — refuse instead
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter rounds — component " +
-        "diameter exceeds maxIter; raise it (rounds = min-node eccentricity)")
-    edges.unpersist() // final labels read from the still-cached last round
-    labels.select(col("id").as("doc_id"), col("label").as("component"))
   }
 
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond", SoCC'14) — the
-    * high-diameter scale path next to [[connectedComponents]]'s min-label
-    * propagation. Label propagation needs O(diameter) rounds (fine for
-    * near-clique dup clusters, fatal for chain-shaped graphs: link
-    * farms, citation chains); star rounds contract whole subtrees at
-    * once and converge in O(log² n) — in practice log — rounds.
+    * distributed path of [[connectedComponents]]. Min-label propagation
+    * needs O(diameter) rounds (fine for near-clique dup clusters, fatal
+    * for chain-shaped graphs: link farms, citation chains); star rounds
+    * contract whole subtrees at once and converge in O(log² n) — in
+    * practice log — rounds.
     *
     *  - large-star: every node u links its LARGER neighbors to the
     *    minimum of its neighborhood (incl. itself);
     *  - small-star: every node links its smaller-or-equal neighborhood
     *    to that neighborhood's minimum.
-    * Both are one groupBy(min) + one join per round — the same shuffle
-    * shape as a label-prop round — and edges stay canonical (u > v), so
-    * the working set never exceeds the (shrinking) edge list. Convergence
-    * = the canonical edge set reaches a fixpoint, detected by an exact
-    * (count, xor-of-hashes) signature — one tiny action per round; a
-    * stable signature on a star graph IS the fixpoint (stars map to
-    * themselves under both transforms). Output matches
-    * [[connectedComponents]]: (doc_id, component = min reachable id). */
-  def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
+    * Both are one groupBy(min) + one join per round, and edges stay
+    * canonical (u > v), so the working set never exceeds the
+    * (shrinking) edge list. Convergence = the canonical edge set reaches
+    * a fixpoint, detected by an exact (count, sum-of-hashes) signature
+    * read off each round's [[graft.core.EngineCache.cut]]; a stable
+    * signature on a star graph IS the fixpoint (stars map to themselves
+    * under both transforms). A self-pair (x, x) keeps x as its own
+    * component, as on the driver path. */
+  private[graft] def connectedComponentsStar(pairs: DataFrame,
+                                             maxIter: Int = 30): DataFrame = {
     def canon(e: DataFrame): DataFrame = e
       .select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v"))
       .filter(col("u") =!= col("v")).distinct()
-    def signature(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(sum(expr("hash(u, v)").cast("long")), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    // localCheckpoint per round: each round's plan embeds the previous
-    // round's SEVERAL times (sym union + two joins), so un-truncated
-    // lineage grows exponentially with rounds and OOMs the driver on
-    // plan trees alone. Checkpointing pins the round's result and resets
-    // the plan to a leaf — the iterative-algorithm idiom (on a real
-    // cluster, `spark.sparkContext.setCheckpointDir` + `checkpoint()`
-    // makes the cut fault-tolerant too).
-    var edges = canon(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
-      .localCheckpoint(true)
-    var sig = signature(edges)
+    def cutSigned(e: DataFrame): (DataFrame, Row) = graft.core.EngineCache.cut(e,
+      count(lit(1)), coalesce(sum(expr("hash(u, v)").cast("long")), lit(0L)))
+    val (start, s0) = cutSigned(pairs
+      .select(greatest(col("id_a"), col("id_b")).as("u"),
+        least(col("id_a"), col("id_b")).as("v"))
+      .distinct())
+    var edges = start
+    var sig = s0
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -976,12 +879,10 @@ object Dedup {
       // already keys each edge by its larger endpoint)
       val smallMin = ls.groupBy("u").agg(min(col("v")).as("m"))
       val joined = ls.join(smallMin, "u")
-      val next = canon(
+      val (next, nextSig) = cutSigned(canon(
         joined.filter(col("v") =!= col("m"))
           .select(col("v").as("u"), col("m").as("v"))
-          .unionByName(joined.select(col("u"), col("m").as("v"))))
-        .localCheckpoint(true)
-      val nextSig = signature(next)
+          .unionByName(joined.select(col("u"), col("m").as("v")))))
       edges = next
       converged = nextSig == sig
       sig = nextSig
@@ -989,10 +890,13 @@ object Dedup {
     }
     if (!converged) throw new IllegalStateException(
       s"connectedComponentsStar did not converge in $maxIter rounds")
-    // fixpoint is a star forest: every edge is (member, root)
+    // fixpoint is a star forest: every edge is (member, root); a node's
+    // self-pair only ever names the node itself, never below its root
     edges.select(col("u").as("doc_id"), col("v").as("component"))
       .unionByName(edges.select(col("v").as("doc_id"), col("v").as("component")))
-      .distinct()
+      .unionByName(start.filter(col("u") === col("v"))
+        .select(col("u").as("doc_id"), col("u").as("component")))
+      .groupBy("doc_id").agg(min(col("component")).as("component"))
   }
 
   /** DuckDB oracle for [[connectedComponents]] over [[minhashLshPairs]]:

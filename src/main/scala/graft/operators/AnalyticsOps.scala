@@ -304,8 +304,8 @@ object AnalyticsOps {
     * from the given seed nodes; returns (node, hops) for every node
     * within `iters` hops, plus the number of expansion rounds actually
     * run: the loop stops as soon as a round reaches no new node
-    * (frontier empty — counted on the already-materialized state, one
-    * driver scalar per round), so `iters` is a CAP, not a schedule —
+    * (frontier empty — read off the round's cut), so `iters` is a CAP,
+    * not a schedule —
     * a 20-cap BFS on a diameter-3 graph runs 4 rounds. Factored out so
     * specs can drive it on a hand-built graph. */
   def bfsFromWithRounds(edges: DataFrame, seeds: DataFrame,
@@ -318,18 +318,19 @@ object AnalyticsOps {
     var i = 1
     var rounds = 0
     var frontier = 1L
+    var distN = -1L // |dist| once read off a cut; gates the broadcast
     while (i <= iters && frontier > 0) {
-      val next = dist.filter(col("d") === i - 1).alias("f")
+      // a cut's plan-time size is an estimate, so the frontier side
+      // broadcasts by its state's known row count, not by statistics
+      val next = ScaleOps.bcastIfSmall(dist.filter(col("d") === i - 1), distN)
+        .alias("f")
         .join(e.alias("g"), col("f.node") === col("g.src"))
         .select(col("g.dst").as("node"), lit(i).as("d"))
-      val merged = dist.union(next).groupBy("node")
-        .agg(min(col("d")).as("d"))
-        .transform(graft.core.EngineCache.persisted)
-      // ONE action both materializes the round's state (lineage cut) and
-      // reads the frontier size off it — not a count() pair
-      frontier = merged
-        .agg(count(when(col("d") === i, 1)).as("f"))
-        .first().getLong(0)
+      val (merged, r) = graft.core.EngineCache.cut(
+        dist.union(next).groupBy("node").agg(min(col("d")).as("d")),
+        count(when(col("d") === i, 1)), count(lit(1)))
+      frontier = r.getLong(0)
+      distN = r.getLong(1)
       dist = merged
       rounds = i
       i += 1

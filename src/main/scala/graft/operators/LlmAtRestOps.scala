@@ -135,7 +135,8 @@ private[graft] trait LlmAtRestOps { this: LlmQueries.type =>
     var r = nodes.selectExpr("node", "deg", "is_seed",
       s"floor(is_seed * 1e12 / CAST($nSeeds AS DOUBLE) + 0.5) / 1e12 AS r")
     for (i <- 1 to TaintIters) {
-      val contrib = e.join(r, e("src") === r("node"))
+      val rb = ScaleOps.bcastIfSmall(r, nNodes) // q104's rank-side broadcast
+      val contrib = e.join(rb, e("src") === rb("node"))
         .select(col("dst").as("node"),
           expr("CAST(floor(r / CAST(deg AS DOUBLE) * 1e12 + 0.5) " +
             "AS DECIMAL(38,0))").as("c"))
@@ -149,10 +150,7 @@ private[graft] trait LlmAtRestOps { this: LlmQueries.type =>
           s"floor(($a * is_seed / CAST($nSeeds AS DOUBLE) + " +
             s"(1.0 - $a) * (CAST(coalesce(sc, 0) AS DOUBLE) / 1e12)) " +
             "* 1e12 + 0.5) / 1e12 AS r")
-      if (i < TaintIters) {
-        r = r.transform(graft.core.EngineCache.persisted)
-        r.count() // q104's per-round materialization barrier
-      }
+      if (i < TaintIters) r = graft.core.EngineCache.cut(r)._1
     }
     r.filter(col("r") > 0)
       .select(col("node").as("doc_id"), col("is_seed"),
@@ -459,9 +457,8 @@ private[graft] trait LlmAtRestOps { this: LlmQueries.type =>
   }
 
   /** Same clusters via alternating large-star/small-star contraction —
-    * the high-diameter scale path (chains/link-farms where label
-    * propagation needs O(diameter) rounds). Same oracle as q51: both
-    * algorithms must land on identical components. */
+    * q51's distributed path, run at any size. Same oracle as q51: both
+    * paths must land on identical components. */
   def dedupComponentsStar(spark: SparkSession, dir: String): DataFrame =
     Dedup.connectedComponentsStar(lshPairsAtRest(spark, dir))
       .orderBy("doc_id")

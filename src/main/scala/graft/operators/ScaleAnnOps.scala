@@ -2731,25 +2731,18 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   /** The bounded walk over an arbitrary (vectors, graph) pair — the
     * spec entry. Probes are `probeWhere` rows of `vectors`.
     *
-    * r13 optimization (guide §7.3 "very large plans", §5 localCheckpoint):
-    * the walk's per-hop state and the graph side are EAGER
-    * LOCALCHECKPOINT barriers, not plain persists. Two reasons, both
-    * measured at sf0.1: (1) when the graph argument is a maintenance
-    * verb's un-materialized repair DAG (q264/q265/q279), every hop's
-    * plan used to re-embed that whole tree — analysis/optimization of
-    * the chained hops went exponential in hop count (each hop
-    * references `visited` twice), and the walk alone measured 39.6 s;
-    * with the lineage truncated it is 6.0 s, output identical
-    * (mismatches 0). (2) persists only cache DATA — the planner still
-    * walks the full logical tree per action; a checkpoint replaces the
-    * subtree with an RDD leaf, so the 4-hop loop plans in milliseconds.
-    * Checkpoint blocks are freed by the same per-query
-    * getPersistentRDDs cleanup the bench/Verify already run. */
+    * r13 optimization: the walk's per-hop state, the probes and the
+    * graph side are cuts ([[graft.core.EngineCache.cut]]), not plain
+    * persists. When the graph argument is a maintenance verb's
+    * un-materialized repair DAG (q264/q265/q279), every hop's plan used
+    * to re-embed that whole tree, and each hop references `visited`
+    * twice: the walk alone measured 39.6 s at sf0.1, and 6.0 s with the
+    * lineage cut, output identical (mismatches 0). */
   private[graft] def nswSearchOf(vectors: DataFrame, graph: DataFrame,
                                  probeWhere: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     def P(df: DataFrame): DataFrame = graft.core.EngineCache.persisted(df)
-    def B(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    def B(df: DataFrame): DataFrame = graft.core.EngineCache.cut(df)._1
     graft.functions.GraftFunctions.register(vectors.sparkSession)
     val v = P(vectors.select(col("vec_id"), col("embedding")))
     val probes = B(v.filter(probeWhere)
@@ -2820,7 +2813,7 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     // MATERIALIZED (DuckDB): each vis_h is referenced by BOTH beam_{h+1}
     // and vis_{h+1}, so inlined CTEs re-expand the whole walk 2^hops
     // times — the DuckDB twin of the Spark lineage blowup the r13
-    // localCheckpoint barriers removed. Pinning sv/cand/g/vis_h cuts the
+    // lineage cuts removed. Pinning sv/cand/g/vis_h cuts the
     // q264 oracle 137 s → seconds with row-identical output (verified).
     s"""sv AS MATERIALIZED (
       SELECT vec_id, embedding, ${graft.llm.Similarity.srpSigSql(

@@ -8,7 +8,7 @@ import graft.functions.TextFunctions._
 /** Temporal/graph/sparse-vector block, split from [[ScaleOps]] (its
   * `queries`/`oracles` maps remain the public seam): SCD-2 intervals
   * (q102), TF-IDF sparse cosine pairs (q103), PageRank with per-round
-  * persist barriers (q104) and HITS (q149). */
+  * cuts (q104) and HITS (q149). */
 private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
 
   /** Broadcast an O(|V|)-row iteration-state frame ONLY when it is
@@ -267,7 +267,10 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     var r = deg.select(col("node"), col("deg"),
       expr(s"floor(1e12 / CAST($n AS DOUBLE) + 0.5) / 1e12").as("r"))
     for (i <- 1 to PrIters) {
-      val contrib = e.join(r, e("src") === r("node"))
+      // a cut's plan-time size is an estimate, so the O(|V|) rank side
+      // broadcasts by its known row count, not by statistics
+      val rb = bcastIfSmall(r, n)
+      val contrib = e.join(rb, e("src") === rb("node"))
         .select(col("dst").as("node"),
           expr("CAST(floor(r / CAST(deg AS DOUBLE) * 1e12 + 0.5) " +
             "AS DECIMAL(38,0))").as("c"))
@@ -281,15 +284,11 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
           expr(s"floor((((1.0 - $d) / CAST($n AS DOUBLE)) + " +
             s"$d * (CAST(coalesce(sc, 0) AS DOUBLE) / 1e12)) * 1e12 + 0.5) " +
             "/ 1e12").as("r"))
-      // q149's barrier discipline: persist + materialize each round so
-      // the execution is five short independent jobs over cached state
+      // one cut per round: five short independent jobs over cut state
       // instead of one 12-stage DAG — the lazily-chained form ran ~2×
       // slower deep in a long-lived session (accumulated listener/GC
       // pressure stretches long DAGs first) with rare far-worse spikes
-      if (i < PrIters) {
-        r = r.transform(graft.core.EngineCache.persisted)
-        r.count()
-      }
+      if (i < PrIters) r = graft.core.EngineCache.cut(r)._1
     }
     r.select(col("node"), dround(col("r"), 9).as("pagerank")).orderBy("node")
   }
@@ -375,7 +374,8 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     var r = deg.select(col("node"), col("deg"), col("in_s"),
       expr(s"floor(in_s * 1e12 / CAST($ns AS DOUBLE) + 0.5) / 1e12").as("r"))
     for (i <- 1 to PrIters) {
-      val contrib = e.join(r, e("src") === r("node"))
+      val rb = bcastIfSmall(r, n) // q104's rank-side broadcast
+      val contrib = e.join(rb, e("src") === rb("node"))
         .select(col("dst").as("node"),
           expr("CAST(floor(r / CAST(deg AS DOUBLE) * 1e12 + 0.5) " +
             "AS DECIMAL(38,0))").as("c"))
@@ -387,10 +387,7 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
           expr(s"floor((((1.0 - $d) * in_s / CAST($ns AS DOUBLE)) + " +
             s"$d * (CAST(coalesce(sc, 0) AS DOUBLE) / 1e12)) * 1e12 + 0.5) " +
             "/ 1e12").as("r"))
-      if (i < PrIters) {
-        r = r.transform(graft.core.EngineCache.persisted)
-        r.count()
-      }
+      if (i < PrIters) r = graft.core.EngineCache.cut(r)._1
     }
     r.select(col("node"), dround(col("r"), 9).as("ppr")).orderBy("node")
   }
@@ -444,8 +441,8 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     val eByPart = eByCust
       .repartition(col("part"))
       .transform(graft.core.EngineCache.persisted)
-    // Each half-step PERSISTS its raw-sum frame and collects the 1-scalar
-    // max on the driver (DistributedRank's counts-collect idiom). The
+    // Each half-step CUTS its raw-sum frame and reads the 1-scalar max
+    // off the cut's own job (DistributedRank's counts-collect idiom). The
     // tempting alternative — crossJoin(broadcast(raw.agg(max))) — embeds
     // the frame in its own plan TWICE (max subquery + main), doubling the
     // unpersisted lineage per half-step: 2^(2·iters) re-expansions, which
@@ -460,14 +457,15 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     // the round-start plan, all AQE-rewritten at runtime but each with
     // its exchange pair already materialized). Row counts come free:
     // |parts| from the init distinct, |custs|/|parts| thereafter from
-    // the SAME 1-row aggregate that collects each half-step's max.
+    // the SAME cut that reads each half-step's max.
     var a = eByPart.select(col("part")).distinct().withColumn("a", lit(1.0))
     var aN = a.count() // |parts| — in-stage distinct over the part cache
     var h: DataFrame = a // placeholder; assigned in round 1
     var hN = 0L
-    def normalized(raw: DataFrame, key: String,
+    def normalized(raw0: DataFrame, key: String,
                    out: String): (DataFrame, Long) = {
-      val r0 = raw.agg(max(col("sc")), count(lit(1))).head
+      val (raw, r0) = graft.core.EngineCache.cut(raw0,
+        max(col("sc")), count(lit(1)))
       val mx = r0.getDecimal(0).doubleValue
       (raw.select(col(key),
         (floor(col("sc").cast("double") / lit(mx) * lit(1e12) + lit(0.5)) /
@@ -476,12 +474,10 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     for (_ <- 1 to HitsIters) {
       val hraw = eByCust.join(bcastIfSmall(a, aN), "part").groupBy("cust")
         .agg(expr("sum(CAST(floor(a * 1e12 + 0.5) AS DECIMAL(38,0)))").as("sc"))
-        .transform(graft.core.EngineCache.persisted)
       val (h1, hN1) = normalized(hraw, "cust", "h")
       h = h1; hN = hN1
       val araw = eByPart.join(bcastIfSmall(h, hN), "cust").groupBy("part")
         .agg(expr("sum(CAST(floor(h * 1e12 + 0.5) AS DECIMAL(38,0)))").as("sc"))
-        .transform(graft.core.EngineCache.persisted)
       val (a1, aN1) = normalized(araw, "part", "a")
       a = a1; aN = aN1
     }
@@ -538,7 +534,7 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     * O(|V|) label side; the persisted edge list reuses its exchange)
     * + a (node, lab) hash count + a per-node top-1 window whose state
     * is one node's distinct neighbor labels. Labels are O(|V|) rows
-    * forever; rounds are barriered with persists exactly like q104 —
+    * forever; rounds are cut exactly like q104 —
     * the unrolled-CTE oracle re-derives the edge list per round,
     * which is the plan a 100 TB run cannot afford and the reason the
     * Spark side loops over cached state instead. */
@@ -576,8 +572,8 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     ORDER BY node"""
 
   /** Spark-side mirror of [[labelPropSql]]: identical arithmetic, but
-    * the edge list persists ONCE and each round barriers on cached
-    * state (q104's discipline) instead of re-deriving the self-join. */
+    * the edge list persists ONCE and each round is cut (q104's
+    * discipline) instead of re-deriving the self-join. */
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     labelPropOf(Tables.load(spark, dir, "lineitem")
@@ -585,7 +581,7 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
   }
 
   /** The shared LP engine core: persisted symmetric edge list + the
-    * final (node, lab) frame after [[LpIters]] barriered rounds.
+    * final (node, lab) frame after [[LpIters]] cut rounds.
     *
     * r13 optimizations (both bit-equal, cross-checked label-for-label
     * at sf0.1):
@@ -636,8 +632,10 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
       }
     var lab = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
+    var labN = -1L // |lab| once read off a cut; gates q104's broadcast
     for (i <- 1 to LpIters) {
-      val cnt = e.join(lab, e("dst") === lab("node"))
+      val lb = bcastIfSmall(lab, labN)
+      val cnt = e.join(lb, e("dst") === lb("node"))
         .groupBy(e("src").as("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
       // top-1 = highest count, then LOWEST label — bit-identical to the
@@ -658,8 +656,9 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
             .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
             .select(col("node"), (-col("m.nl")).as("lab"))
       if (i < LpIters) {
-        lab = lab.transform(graft.core.EngineCache.persisted)
-        lab.count() // q104's per-round materialization barrier
+        val (c, r) = graft.core.EngineCache.cut(lab, count(lit(1)))
+        lab = c
+        labN = r.getLong(0)
       }
     }
     (e, lab)

@@ -411,13 +411,8 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
     * no-ops by construction, so the result IS the k-core there. Output:
     * each surviving node with its degree inside the final subgraph.
     *
-    * Scale shape: the supported edge list persists once; each round is
-    * one degree hash-agg plus two semi joins, with
-    * `localCheckpoint(eager)` as the per-round materialization barrier
-    * (q76's lineage-truncation precedent — the alive set is referenced
-    * twice per round, so lazy chaining would double the analyzed tree
-    * every round). Peeling only shrinks frames; every shuffle is keyed
-    * on node/edge ids. */
+    * Scale shape: peeling only shrinks frames; every shuffle is keyed
+    * on node/edge ids (see [[kcorePeel]]). */
   val KcoreK = 2
   val KcorePeels = 8
 
@@ -429,109 +424,81 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
       .select(col("l_orderkey"), col("l_partkey")))
   }
 
-  /** The peel loop over an arbitrary (u, v) edge frame — the spec
-    * entry point. Returns (node, core_degree), unordered.
-    *
-    * Adaptive small-graph path (the `connectedComponents` precedent,
-    * `Dedup.scala`): the co-purchase graph is the thresholded OUTPUT of
-    * a support filter, orders of magnitude smaller than the fact table,
-    * and a multi-round distributed fixpoint on a few thousand edges is
-    * pure job-scheduling latency. Below `driverEdgeLimit` edges the
-    * pairs stream (`toLocalIterator`) into primitive arrays and the
-    * SAME round-based simultaneous peel runs index-side — identical
+  /** The peel over an arbitrary (u, v) edge frame — the spec entry
+    * point. Returns (node, core_degree), unordered. Up to
+    * [[graft.core.DriverGraph.EdgeLimit]] edges the SAME round-based
+    * simultaneous peel runs on the driver's index arrays — identical
     * round cap, identical fixpoint exit, so the result is bit-equal to
-    * the distributed loop's by construction (cross-validated in
-    * ScaleOpsSpec with `driverEdgeLimit = 0` forcing the loop). The
-    * distributed peel remains the over-limit path. */
-  def kcoreOf(e0: DataFrame, driverEdgeLimit: Long = 2000000L): DataFrame = {
+    * [[kcorePeel]]'s by construction (cross-validated in ScaleOpsSpec);
+    * above it the distributed peel runs. */
+  def kcoreOf(e0: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    val spark = e0.sparkSession
+    val edges = e0.select(col("u").cast("long"), col("v").cast("long"))
+    graft.core.DriverGraph.load(edges) match {
+      case None => kcorePeel(edges)
+      case Some(g) =>
+        val n = g.src.length
+        val kept = Array.fill(n)(true)
+        val deg = new Array[Long](g.ids.length)
+        def degrees(): Unit = {
+          java.util.Arrays.fill(deg, 0L)
+          var e = 0
+          while (e < n) {
+            if (kept(e)) { deg(g.src(e)) += 1; deg(g.dst(e)) += 1 }
+            e += 1
+          }
+        }
+        var prev = -1L
+        var alive = n.toLong
+        var round = 0
+        while (round < KcorePeels && alive != prev) {
+          prev = alive
+          degrees()
+          alive = 0L
+          var e = 0
+          while (e < n) {
+            if (kept(e) && (deg(g.src(e)) < KcoreK || deg(g.dst(e)) < KcoreK))
+              kept(e) = false
+            if (kept(e)) alive += 1
+            e += 1
+          }
+          round += 1
+        }
+        degrees()
+        g.frame(e0.sparkSession, deg, "node", "core_degree")
+          .filter(col("core_degree") > 0)
+    }
+  }
+
+  /** The distributed peel: per round one degree hash-agg plus two semi
+    * joins, cut through [[graft.core.EngineCache.cut]], which also
+    * reads the surviving edge count. Early exit at the fixpoint:
+    * peeling only removes edges, so an unchanged edge count proves the
+    * round was a no-op and every remaining round would be too — the
+    * result equals the full [[KcorePeels]] unroll the oracle spells
+    * (q125's frontier-empty rule). */
+  private[graft] def kcorePeel(e0: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions._
     def degrees(edges: DataFrame) =
       edges.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy("node").agg(count(lit(1)).as("d"))
-    var edges = e0.select(col("u").cast("long"), col("v").cast("long"))
-      .transform(graft.core.EngineCache.persisted)
-    var cur = edges.count()
-    if (cur <= driverEdgeLimit) {
-      val n = cur.toInt
-      val src = new Array[Long](n)
-      val dst = new Array[Long](n)
-      val it = edges.toLocalIterator()
-      var i = 0
-      while (it.hasNext) {
-        val r = it.next(); src(i) = r.getLong(0); dst(i) = r.getLong(1); i += 1
-      }
-      edges.unpersist()
-      // dense relabel: sorted distinct endpoint ids -> [0, m)
-      val all = new Array[Long](2 * n)
-      System.arraycopy(src, 0, all, 0, n)
-      System.arraycopy(dst, 0, all, n, n)
-      java.util.Arrays.sort(all)
-      var m = 0
-      var j = 0
-      while (j < all.length) {
-        if (m == 0 || all(j) != all(m - 1)) { all(m) = all(j); m += 1 }
-        j += 1
-      }
-      val ids = java.util.Arrays.copyOf(all, m)
-      val su = src.map(x => java.util.Arrays.binarySearch(ids, x))
-      val sv = dst.map(x => java.util.Arrays.binarySearch(ids, x))
-      val kept = Array.fill(n)(true)
-      val deg = new Array[Long](m)
-      // the same simultaneous-removal rounds the distributed loop (and
-      // the oracle's unrolled CTE chain) runs, round cap included
-      var prev = -1L
-      var alive = n.toLong
-      var round = 0
-      while (round < KcorePeels && alive != prev) {
-        prev = alive
-        java.util.Arrays.fill(deg, 0L)
-        var e = 0
-        while (e < n) {
-          if (kept(e)) { deg(su(e)) += 1; deg(sv(e)) += 1 }
-          e += 1
-        }
-        alive = 0L
-        e = 0
-        while (e < n) {
-          if (kept(e) &&
-              (deg(su(e)) < KcoreK || deg(sv(e)) < KcoreK)) kept(e) = false
-          if (kept(e)) alive += 1
-          e += 1
-        }
-        round += 1
-      }
-      java.util.Arrays.fill(deg, 0L)
-      var e = 0
-      while (e < n) {
-        if (kept(e)) { deg(su(e)) += 1; deg(sv(e)) += 1 }
-        e += 1
-      }
-      // result frame from broadcast arrays — no driver-side Seq of rows
-      val bIds = spark.sparkContext.broadcast(ids)
-      val bDeg = spark.sparkContext.broadcast(deg)
-      val sq = spark
-      import sq.implicits._
-      return spark.range(0, m.toLong)
-        .map(i => (bIds.value(i.toInt), bDeg.value(i.toInt)))
-        .toDF("node", "core_degree")
-        .filter(col("core_degree") > 0)
+    def cutCounted(df: DataFrame): (DataFrame, Long) = {
+      val (c, r) = graft.core.EngineCache.cut(df, count(lit(1)))
+      (c, r.getLong(0))
     }
-    // early exit at the fixpoint: peeling only removes edges, so an
-    // unchanged edge count proves the round was a no-op and every
-    // remaining round would be too — the result equals the full
-    // KcorePeels unroll the oracle spells (q125's frontier-empty rule)
+    var (edges, cur) =
+      cutCounted(e0.select(col("u").cast("long"), col("v").cast("long")))
     var prev = -1L
     var round = 0
     while (round < KcorePeels && cur != prev) {
       prev = cur
       val alive = degrees(edges).filter(col("d") >= KcoreK).select("node")
-      edges = edges
+      val (next, n) = cutCounted(edges
         .join(alive.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
         .join(alive.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-        .select("u", "v")
-        .localCheckpoint(true)
-      cur = edges.count() // one job per round; the frame is checkpointed
+        .select("u", "v"))
+      edges = next
+      cur = n
       round += 1
     }
     degrees(edges).select(col("node"), col("d").as("core_degree"))

@@ -206,19 +206,21 @@ class DedupSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star.keySet == (0L to 59L).toSet)
     assert(star.values.forall(_ == 0L), "every chain node joins component 0")
-    // cross-validate all three strategies on a multi-component graph:
-    // star contraction, the DISTRIBUTED label-prop loop (forced via
-    // driverEdgeLimit = 0), and the adaptive driver union-find path
+    // cross-validate both strategies on a multi-component graph: star
+    // contraction (the DISTRIBUTED loop, called directly; once more over
+    // every pair in both orientations, which must not matter) and the
+    // adaptive driver union-find path
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L), (9L, 8L), (20L, 21L))
       .toDF("id_a", "id_b")
-    val viaStar = Dedup.connectedComponentsStar(pairs).collect()
+    val viaStar = Dedup.connectedComponentsStar(
+        pairs.union(pairs.select($"id_b", $"id_a"))).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaProp = Dedup.connectedComponents(pairs, driverEdgeLimit = 0).collect()
+    val viaLoop = Dedup.connectedComponentsStar(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val viaUf = Dedup.connectedComponents(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(viaStar == viaProp)
-    assert(viaUf == viaProp)
+    assert(viaStar == viaLoop)
+    assert(viaUf == viaLoop)
     // the small-graph path must also handle chains (worst case for the
     // rounds-based strategies) with the same min-id contract
     val ufChain = Dedup.connectedComponents(chain).collect()

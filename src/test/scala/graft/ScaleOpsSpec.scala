@@ -494,10 +494,10 @@ class ScaleOpsSpec extends SparkSpec {
         .toDF("u", "v")).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(again === out)
-    // cross-validate the size-gated strategy switch: driverEdgeLimit=0
-    // forces the distributed peel loop on identical input — both paths
-    // must agree node for node, degree for degree
-    val viaLoop = ScaleOps.kcoreOf(edges, driverEdgeLimit = 0L).collect()
+    // cross-validate the size-gated strategy switch: the distributed
+    // peel loop, called directly on identical input — both paths must
+    // agree node for node, degree for degree
+    val viaLoop = ScaleOps.kcorePeel(edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaLoop === out,
       "driver peel and distributed peel must be bit-equal")
