@@ -154,6 +154,8 @@ object GraftFunctions {
         exprs(2).eval().asInstanceOf[Int]))
     ifAbsent("word_gram_hashes")(exprs =>
       WordGramHashes(exprs(0), exprs(1).eval().asInstanceOf[Int]))
+    ifAbsent("intradoc_cut")(exprs =>
+      IntradocCut(exprs(0), exprs(1).eval().asInstanceOf[Int]))
     ifAbsent("sorted_intersect_count")(exprs =>
       SortedIntersectCount(exprs(0), exprs(1)))
     // the sketch-column UDAF/UDF families (each registrar is idempotent)

@@ -4,7 +4,8 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -25,6 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *                       (top 60 digest bits, unsigned)
   *  - minhash_sig i   == array_min(transform(hs, h -> (a_i*(h%P)+b_i) % P))
   *  - simhash16       == the 16 per-bit ±1-sum aggregates
+  *  - intradoc_cut    == q184's gram self-join + island union + rebuild
+  *                       aggregate (row for row, as a multiset)
   * so the DuckDB oracle (which keeps the SQL form) still matches bit-for-bit.
   */
 object HashKernels {
@@ -190,16 +193,24 @@ object HashKernels {
     * string, a conv parse and a string→long cast per gram; here each
     * word's bytes extract once per row and every gram is one digest
     * update sweep. */
-  def wordGramHashes(w: ArrayData, k: Int): ArrayData = {
+  def wordGramHashes(w: ArrayData, k: Int): ArrayData =
+    new GenericArrayData(gramHashes(wordBytes(w), k))
+
+  private def wordBytes(w: ArrayData): Array[Array[Byte]] = {
     val n = w.numElements()
-    val m = n - k + 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Any])
     val wb = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) { wb(i) = w.getUTF8String(i).getBytes; i += 1 }
+    wb
+  }
+
+  /** The [[wordGramHashes]] digest over pre-extracted word bytes; empty
+    * when there are fewer than k words. */
+  private def gramHashes(wb: Array[Array[Byte]], k: Int): Array[Long] = {
+    val m = math.max(0, wb.length - k + 1)
     val md = md5Local.get()
     val out = new Array[Long](m)
-    i = 0
+    var i = 0
     while (i < m) {
       md.reset()
       var j = 0
@@ -215,7 +226,55 @@ object HashKernels {
       out(i) = v >>> 4
       i += 1
     }
-    new GenericArrayData(out)
+    out
+  }
+
+  /** Within-document repetition cut of one words array: the k-grams are
+    * hashed by the [[wordGramHashes]] digest, the first position of each
+    * hash keeps its gram, every later occurrence at position p covers
+    * words p..p+k-1, and the uncovered words are joined by ' ' in
+    * position order. Returns (n_tokens, kept_tokens, clean_text), or
+    * null for an empty array (no word, so no row). Equals the gram
+    * self-join + island union + rebuild aggregate it replaced (asserted
+    * against that spelling in DedupSpec). Position 1 always keeps its
+    * gram, so a non-empty array keeps at least one word. */
+  def intradocCut(w: ArrayData, k: Int): InternalRow = {
+    val n = w.numElements()
+    if (n == 0) return null
+    val wb = wordBytes(w)
+    val hs = gramHashes(wb, k)
+    // repeatAt(p): the gram at p repeats an earlier one, so it is cut
+    val repeatAt = new Array[Boolean](hs.length)
+    val seen = new java.util.HashSet[java.lang.Long](hs.length * 2)
+    var p = 0
+    while (p < hs.length) { repeatAt(p) = !seen.add(hs(p)); p += 1 }
+    val kept = new Array[Boolean](n)
+    var keptN = 0
+    var keptBytes = 0
+    var coverEnd = -1
+    p = 0
+    while (p < n) {
+      if (p < hs.length && repeatAt(p)) coverEnd = p + k - 1
+      if (p > coverEnd) {
+        kept(p) = true; keptN += 1; keptBytes += wb(p).length
+      }
+      p += 1
+    }
+    val text = new Array[Byte](keptBytes + keptN - 1)
+    var off = 0
+    var first = true
+    p = 0
+    while (p < n) {
+      if (kept(p)) {
+        if (!first) { text(off) = SpaceByte; off += 1 }
+        first = false
+        System.arraycopy(wb(p), 0, text, off, wb(p).length)
+        off += wb(p).length
+      }
+      p += 1
+    }
+    new GenericInternalRow(
+      Array[Any](n, keptN.toLong, UTF8String.fromBytes(text)))
   }
 
   /** Winnowing fingerprints, fused: positional K-char-gram 60-bit hashes
@@ -440,6 +499,32 @@ case class WordGramHashes(child: Expression, k: Int)
     defineCodeGen(ctx, ev,
       c => s"graft.functions.HashKernels.wordGramHashes($c, $k)")
   override protected def withNewChildInternal(nc: Expression): WordGramHashes =
+    copy(child = nc)
+}
+
+/** `intradoc_cut(array<string>, k) -> struct<n_tokens, kept_tokens,
+  * clean_text>` — the within-document repetition cut of one words array
+  * ([[HashKernels.intradocCut]]), fused into one per-row pass. Null for a
+  * null or empty array. k must be a literal. */
+case class IntradocCut(child: Expression, k: Int) extends UnaryExpression {
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(StringType, _) if k > 0 => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires array<string> and a positive literal k, got ${t.sql}")
+  }
+  override def dataType: DataType = StructType(Seq(
+    StructField("n_tokens", IntegerType, nullable = false),
+    StructField("kept_tokens", LongType, nullable = false),
+    StructField("clean_text", StringType, nullable = false)))
+  override def nullable: Boolean = true
+  override def prettyName: String = "intradoc_cut"
+  override def nullSafeEval(a: Any): Any =
+    HashKernels.intradocCut(a.asInstanceOf[ArrayData], k)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"""
+      ${ev.value} = graft.functions.HashKernels.intradocCut($c, $k);
+      ${ev.isNull} = ${ev.value} == null;""")
+  override protected def withNewChildInternal(nc: Expression): IntradocCut =
     copy(child = nc)
 }
 

@@ -221,6 +221,7 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
     val d = docs(spark, dir)
     spanIncrementOf(
       d.filter(col("source") === BatchSource), corpusGramsAtRest(spark, dir))
+      .orderBy("doc_id")
   }
 
   /** Build-or-read the corpus-side distinct-gram table for `dir`. */
@@ -242,7 +243,7 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
   }
 
   /** The increment over an arbitrary batch frame + stored gram set —
-    * the spec and foreachBatch entry point. */
+    * the spec and foreachBatch entry point, unordered. */
   def spanIncrementOf(batchDocs: DataFrame,
                       corpusGrams: DataFrame): DataFrame = {
     val spark = batchDocs.sparkSession
@@ -259,7 +260,7 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
     sp.createOrReplaceTempView(spView)
     spark.sql(s"""
       WITH sp AS (SELECT * FROM $spView),
-      $subdupIslandTail""")
+      $subdupIslandProfile""")
   }
 
   // ---------------------------------------------------------------- q234

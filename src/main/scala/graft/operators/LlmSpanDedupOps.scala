@@ -158,7 +158,10 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
         min(s) AS i_s, max(e) AS i_e
       FROM isl GROUP BY doc_id, n_tokens, island)"""
 
-  private[operators] def subdupIslandTail: String = s"""
+  /** The per-doc island profile (dup_spans, dup_tokens, dup_frac) over
+    * an `sp` relation in scope, unordered: the tail of the frames the
+    * stream lands, where a sort would only add jobs. */
+  private[operators] def subdupIslandProfile: String = s"""
     $subdupIslandCtes
     SELECT doc_id, n_tokens,
       CAST(count(1) AS BIGINT) AS dup_spans,
@@ -166,7 +169,11 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
       ${droundSql(
         "CAST(sum(i_e - i_s + 1) AS DOUBLE) / CAST(n_tokens AS DOUBLE)",
         6)} AS dup_frac
-    FROM m GROUP BY doc_id, n_tokens
+    FROM m GROUP BY doc_id, n_tokens"""
+
+  /** [[subdupIslandProfile]] ordered by doc_id: the declared order of
+    * the query entry points and the oracle text. */
+  private[operators] def subdupIslandTail: String = s"""$subdupIslandProfile
     ORDER BY doc_id"""
 
   def substringDedup(spark: SparkSession, dir: String): DataFrame =
@@ -242,10 +249,11 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
   def dedupClean(spark: SparkSession, dir: String): DataFrame =
     dedupCleanOf(docs(spark, dir))
 
-  /** The survivor-rebuild tail (tok → t → kept → cleaned text) shared
-    * by q168 and q184; expects an `m(doc_id, i_s, i_e)` island relation
-    * in scope. */
-  private[operators] def subdupRebuildTail(base: String): String = s"""
+  def dedupCleanOf(docsDf: DataFrame): DataFrame = {
+    val (base, g) = subdupGramsView(docsDf)
+    docsDf.sparkSession.sql(s"""
+      WITH ${subdupSpanCtes(g, keepFirst = true)},
+      $subdupIslandCtes,
       tok AS (
         SELECT doc_id, w, posexplode(w) AS (p, word)
         FROM (SELECT doc_id, ${wordsExpr("text")} AS w FROM $base)),
@@ -260,14 +268,7 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
         CAST(count(1) AS BIGINT) AS kept_tokens,
         array_join(transform(array_sort(collect_list(struct(pos, word))),
           s -> s.word), ' ') AS clean_text
-      FROM kept GROUP BY doc_id ORDER BY doc_id"""
-
-  def dedupCleanOf(docsDf: DataFrame): DataFrame = {
-    val (base, g) = subdupGramsView(docsDf)
-    docsDf.sparkSession.sql(s"""
-      WITH ${subdupSpanCtes(g, keepFirst = true)},
-      $subdupIslandCtes,
-      ${subdupRebuildTail(base)}""")
+      FROM kept GROUP BY doc_id ORDER BY doc_id""")
   }
 
   // ---------------------------------------------------------------- q184
@@ -280,28 +281,27 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
     * × 10 → "abc", "a" × 50 → "a") — the template/boilerplate-loop
     * scrub Gopher's repetition signals (q56) only measure. Spans
     * never start at position 1 (a gram at pos 1 is always its hash's
-    * keeper), so every doc keeps ≥1 token. Same plan skeleton as
-    * q168 — the persisted gram frame, one doc-keyed window for the
-    * island union, a doc-keyed range anti join, one rebuild agg — so
-    * the same 100 TB argument applies verbatim; the df/sp stage
-    * groups by (doc, hash) instead of hash alone, which SHRINKS the
-    * shuffle (no cross-doc gram fan-in at all). */
+    * keeper), so every doc keeps ≥1 token. A doc's cut depends only on
+    * its own grams, so the cut is a per-row map: one fused
+    * `intradoc_cut` kernel per doc (the same gram digest as
+    * `word_gram_hashes`), no shuffle, no window, no join — the 100 TB
+    * pass is a scan and a projection. The oracle keeps the composable
+    * self-join + island-union spelling. Precondition: `doc_id` is
+    * unique. The kernel emits one row per input row; it does not merge
+    * rows that share an id. A null text yields no row. */
   def intradocDedup(spark: SparkSession, dir: String): DataFrame =
-    intradocDedupOf(docs(spark, dir))
+    intradocDedupOf(docs(spark, dir)).orderBy("doc_id")
 
+  /** [[intradocDedup]] over an arbitrary (doc_id, text) frame, unordered:
+    * the spec and stream entry point. */
   def intradocDedupOf(docsDf: DataFrame): DataFrame = {
-    val (base, g) = subdupGramsView(docsDf)
-    docsDf.sparkSession.sql(s"""
-      WITH dfw AS (
-        SELECT doc_id, ghash, CAST(min(pos) AS INT) AS keeper
-        FROM $g GROUP BY doc_id, ghash HAVING count(1) >= 2),
-      sp AS (
-        SELECT gg.doc_id, gg.n_tokens, gg.pos AS s,
-          gg.pos + ${SubdupK - 1} AS e
-        FROM $g gg JOIN dfw ON gg.doc_id = dfw.doc_id
-          AND gg.ghash = dfw.ghash AND gg.pos <> dfw.keeper),
-      $subdupIslandCtes,
-      ${subdupRebuildTail(base)}""")
+    GraftFunctions.register(docsDf.sparkSession)
+    docsDf
+      .select(col("doc_id"),
+        expr(s"intradoc_cut(${wordsExpr("text")}, $SubdupK)").as("cut"))
+      .filter(col("cut").isNotNull)
+      .select(col("doc_id"), col("cut.n_tokens"), col("cut.kept_tokens"),
+        col("cut.clean_text"))
   }
 
   def intradocDedupSql: String = s"""

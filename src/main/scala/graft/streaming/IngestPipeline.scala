@@ -35,6 +35,14 @@ import org.apache.spark.sql.functions._
   * landed and been read back. A checkpoint-replayed batch still
   * overwrites every `batch_run=N` before any later wave reads it.
   *
+  * A micro-batch of 10 documents runs 22 Spark jobs: the empty-batch
+  * check 1, scores 1, clean 2, spans 3, neardup 5, postings 3, doclen 2
+  * and funnel 5 (perfbench's stream workload, jobs grouped by SQL
+  * execution id). The waves' longest path is scores → clean → neardup
+  * → funnel. Two rules keep the counts there: a stage frame is not
+  * sorted (under AQE a sort costs a sampling job and a shuffle job),
+  * and the intra-doc cut is a per-row kernel with no shuffle.
+  *
   * Every stage touches O(batch) text plus frozen at-rest state only, so a
   * micro-batch costs the same whether the corpus behind the
   * gram/signature tables is 1 GB or 100 TB. Per-doc outputs depend only
@@ -98,9 +106,9 @@ object IngestPipeline {
         graft.llm.Dedup.signatureFrame(
           cleanDocs, "doc_id", "text", cfg.shingleN, cfg.numHashes),
         cfg.numHashes, cfg.bands, cfg.tau) -> "neardup"))
+    // a left-anti join ignores duplicate keys: no distinct (one shuffle)
     val survivors = cleanDocs.join(
-      hits.select(col("batch_id").as("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
+      hits.select(col("batch_id").as("doc_id")), Seq("doc_id"), "left_anti")
     // q190's per-batch funnel row: every count an exact integer, every
     // stage monotone vs the previous one. ONE aggregate over a union of
     // per-stage projections: each branch puts 1 (a count) or the summed

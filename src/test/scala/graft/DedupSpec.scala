@@ -823,6 +823,87 @@ class DedupSpec extends SparkSpec {
     assert(out(1L)._1 === 12L && out(2L)._1 === 3L && out(3L)._1 === 1L)
   }
 
+  test("intra-doc cut kernel equals the self-join + island-union reference") {
+    import graft.operators.LlmQueries
+    val k = LlmQueries.SubdupK
+    val rnd = new scala.util.Random(20261019L)
+    def pick(vocab: Int) = s"w${rnd.nextInt(vocab)}"
+    def words(n: Int, vocab: Int) = Seq.fill(n)(pick(vocab))
+    val run = (1 to k + rnd.nextInt(3)).map(i => s"r$i")
+    // each family as word lists; joined below with varied separators
+    def planted = {
+      val ctx = words(rnd.nextInt(6), 50)
+      words(rnd.nextInt(4), 50) ++ run ++ ctx ++ run ++
+        (if (rnd.nextBoolean()) ctx ++ run else Nil) ++ words(rnd.nextInt(4), 50)
+    }
+    def periodic = {
+      val period = words(1 + rnd.nextInt(k + 2), 1000)
+      words(rnd.nextInt(3), 1000) ++
+        Seq.fill(1 + rnd.nextInt(12))(period).flatten ++ words(rnd.nextInt(3), 1000)
+    }
+    def overlapping = {
+      // a run followed by a copy of its own tail: the two occurrences
+      // overlap, so later grams chain into one cut span
+      val r = words(k + rnd.nextInt(2 * k), 1000)
+      r ++ r.drop(rnd.nextInt(k)) ++ words(rnd.nextInt(3), 1000)
+    }
+    def noisy = words(rnd.nextInt(40), 2 + rnd.nextInt(4)) // accidental repeats
+    def short = words(1 + rnd.nextInt(k - 1), 3)
+    def text(ws: Seq[String]) = rnd.nextInt(4) match {
+      case 0 => ws.mkString(" ")
+      case 1 => ws.mkString("  ") // double spaces: one split each
+      case 2 => " " + ws.mkString(" ") + " " // trimmed away
+      case _ => ws.mkString("\t") // tabs: split on \s+, kept by trim
+    }
+    val texts: Seq[String] =
+      Seq.fill(60)(text(planted)) ++ Seq.fill(60)(text(periodic)) ++
+        Seq.fill(40)(text(overlapping)) ++ Seq.fill(60)(text(noisy)) ++
+        Seq.fill(20)(text(short)) ++
+        Seq("", " ", "   ", "\t", " \t\n ", null, null, "é ü é ü é ü é ü é ü é ü é ü é ü é") ++
+        Seq.fill(k + 3)("a").inits.map(_.mkString(" ")).toSeq
+    val local = docsOf(texts.zipWithIndex.map { case (t, i) => i.toLong -> t }: _*)
+    // a local frame evaluates the kernel interpreted (the optimizer folds
+    // the projection into the relation); a parquet scan runs its codegen
+    val dir = java.nio.file.Files.createTempDirectory("graft-intradoc-prop").toString
+    local.write.mode("overwrite").parquet(dir)
+    val d = spark.read.parquet(dir)
+    val got = LlmQueries.intradocDedupOf(d)
+    assert(got.schema.map(f => f.name -> f.dataType) === Seq(
+      "doc_id" -> org.apache.spark.sql.types.LongType,
+      "n_tokens" -> org.apache.spark.sql.types.IntegerType,
+      "kept_tokens" -> org.apache.spark.sql.types.LongType,
+      "clean_text" -> org.apache.spark.sql.types.StringType))
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "n_tokens", "kept_tokens", "clean_text").collect()
+        .toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    val want = DedupSpec.intradocReference(d)
+    val fallback = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try assert(multiset(got) === multiset(want))
+    finally spark.conf.set("spark.sql.codegen.fallback", fallback)
+    assert(multiset(LlmQueries.intradocDedupOf(local)) === multiset(want))
+    // the generator must reach the interesting cases: cuts happen, null
+    // texts drop, empty texts keep one empty token
+    val rows = got.collect().map(r => r.getLong(0) -> r).toMap
+    assert(rows.values.count(r => r.getLong(2) < r.getInt(1)) > 100)
+    assert(rows.size === texts.count(_ != null))
+    assert(rows(texts.indexOf("").toLong).getString(3) === "")
+  }
+
+  test("intra-doc cut over a parquet frame plans no Exchange") {
+    import graft.operators.LlmQueries
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val dir = java.nio.file.Files.createTempDirectory("graft-intradoc").toString
+    val run = (1 to 8).map(i => s"r$i").mkString(" ")
+    docsOf(1L -> s"$run g1 $run", 2L -> "a b c", 3L -> null)
+      .write.mode("overwrite").parquet(dir)
+    val out = LlmQueries.intradocDedupOf(spark.read.parquet(dir))
+    assert(out.collect().length === 2)
+    val plan = out.queryExecution.executedPlan
+    assert(planNodes(plan).count(_.isInstanceOf[Exchange]) === 0,
+      s"the per-doc cut must not shuffle:\n$plan")
+  }
+
   test("substring dedup merges overlapping spans, keeps separated ones apart") {
     import graft.operators.LlmQueries
     val run1 = (1 to 8).map(i => s"p$i").mkString(" ")
@@ -888,5 +969,64 @@ class DedupSpec extends SparkSpec {
     assert(b0._3 * 5 <= b0._2,
       s"the s~0 decile must rarely collide: $b0")
     graft.core.EngineCache.releaseAll()
+  }
+}
+
+object DedupSpec {
+  /** The intra-doc cut as the gram self-join + island union it was
+    * before the fused kernel, kept as the kernel's reference: grams
+    * grouped by (doc, hash), every non-first occurrence a [pos,
+    * pos+K-1] span, spans merged by the gaps-and-islands windows, the
+    * uncovered words range-anti-joined out and rebuilt in position
+    * order. Null texts and empty word arrays yield no row. */
+  def intradocReference(
+      docsDf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val spark = docsDf.sparkSession
+    graft.functions.GraftFunctions.register(spark)
+    val view = s"intradoc_ref_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    docsDf.createOrReplaceTempView(view)
+    val k = graft.operators.LlmQueries.SubdupK
+    val w = TextFunctions.wordsExpr("text")
+    spark.sql(s"""
+      WITH d AS (SELECT doc_id, $w AS w FROM $view),
+      g AS (
+        SELECT doc_id, CAST(size(w) AS INT) AS n_tokens,
+          CAST(p0 + 1 AS INT) AS pos, ghash
+        FROM d LATERAL VIEW posexplode(word_gram_hashes(w, $k)) AS p0, ghash),
+      dfw AS (
+        SELECT doc_id, ghash, CAST(min(pos) AS INT) AS keeper
+        FROM g GROUP BY doc_id, ghash HAVING count(1) >= 2),
+      sp AS (
+        SELECT gg.doc_id, gg.n_tokens, gg.pos AS s, gg.pos + ${k - 1} AS e
+        FROM g gg JOIN dfw ON gg.doc_id = dfw.doc_id
+          AND gg.ghash = dfw.ghash AND gg.pos <> dfw.keeper),
+      w2 AS (
+        SELECT doc_id, n_tokens, s, e,
+          max(e) OVER (PARTITION BY doc_id ORDER BY s, e
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
+        FROM sp),
+      isl AS (
+        SELECT doc_id, n_tokens, s, e,
+          CAST(sum(CASE WHEN pmax IS NULL OR s > pmax + 1 THEN 1 ELSE 0 END)
+            OVER (PARTITION BY doc_id ORDER BY s, e
+              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+            AS island
+        FROM w2),
+      m AS (
+        SELECT doc_id, n_tokens, island, min(s) AS i_s, max(e) AS i_e
+        FROM isl GROUP BY doc_id, n_tokens, island),
+      tok AS (SELECT doc_id, w, posexplode(w) AS (p, word) FROM d),
+      t AS (SELECT doc_id, CAST(size(w) AS INT) AS n_tokens,
+              p + 1 AS pos, word FROM tok),
+      kept AS (
+        SELECT t.doc_id, t.n_tokens, t.pos, t.word
+        FROM t LEFT JOIN m ON m.doc_id = t.doc_id
+          AND t.pos BETWEEN m.i_s AND m.i_e
+        WHERE m.i_s IS NULL)
+      SELECT doc_id, CAST(min(n_tokens) AS INT) AS n_tokens,
+        CAST(count(1) AS BIGINT) AS kept_tokens,
+        array_join(transform(array_sort(collect_list(struct(pos, word))),
+          s -> s.word), ' ') AS clean_text
+      FROM kept GROUP BY doc_id""")
   }
 }

@@ -1328,6 +1328,11 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
       InsertIntoHadoopFsRelationCommand, LogicalRelation}
     import org.apache.spark.sql.util.QueryExecutionListener
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec,
+      SparkPlan}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      Exchange}
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.SpanSugar._
     val fx = ingestFixture()
@@ -1340,12 +1345,15 @@ class StreamingAnalyticsSpec extends SparkSpec {
       case other => other.nodeName
     }.toSet
     val scans = new java.util.concurrent.ConcurrentHashMap[String, Set[String]]()
+    val plans = new java.util.concurrent.ConcurrentHashMap[String, SparkPlan]()
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
                              durationNs: Long): Unit =
         qe.analyzed.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
           val out = new org.apache.hadoop.fs.Path(c.outputPath.toString)
-          scans.put(s"${out.getParent.getName}/${out.getName}", leaves(c.query))
+          val stage = s"${out.getParent.getName}/${out.getName}"
+          scans.put(stage, leaves(c.query))
+          plans.put(stage, qe.executedPlan)
         }
       override def onFailure(funcName: String, qe: QueryExecution,
                              exception: Exception): Unit = ()
@@ -1365,6 +1373,40 @@ class StreamingAnalyticsSpec extends SparkSpec {
       assert(scans.get(s"$stage/batch_run=0") ===
         Set("clean/batch_run=0", "neardup/batch_run=0"),
         s"$stage must read only its parents' landed directories")
+    }
+    def dirsScanned(p: SparkPlan): Set[String] = planNodes(p).collect {
+      case f: FileSourceScanExec => f.relation.location.rootPaths
+        .map(r => s"${r.getParent.getName}/${r.getName}").mkString(",")
+    }.toSet
+    eventually(timeout(30.seconds)) {
+      assert(Seq("clean", "spans").forall(s => plans.containsKey(s"$s/batch_run=0")))
+    }
+    // the intra-doc cut is a per-row map: at most the quality join's
+    // broadcast moves data
+    val cleanPlan = plans.get("clean/batch_run=0")
+    assert(dirsScanned(cleanPlan)("scores/batch_run=0") &&
+      dirsScanned(plans.get("spans/batch_run=0"))("clean/batch_run=0"),
+      "the guards below must see the executed write plans")
+    assert(!planNodes(cleanPlan).exists {
+      case _: BroadcastExchangeLike => false
+      case _: Exchange => true
+      case _ => false
+    }, s"clean must not shuffle:\n$cleanPlan")
+    // a landed stage frame is not sorted: no global sort on doc_id
+    val spansPlan = plans.get("spans/batch_run=0")
+    assert(!planNodes(spansPlan).exists {
+      case s: SortExec => s.global &&
+        s.sortOrder.headOption.exists(_.child.references.exists(_.name == "doc_id"))
+      case _ => false
+    }, s"spans must not sort by doc_id:\n$spansPlan")
+    // the survivors' anti join reads the hits scan as is: no aggregate
+    // (a distinct) over the neardup directory alone
+    Seq("postings", "doclen").foreach { stage =>
+      val plan = plans.get(s"$stage/batch_run=0")
+      assert(!planNodes(plan).exists {
+        case a: BaseAggregateExec => dirsScanned(a) == Set("neardup/batch_run=0")
+        case _ => false
+      }, s"$stage must not aggregate the hits scan:\n$plan")
     }
     graft.core.EngineCache.releaseAll()
   }
@@ -1458,6 +1500,10 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val want = LlmQueries.intradocDedupOf(docs.toDF("doc_id", "text"))
       .collect().map(key).toSet
     assert(got == want)
+    // and against the cut's independent SQL spelling, since the twin and
+    // intradocDedupOf run the same kernel
+    assert(got == DedupSpec.intradocReference(docs.toDF("doc_id", "text"))
+      .collect().map(key).toSet)
     assert(want.exists(_._4 == "abc x yz"), "periodic doc must collapse")
   }
 
