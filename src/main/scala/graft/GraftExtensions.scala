@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: makes every graft native function
   * available on any session built with
@@ -12,7 +12,8 @@ import graft.functions._
   * cluster get `cosine_sim`, the hash kernels, and the shingle functions
   * without calling [[graft.functions.GraftFunctions.register]] in code.
   * The per-operator `register` calls remain for sessions the caller
-  * brought (both paths register the same expressions). */
+  * brought; both paths read [[GraftFunctions.natives]], so they register
+  * the same expressions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   // 5-arg form: the 3-arg overload is (className, db, name), which would
@@ -23,29 +24,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // naive bit_count(a ^ b) <= k joins → pigeonhole block equi-joins
     ext.injectOptimizerRule(_ => graft.plans.HammingJoinBlocking)
-    def inject(name: String, usage: String,
-               builder: Seq[Expression] => Expression): Unit =
+    GraftFunctions.natives.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
-    inject("cosine_sim", "cosine_sim(array<float>, array<float>) -> double",
-      exprs => CosineSimilarity(exprs(0), exprs(1)))
-    inject("l2_sq", "l2_sq(array<float>, array<float>) -> double",
-      exprs => L2Sq(exprs(0), exprs(1)))
-    inject("md5_i64", "md5_i64(array<string>[, prefix]) -> array<bigint>", {
-      case Seq(e) => Md5I64Array(e)
-      case Seq(e, p) => Md5I64Array(e,
-        p.eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-    })
-    inject("minhash_sig", "minhash_sig(array<bigint>, k) -> array<bigint>",
-      exprs => MinhashSig(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    inject("simhash", "simhash(array<bigint>, bits) -> bigint",
-      exprs => Simhash(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    inject("simhash16", "simhash16(array<bigint>) -> bigint",
-      exprs => Simhash(exprs(0), 16))
-    inject("srp_sig", "srp_sig(array<float>, bits) -> bigint",
-      exprs => SrpSig(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    inject("word_shingles", "word_shingles(array<string>, n) -> array<string>",
-      exprs => WordShingles(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    inject("char_shingles", "char_shingles(string, n) -> array<string>",
-      exprs => CharShingles(exprs(0), exprs(1).eval().asInstanceOf[Int]))
+    }
   }
 }

@@ -117,6 +117,45 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * any operator that uses them so the functions exist on whatever session
   * the caller brought (driver sessions included). */
 object GraftFunctions {
+
+  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Int]
+
+  /** Every native Catalyst function as (name, usage, builder): the one
+    * list that both [[register]] and [[graft.GraftExtensions]] read, so
+    * the two registration paths cannot drift apart. */
+  val natives: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", "cosine_sim(array<float>, array<float>) -> double",
+      exprs => CosineSimilarity(exprs(0), exprs(1))),
+    ("l2_sq", "l2_sq(array<float>, array<float>) -> double",
+      exprs => L2Sq(exprs(0), exprs(1))),
+    ("md5_i64", "md5_i64(array<string>[, prefix]) -> array<bigint>", {
+      case Seq(e) => Md5I64Array(e)
+      case Seq(e, p) => Md5I64Array(e,
+        p.eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
+    }),
+    ("minhash_sig", "minhash_sig(array<bigint>, k) -> array<bigint>",
+      exprs => MinhashSig(exprs(0), intArg(exprs(1)))),
+    ("simhash", "simhash(array<bigint>, bits) -> bigint",
+      exprs => Simhash(exprs(0), intArg(exprs(1)))),
+    ("simhash16", "simhash16(array<bigint>) -> bigint",
+      exprs => Simhash(exprs(0), 16)),
+    ("srp_sig", "srp_sig(array<float>, bits) -> bigint",
+      exprs => SrpSig(exprs(0), intArg(exprs(1)))),
+    ("word_shingles", "word_shingles(array<string>, n) -> array<string>",
+      exprs => WordShingles(exprs(0), intArg(exprs(1)))),
+    ("char_shingles", "char_shingles(string, n) -> array<string>",
+      exprs => CharShingles(exprs(0), intArg(exprs(1)))),
+    ("winnow_fps", "winnow_fps(string, k, w) -> array<bigint>",
+      exprs => WinnowFps(exprs(0), intArg(exprs(1)), intArg(exprs(2)))),
+    ("word_gram_hashes", "word_gram_hashes(array<string>, k) -> array<bigint>",
+      exprs => WordGramHashes(exprs(0), intArg(exprs(1)))),
+    ("intradoc_cut", "intradoc_cut(array<string>, k) -> " +
+      "struct<n_tokens:int, kept_tokens:bigint, clean_text:string>",
+      exprs => IntradocCut(exprs(0), intArg(exprs(1)))),
+    ("sorted_intersect_count",
+      "sorted_intersect_count(array<bigint>, array<bigint>) -> int",
+      exprs => SortedIntersectCount(exprs(0), exprs(1))))
+
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     // Per-function idempotence: each name registers only if absent, so a
@@ -125,39 +164,11 @@ object GraftFunctions {
     // same-named FOREIGN temp function is left in place — same-name
     // collisions are the caller's to resolve either way; clobbering
     // theirs silently would be worse.)
-    def ifAbsent(name: String)(
-        builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
+    natives.foreach { case (name, _, builder) =>
       if (!reg.functionExists(
           org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, builder, "built-in")
-    ifAbsent("cosine_sim")(exprs => CosineSimilarity(exprs(0), exprs(1)))
-    ifAbsent("l2_sq")(exprs => L2Sq(exprs(0), exprs(1)))
-    ifAbsent("md5_i64") {
-      case Seq(e) => Md5I64Array(e)
-      case Seq(e, p) => Md5I64Array(e,
-        p.eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
     }
-    ifAbsent("minhash_sig")(exprs =>
-      MinhashSig(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    ifAbsent("simhash")(exprs =>
-      Simhash(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    ifAbsent("simhash16")(exprs => Simhash(exprs(0), 16))
-    ifAbsent("srp_sig")(exprs =>
-      SrpSig(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    ifAbsent("word_shingles")(exprs =>
-      WordShingles(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    ifAbsent("char_shingles")(exprs =>
-      CharShingles(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    ifAbsent("winnow_fps")(exprs =>
-      WinnowFps(exprs(0), exprs(1).eval().asInstanceOf[Int],
-        exprs(2).eval().asInstanceOf[Int]))
-    ifAbsent("word_gram_hashes")(exprs =>
-      WordGramHashes(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    ifAbsent("intradoc_cut")(exprs =>
-      IntradocCut(exprs(0), exprs(1).eval().asInstanceOf[Int]))
-    ifAbsent("sorted_intersect_count")(exprs =>
-      SortedIntersectCount(exprs(0), exprs(1)))
     // the sketch-column UDAF/UDF families (each registrar is idempotent)
     HllSketch.register(spark)
     DdSketch.register(spark)

@@ -107,30 +107,45 @@ object Dedup {
     * represented only by its at-rest signature frame ([[signatureFrame]]
     * schema). Only the batch is shingled; the corpus side is read back
     * from storage. Banding is identical to the self-join path, but the
-    * join is batch-bands ⋈ corpus-bands (disjoint sides, no id ordering),
-    * so the work is O(batch bands + matching corpus buckets) — the
-    * production shape where a daily batch is orders of magnitude smaller
-    * than the accumulated corpus. */
+    * join is batch-bands ⋈ corpus-bands (disjoint sides, no id ordering).
+    *
+    * The BATCH side is the broadcast: each side is banded once as
+    * (id, hs, sig, one row per band key), the batch's rows are the hash
+    * table, and the corpus rows stream through it where they are stored,
+    * so only O(batch) rows reach the driver and nothing is shuffled. A
+    * pair colliding in several bands meets once per shared band; each
+    * meeting row carries both signatures, and it is kept only when its
+    * band is the FIRST band whose signature rows all agree. Exactly one
+    * row per colliding pair passes, so the filter is a per-row
+    * `distinct` with no shuffle, and the Jaccard reads the shingle sets
+    * already on that row (no join-backs). The first-band test is a CASE
+    * over the signature elements, not a `zip_with` lambda over the band
+    * keys: a lambda cannot be compiled, so it takes the whole join out of
+    * generated code (q145 at sf0.1 then ran slower than the shuffle
+    * spelling it replaces). One broadcast job and the consumer's own job
+    * per call. */
   def incrementalLshPairs(corpusSig: DataFrame, batchSig: DataFrame,
                           numHashes: Int, bands: Int, tau: Double): DataFrame = {
     GraftFunctions.register(corpusSig.sparkSession)
-    val bk = bandKeysExpr(numHashes, bands)
-    val bb = batchSig.selectExpr("id", s"explode(array($bk)) AS bk")
-      .select(col("id").as("batch_id"), col("bk"))
-    val cb = corpusSig.selectExpr("id", s"explode(array($bk)) AS bk")
-      .select(col("id").as("corpus_id"), col("bk").as("bk_c"))
-    bb.join(cb, col("bk") === col("bk_c"))
-      .drop("bk", "bk_c")
-      .dropDuplicates("batch_id", "corpus_id")
-      .join(batchSig.select(col("id").as("batch_id"),
-          sort_array(col("hs")).as("hs_a")), "batch_id")
-      .join(corpusSig.select(col("id").as("corpus_id"),
-          sort_array(col("hs")).as("hs_b")), "corpus_id")
+    val rows = numHashes / bands
+    def banded(sig: DataFrame, s: String): DataFrame =
+      sig.selectExpr(s"id AS id_$s", s"hs AS hs_$s", s"sig AS sig_$s",
+        s"posexplode(array(${bandKeysExpr(numHashes, bands)})) AS (band_$s, bk_$s)")
+    val firstSharedBand = (0 until bands).map { b =>
+      (b * rows + 1 to (b + 1) * rows)
+        .map(i => s"element_at(sig_a, $i) = element_at(sig_b, $i)")
+        .mkString("WHEN ", " AND ", s" THEN $b")
+    }.mkString("CASE ", " ", " END")
+    broadcast(banded(batchSig, "a"))
+      .join(banded(corpusSig, "b"), col("bk_a") === col("bk_b"))
+      .filter(expr(s"$firstSharedBand = band_a"))
+      .select(col("id_a").as("batch_id"), col("id_b").as("corpus_id"),
+        sort_array(col("hs_a")).as("hs_a"), sort_array(col("hs_b")).as("hs_b"))
       .withColumn("inter", expr("sorted_intersect_count(hs_a, hs_b)"))
-      .withColumn("jaccard",
-        expr("CAST(inter AS DOUBLE) / (size(hs_a) + size(hs_b) - inter)"))
+      .select(col("batch_id"), col("corpus_id"),
+        expr("CAST(inter AS DOUBLE) / (size(hs_a) + size(hs_b) - inter)")
+          .as("jaccard"))
       .filter(col("jaccard") >= tau)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
   }
 
   /** DuckDB oracle for [[incrementalLshPairs]]: replays the FULL two-sided

@@ -207,7 +207,7 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
     * hashes persist ONCE to the warehouse (`shard=N` on ghash; 8 bytes
     * per unique gram — the smallest artifact that answers "is this run
     * verbatim in the corpus?"), and each arriving batch is the only
-    * text that gets tokenized: batch grams semi-join the stored set,
+    * text that gets tokenized: batch grams probe the stored set,
     * matched spans merge through the same gaps-and-islands union, and
     * the output is q162's profile for the BATCH docs alone — the cut
     * list for an arriving increment, O(batch) work per increment.
@@ -243,17 +243,23 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
   }
 
   /** The increment over an arbitrary batch frame + stored gram set —
-    * the spec and foreachBatch entry point, unordered. */
+    * the spec and foreachBatch entry point, unordered. The BATCH grams
+    * are the broadcast side and the stored set streams through them, so
+    * only O(batch) rows reach the driver whatever the corpus size. An
+    * inner join is exact here even if the stored frame repeats a
+    * `ghash`: the repeat repeats a (doc_id, s, e) span, which falls into
+    * the island it already opened, so `dup_spans` and `dup_tokens` do not
+    * change. The batch grams are not persisted: this join is their one
+    * reader. */
   def spanIncrementOf(batchDocs: DataFrame,
                       corpusGrams: DataFrame): DataFrame = {
     val spark = batchDocs.sparkSession
-    val (_, bg) = subdupGramsView(batchDocs)
-    // DataFrame-API semi join (no temp view for the corpus side): under
+    // DataFrame-API join (no temp view for the corpus side): under
     // foreachBatch the batch frame lives in a CLONED session whose
     // catalog snapshot predates any view registered here — frames
     // compose across the clone, catalog lookups do not
-    val sp = spark.table(bg)
-      .join(corpusGrams.select(col("ghash")), Seq("ghash"), "left_semi")
+    val sp = broadcast(gramsOf(batchDocs))
+      .join(corpusGrams.select(col("ghash")), Seq("ghash"))
       .select(col("doc_id"), col("n_tokens"), col("pos").as("s"),
         (col("pos") + (SubdupK - 1)).as("e"))
     val spView = s"graft_spaninc_sp_t${Thread.currentThread().getId}"

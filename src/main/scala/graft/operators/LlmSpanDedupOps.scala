@@ -184,26 +184,27 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
     * once: both the ≥2-docs gram filter and the span join consume the
     * frame, and Spark would otherwise re-tokenize the corpus for each. */
   private[operators] def subdupGramsView(docsDf: DataFrame): (String, String) = {
-    val spark = docsDf.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val view = s"graft_subdup_docs_t${Thread.currentThread().getId}"
     docsDf.createOrReplaceTempView(view)
-    // r14: per-gram `xhash(concat_ws(' ', slice(w, pos, K)))` on the
-    // exploded rows → the fused `word_gram_hashes` kernel on the packed
-    // row (one byte-extract per word, one digest sweep per gram; the
-    // SQL form paid a slice + concat_ws string + hex/conv/cast per
-    // gram). posexplode yields pos = index + 1 over exactly the same
-    // 1..size−K+1 range (short docs → empty array → no rows, matching
-    // the old CASE guard); values are property-asserted bit-equal in
-    // DedupSpec, and the oracle keeps the composable spelling.
-    spark.sql(s"""
-      WITH d AS (SELECT doc_id, ${wordsExpr("text")} AS w FROM $view)
-      SELECT doc_id, CAST(size(w) AS INT) AS n_tokens,
-        CAST(p0 + 1 AS INT) AS pos, ghash
-      FROM d LATERAL VIEW posexplode(word_gram_hashes(w, $SubdupK)) AS p0, ghash""")
+    gramsOf(docsDf)
       .transform(graft.core.EngineCache.persisted)
       .createOrReplaceTempView(s"${view}_grams")
     (view, s"${view}_grams")
+  }
+
+  /** The positional-gram-hash frame (doc_id, n_tokens, pos, ghash) of a
+    * (doc_id, text) frame: one row per K-token gram, unpersisted. The
+    * fused `word_gram_hashes` kernel hashes every gram of the packed row
+    * in one digest sweep; posexplode yields pos = index + 1 over
+    * 1..size−K+1 (a doc shorter than K gives no row). Its values are
+    * property-asserted bit-equal to the oracle's composable spelling in
+    * DedupSpec. */
+  private[operators] def gramsOf(docsDf: DataFrame): DataFrame = {
+    GraftFunctions.register(docsDf.sparkSession)
+    docsDf.selectExpr("doc_id", s"${wordsExpr("text")} AS w")
+      .selectExpr("doc_id", "CAST(size(w) AS INT) AS n_tokens",
+        s"posexplode(word_gram_hashes(w, $SubdupK)) AS (p0, ghash)")
+      .selectExpr("doc_id", "n_tokens", "CAST(p0 + 1 AS INT) AS pos", "ghash")
   }
 
   /** The df (≥2-docs grams) + sp (dup spans) CTE pair over a grams

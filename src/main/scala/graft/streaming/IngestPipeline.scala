@@ -35,23 +35,35 @@ import org.apache.spark.sql.functions._
   * landed and been read back. A checkpoint-replayed batch still
   * overwrites every `batch_run=N` before any later wave reads it.
   *
-  * A micro-batch of 10 documents runs 22 Spark jobs: the empty-batch
-  * check 1, scores 1, clean 2, spans 3, neardup 5, postings 3, doclen 2
-  * and funnel 5 (perfbench's stream workload, jobs grouped by SQL
-  * execution id). The waves' longest path is scores → clean → neardup
-  * → funnel. Two rules keep the counts there: a stage frame is not
-  * sorted (under AQE a sort costs a sampling job and a shuffle job),
-  * and the intra-doc cut is a per-row kernel with no shuffle.
+  * A micro-batch of 10 documents runs 17 Spark jobs: the empty-batch
+  * check 1, scores 1, clean 2, spans 3, neardup 2, postings 3, doclen 2
+  * and funnel 3 (perfbench's stream workload, jobs grouped by SQL
+  * execution id). The waves' longest path is scores → clean → spans
+  * → postings or funnel. Three rules keep the counts there: a stage
+  * frame is not sorted (under AQE a sort costs a sampling job and a
+  * shuffle job), the intra-doc cut is a per-row kernel with no shuffle,
+  * and a probe of frozen state broadcasts the BATCH side (the near-dup
+  * bands, the span grams) and streams the stored rows through it, so
+  * no corpus frame is collected to the driver and the near-dup probe
+  * does not shuffle.
   *
-  * Every stage touches O(batch) text plus frozen at-rest state only, so a
-  * micro-batch costs the same whether the corpus behind the
-  * gram/signature tables is 1 GB or 100 TB. Per-doc outputs depend only
-  * on the doc and frozen state, so the pipeline is batch-split-invariant
-  * by construction, and a checkpoint-replayed batch REPLACES its own
-  * partitions before reading them back ([[BatchSink]]'s exactly-once
-  * discipline, applied to a seven-sink DAG). StreamingAnalyticsSpec
-  * proves a two-micro-batch run (with a mid-run restart replay) equals
-  * the one-shot batch chain.
+  * The funnel counts by identity, under one precondition: `doc_id` is
+  * unique within a micro-batch. Then `scores` (one row per doc) gives
+  * n_raw and n_quality, and, since the hits are signed from `clean`
+  * (hits ⊆ clean), n_near_dup = |clean| − |survivors|.
+  *
+  * Every stage touches O(batch) text plus frozen at-rest state. The
+  * driver handles O(batch) rows per micro-batch whatever the corpus
+  * size, but executors still scan the frozen gram and signature frames
+  * in full on every batch, so executor work grows with the corpus. A
+  * layout that prunes those scans to the keys a batch touches
+  * (hash-sharded, or a Bloom pre-filter) is future work. Per-doc
+  * outputs depend only on the doc and frozen state, so the pipeline is
+  * batch-split-invariant by construction, and a checkpoint-replayed
+  * batch REPLACES its own partitions before reading them back
+  * ([[BatchSink]]'s exactly-once discipline, applied to a seven-sink
+  * DAG). StreamingAnalyticsSpec proves a two-micro-batch run (with a
+  * mid-run restart replay) equals the one-shot batch chain.
   */
 object IngestPipeline {
 
@@ -86,7 +98,10 @@ object IngestPipeline {
     * frame per pair, in the same order. Each later wave is built from
     * the barrier's return values, so a durable barrier cuts the lineage.
     * The waves are {scores}, {clean}, {spans, neardup} and
-    * {postings, doclen, funnel}: no frame reads a sibling of its wave. */
+    * {postings, doclen, funnel}: no frame reads a sibling of its wave.
+    * Precondition: `doc_id` is unique within `batch`. The funnel counts
+    * by identity on it (one `scores` row per doc; hits ⊆ clean, as the
+    * hits are signed from `clean`). */
   private def stagesOf(batch: DataFrame, corpusGrams: DataFrame,
                        corpusSig: DataFrame, cfg: Config)(
       barrier: Seq[(DataFrame, String)] => Seq[DataFrame]): Stages = {
@@ -113,6 +128,7 @@ object IngestPipeline {
     // stage monotone vs the previous one. ONE aggregate over a union of
     // per-stage projections: each branch puts 1 (a count) or the summed
     // column into its own funnel column and null into the others.
+    // Counts are by identity (the precondition above).
     def counted(df: DataFrame, cols: (String, Column)*): DataFrame = {
       val own = cols.toMap
       df.select(FunnelCols.map(c =>
@@ -123,13 +139,12 @@ object IngestPipeline {
       graft.operators.CorpusOps.bm25PostingsOf(survivors) -> "postings",
       graft.operators.CorpusOps.bm25DoclenOf(survivors) -> "doclen",
       Seq(
-        counted(batch, "n_raw" -> lit(1L)),
-        counted(kept, "n_quality" -> lit(1L)),
+        counted(scores, "n_raw" -> lit(1L),
+          "n_quality" -> when(col("score") >= cfg.scoreFloor, 1L).otherwise(0L)),
         counted(clean, "tokens_raw" -> col("n_tokens"),
-          "tokens_after_cut" -> col("kept_tokens")),
+          "tokens_after_cut" -> col("kept_tokens"), "n_near_dup" -> lit(1L)),
         counted(spans, "corpus_dup_tokens" -> col("dup_tokens")),
-        counted(hits.select("batch_id").distinct(), "n_near_dup" -> lit(1L)),
-        counted(survivors, "n_indexed" -> lit(1L))
+        counted(survivors, "n_near_dup" -> lit(-1L), "n_indexed" -> lit(1L))
       ).reduce(_ unionByName _).agg(sums.head, sums.tail: _*) -> "funnel"))
     Stages(scores, clean, spans, hits, postings, doclen, funnel)
   }

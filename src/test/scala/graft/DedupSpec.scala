@@ -140,6 +140,65 @@ class DedupSpec extends SparkSpec {
       pairs.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet)
   }
 
+  test("incremental LSH pairs equal the dropDuplicates + join-back reference") {
+    val sq = spark
+    import sq.implicits._
+    val (numHashes, bands, tau) = (8, 4, 0.5)
+    val rnd = new scala.util.Random(20261020L)
+    // signatures over a 3-value alphabet: a band (two values) collides
+    // with p = 1/9, so pairs share 0, 1, 2 or several bands; shingle sets
+    // over a 6-value alphabet make Jaccards of exactly tau common
+    def sig() = Seq.fill(numHashes)(rnd.nextInt(3).toLong)
+    def hs() = rnd.shuffle((0L until 6L).toList).take(1 + rnd.nextInt(5))
+    val corpus = (1L to 40L).map(id => (id, hs(), sig()))
+    val batch = (101L to 130L).map(id => (id, hs(), sig()))
+    // planted: batch 201 shares exactly band 0 with corpus 51, all four
+    // bands with corpus 52, bands 1 and 3 with corpus 53, none with 54;
+    // its Jaccard with each is exactly tau (|∩| 2, |∪| 4)
+    val s201 = Seq(10L, 11L, 12L, 13L, 14L, 15L, 16L, 17L)
+    val planted = Seq((201L, List(1L, 2L, 3L), s201))
+    val plantedCorpus = Seq(
+      (51L, List(2L, 3L, 4L), s201.take(2) ++ Seq.fill(6)(90L)),
+      (52L, List(3L, 2L, 4L), s201),
+      (53L, List(4L, 3L, 2L), Seq(91L, 91L) ++ s201.slice(2, 4) ++
+        Seq(92L, 92L) ++ s201.slice(6, 8)),
+      (54L, List(2L, 3L, 4L), Seq.fill(8)(93L)))
+    def parquet(rows: Seq[(Long, List[Long], Seq[Long])]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-lsh-prop").toString
+      rows.toDF("id", "hs", "sig").write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
+    }
+    val c = parquet(corpus ++ plantedCorpus)
+    val b = parquet(batch ++ planted)
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.select("batch_id", "corpus_id", "jaccard").collect().toSeq
+        .map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    def same(cs: org.apache.spark.sql.DataFrame,
+             bs: org.apache.spark.sql.DataFrame, t: Double) = {
+      val got = multiset(Dedup.incrementalLshPairs(cs, bs, numHashes, bands, t))
+      assert(got === multiset(
+        DedupSpec.incrementalLshReference(cs, bs, numHashes, bands, t)))
+      got
+    }
+    // tau 0 keeps every candidate: each colliding pair exactly once
+    val all = same(c, b, 0.0)
+    assert(all.values.forall(_ == 1), "one row per candidate pair")
+    val hits = same(c, b, tau)
+    assert(hits.keySet.exists(_(2) == tau), "a Jaccard exactly at tau is kept")
+    assert(Seq(51L, 52L, 53L).forall(id => hits.contains(Seq(201L, id, tau))) &&
+      !all.keySet.exists(k => k(0) == 201L && k(1) == 54L))
+    // the generator must reach pairs sharing 1, 2 and all 4 bands
+    val sigs = (corpus ++ plantedCorpus ++ batch ++ planted)
+      .map(r => r._1 -> r._3.grouped(numHashes / bands).toSeq).toMap
+    val shared = all.keySet.map { k =>
+      val (x, y) = (sigs(k(0).asInstanceOf[Long]), sigs(k(1).asInstanceOf[Long]))
+      x.zip(y).count { case (p, q) => p == q }
+    }
+    assert(Set(1, 2, 4).subsetOf(shared), s"shared-band counts reached: $shared")
+    // empty sides
+    assert(same(c, b.limit(0), tau).isEmpty && same(c.limit(0), b, tau).isEmpty)
+  }
+
   test("pairs are oriented id_a < id_b and never self-paired") {
     val d = docsOf(
       5L -> "one two three four five six seven",
@@ -973,6 +1032,41 @@ class DedupSpec extends SparkSpec {
 }
 
 object DedupSpec {
+  /** Incremental near-dedup as it was before the first-matching-band
+    * filter, kept as [[Dedup.incrementalLshPairs]]'s reference: both
+    * sides exploded to one row per band key, joined on the key,
+    * `dropDuplicates` on the id pair, then the sorted shingle sets joined
+    * back on each id for the exact Jaccard. */
+  def incrementalLshReference(
+      corpusSig: org.apache.spark.sql.DataFrame,
+      batchSig: org.apache.spark.sql.DataFrame, numHashes: Int, bands: Int,
+      tau: Double): org.apache.spark.sql.DataFrame = {
+    graft.functions.GraftFunctions.register(corpusSig.sparkSession)
+    val rows = numHashes / bands
+    val bk = (0 until bands).map { b =>
+      val slice = (0 until rows)
+        .map(r => s"CAST(element_at(sig, ${b * rows + r + 1}) AS STRING)")
+        .mkString(", ',', ")
+      s"concat('b$b:', $slice)"
+    }.mkString(", ")
+    val bb = batchSig.selectExpr("id", s"explode(array($bk)) AS bk")
+      .select(col("id").as("batch_id"), col("bk"))
+    val cb = corpusSig.selectExpr("id", s"explode(array($bk)) AS bk")
+      .select(col("id").as("corpus_id"), col("bk").as("bk_c"))
+    bb.join(cb, col("bk") === col("bk_c"))
+      .drop("bk", "bk_c")
+      .dropDuplicates("batch_id", "corpus_id")
+      .join(batchSig.select(col("id").as("batch_id"),
+          sort_array(col("hs")).as("hs_a")), "batch_id")
+      .join(corpusSig.select(col("id").as("corpus_id"),
+          sort_array(col("hs")).as("hs_b")), "corpus_id")
+      .withColumn("inter", expr("sorted_intersect_count(hs_a, hs_b)"))
+      .withColumn("jaccard",
+        expr("CAST(inter AS DOUBLE) / (size(hs_a) + size(hs_b) - inter)"))
+      .filter(col("jaccard") >= tau)
+      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+  }
+
   /** The intra-doc cut as the gram self-join + island union it was
     * before the fused kernel, kept as the kernel's reference: grams
     * grouped by (doc, hash), every non-first occurrence a [pos,

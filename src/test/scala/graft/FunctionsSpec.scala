@@ -71,6 +71,29 @@ class FunctionsSpec extends SparkSpec {
       assert(r.getInt(1) === 2 && r.getInt(2) === 3)
       assert(r.getInt(3) === 1 && r.getInt(4) === 4)
       assert(r.getBoolean(5) && r.getBoolean(6) && r.getBoolean(7))
+      val k = s2.sql(
+        """SELECT
+          |  size(winnow_fps('abcdefghij', 3, 2)) > 0 AS wf,
+          |  size(word_gram_hashes(array('a', 'b', 'c'), 2)) AS wg,
+          |  sorted_intersect_count(array(CAST(1 AS BIGINT), 2, 3),
+          |    array(CAST(2 AS BIGINT), 3, 4)) AS si,
+          |  intradoc_cut(array('a', 'b', 'a', 'b'), 1).clean_text AS ic""".stripMargin).head
+      assert(k.getBoolean(0) && k.getInt(1) === 2 && k.getInt(2) === 2)
+      assert(k.getString(3) === "a b")
+      // both registration paths read one table: the extension injects
+      // exactly the native functions register() adds ("built-in" source;
+      // the sketch UDAF families register as Scala UDFs)
+      def names(s: SparkSession) =
+        s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+      val vanilla = shared.newSession()
+      val builtin = names(vanilla)
+      graft.functions.GraftFunctions.register(vanilla)
+      val registered = (names(vanilla) -- builtin).filter(n =>
+        vanilla.sessionState.functionRegistry
+          .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(n))
+          .exists(_.getSource == "built-in"))
+      assert(names(s2) -- builtin === registered)
+      assert(registered.size === 13)
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)

@@ -1322,6 +1322,87 @@ class StreamingAnalyticsSpec extends SparkSpec {
     graft.core.EngineCache.releaseAll()
   }
 
+  /** q190's funnel as the six-branch union it was before it counted by
+    * identity, kept as the funnel's reference: one branch each over the
+    * batch, the docs at or above the floor, clean, spans, the distinct
+    * hit ids and the survivors. */
+  private def funnelReference(batch: org.apache.spark.sql.DataFrame,
+                              st: graft.streaming.IngestPipeline.Stages,
+                              cfg: graft.streaming.IngestPipeline.Config)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
+    val funnelCols = Seq("n_raw", "n_quality", "tokens_raw",
+      "tokens_after_cut", "corpus_dup_tokens", "n_near_dup", "n_indexed")
+    def counted(df: org.apache.spark.sql.DataFrame,
+                cols: (String, Column)*) = {
+      val own = cols.toMap
+      df.select(funnelCols.map(c =>
+        own.getOrElse(c, lit(null)).cast("long").as(c)): _*)
+    }
+    val kept = batch.join(
+      st.scores.filter(col("score") >= cfg.scoreFloor).select("doc_id"),
+      "doc_id")
+    val survivors = st.clean
+      .select(col("doc_id"), col("clean_text").as("text"))
+      .join(st.hits.select(col("batch_id").as("doc_id")), Seq("doc_id"),
+        "left_anti")
+    val sums = funnelCols.map(c => coalesce(sum(c), lit(0L)).as(c))
+    Seq(
+      counted(batch, "n_raw" -> lit(1L)),
+      counted(kept, "n_quality" -> lit(1L)),
+      counted(st.clean, "tokens_raw" -> col("n_tokens"),
+        "tokens_after_cut" -> col("kept_tokens")),
+      counted(st.spans, "corpus_dup_tokens" -> col("dup_tokens")),
+      counted(st.hits.select("batch_id").distinct(), "n_near_dup" -> lit(1L)),
+      counted(survivors, "n_indexed" -> lit(1L))
+    ).reduce(_ unionByName _).agg(sums.head, sums.tail: _*)
+  }
+
+  test("ingest funnel counted by identity equals the six-branch reference") {
+    val sq = spark
+    import sq.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.operators.LlmQueries
+    val fx = ingestFixture()
+    def run(docs: Seq[(Long, String, String, Long)], floor: Double, what: String) = {
+      val batch = docs.toDF("doc_id", "text", "lang", "n_chars")
+      val cfg = fx.cfg(floor)
+      val st = graft.streaming.IngestPipeline.chainOf(batch, fx.grams, fx.sig, cfg)
+      val f = st.funnel.collect().toSeq
+      assert(f === funnelReference(batch, st, cfg).collect().toSeq, what)
+      (st, f.head)
+    }
+    def n(r: org.apache.spark.sql.Row, c: String) = r.getAs[Long](c)
+    // below-floor docs: a floor at the batch's 40th-percentile score
+    val scores = graft.operators.StatsOps.scoreWithWeights(
+        fx.docs.toDF("doc_id", "text", "lang", "n_chars"), fx.weights)
+      .select("score").as[Double].collect().sorted
+    val (_, below) = run(fx.docs, scores(scores.length * 2 / 5), "below-floor docs")
+    assert(n(below, "n_quality") > 0 && n(below, "n_quality") < n(below, "n_raw"))
+    // a null text beside ordinary docs
+    val (_, withNull) = run(fx.docs :+ ((9000001L, null, "en", 0L)), 0.0, "a null text")
+    assert(n(withNull, "n_raw") === fx.docs.length + 1)
+    // every doc a near-dup: corpus docs under fresh ids, kept to the ones
+    // the probe hits (a cut text or a short doc may miss)
+    val copies = graft.core.Tables.load(spark, sfDir, "documents")
+      .filter(col("source") =!= LlmQueries.BatchSource)
+      .select(col("doc_id") + 8000000L, col("text"), col("lang"), col("n_chars"))
+      .as[(Long, String, String, Long)].collect().toSeq.take(40)
+    val (first, _) = run(copies, 0.0, "corpus copies")
+    val hit = first.hits.select("batch_id").as[Long].collect().toSet
+    val (_, allDup) = run(copies.filter(d => hit(d._1)), 0.0, "every doc a near-dup")
+    assert(hit.nonEmpty && n(allDup, "n_near_dup") === hit.size &&
+      n(allDup, "n_indexed") === 0L)
+    // no near-dup: text the corpus has never seen
+    val fresh = (1 to 6).map(i => (9100000L + i,
+      (1 to 30).map(j => s"fresh$i-$j").mkString(" "), "en", 300L))
+    val (none, noDup) = run(fresh, 0.0, "no near-dup")
+    assert(none.hits.isEmpty && n(noDup, "n_near_dup") === 0L &&
+      n(noDup, "n_indexed") === fresh.length)
+    graft.core.EngineCache.releaseAll()
+  }
+
   test("ingest postings and doclen scan their parents' landed output, not the stream") {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.QueryExecution
@@ -1331,6 +1412,7 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec,
       SparkPlan}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
       Exchange}
     import org.scalatest.concurrent.Eventually._
@@ -1408,6 +1490,27 @@ class StreamingAnalyticsSpec extends SparkSpec {
         case _ => false
       }, s"$stage must not aggregate the hits scan:\n$plan")
     }
+    // the probes of frozen state build on the batch: neardup does not
+    // shuffle, and every broadcast in neardup and spans is built from the
+    // landed clean rows alone, never from the in-memory corpus frames
+    eventually(timeout(30.seconds)) {
+      assert(plans.containsKey("neardup/batch_run=0"))
+    }
+    val neardupPlan = plans.get("neardup/batch_run=0")
+    assert(!planNodes(neardupPlan).exists {
+      case _: BroadcastExchangeLike => false
+      case _: Exchange => true
+      case _ => false
+    }, s"neardup must not shuffle:\n$neardupPlan")
+    Seq("neardup" -> neardupPlan, "spans" -> spansPlan).foreach { case (stage, plan) =>
+      val builds = planNodes(plan).collect { case b: BroadcastExchangeLike => b }
+      assert(builds.nonEmpty, s"$stage must broadcast its batch side:\n$plan")
+      builds.foreach { b =>
+        assert(!planNodes(b).exists(_.isInstanceOf[InMemoryTableScanExec]) &&
+          dirsScanned(b) == Set("clean/batch_run=0"),
+          s"$stage must broadcast only the batch's landed rows:\n$b")
+      }
+    }
     graft.core.EngineCache.releaseAll()
   }
 
@@ -1471,6 +1574,15 @@ class StreamingAnalyticsSpec extends SparkSpec {
       .collect().map(key).toSet
     assert(got == want)
     assert(want.nonEmpty, "fixture surprise: no batch-vs-corpus span overlap")
+    // the stored set streams through the batch grams' broadcast with an
+    // inner join: a stored frame that repeats every ghash repeats spans
+    // inside their islands and leaves the profile as it is
+    def profile(grams: org.apache.spark.sql.DataFrame) =
+      LlmQueries.spanIncrementOf(batchDocs.toSeq.toDF("doc_id", "text"), grams)
+        .collect().toSeq.map(key).groupBy(identity).view.mapValues(_.size).toMap
+    val once = profile(cg)
+    assert(once.keySet == want && once.values.forall(_ == 1))
+    assert(profile(cg.unionByName(cg)) == once)
   }
 
   test("streaming intra-doc cut equals the batch cut, split-invariant") {
