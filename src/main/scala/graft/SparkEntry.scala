@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{AnalyticsOps, CoreRelational, CorpusFilterOps, CorpusOps, LlmQueries, Scalars, ScaleOps, StatsOps, Windows}
+import graft.functions.GraftFunctions
 import graft.sources.{Baldr, Formats}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -16,12 +17,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreRelational.aggSummary(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each entry
+    * first installs the graft functions its session lacks, so a session
+    * built without [[graft.core.GraftSession.tune]] works too; on one
+    * built with it, that is 41 lookups and no write. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreRelational.queries ++ Windows.queries ++ Scalars.queries ++
+    (CoreRelational.queries ++ Windows.queries ++ Scalars.queries ++
       LlmQueries.queries ++ Formats.queries ++ Baldr.queries ++ CorpusOps.queries ++
       ScaleOps.queries ++ AnalyticsOps.queries ++ StatsOps.queries ++
-      CorpusFilterOps.queries
+      CorpusFilterOps.queries).map { case (name, query) =>
+      name -> { (spark: SparkSession, sfDir: String) =>
+        GraftFunctions.register(spark)
+        query(spark, sfDir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys (approx sketches, non-SQL ops)

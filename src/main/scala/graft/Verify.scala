@@ -16,7 +16,9 @@ import java.util.concurrent.{Executors, TimeUnit}
   * query stalls ONE worker, not the whole loop (the failure that emptied
   * round 4's artifact). Safe because every query registers identical
   * temp views (same sfDir → same parquet), no operator mutates session
-  * conf, and outputs go to disjoint directories. Each query still gets a
+  * conf, the session carries every graft function from its build (so no
+  * query writes the function registry while others run), and outputs go
+  * to disjoint directories. Each query still gets a
   * watchdog (SPARK_GRAFT_QUERY_TIMEOUT, default 120 s — a scheduled
   * cancelJobGroup) and the whole run a deadline
   * (SPARK_GRAFT_VERIFY_DEADLINE, default 900 s) after which remaining

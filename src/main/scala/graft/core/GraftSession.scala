@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import graft.functions.GraftFunctions
 
 /** SparkSession factory for the engine.
   *
@@ -9,12 +10,18 @@ import org.apache.spark.sql.SparkSession
   * session builder with scale-aware defaults. Local mode is for tests only —
   * every knob here is chosen to behave identically on a multi-executor
   * cluster (AQE, shuffle partitioning, broadcast threshold).
+  *
+  * Every session built here carries all of
+  * [[graft.functions.GraftFunctions.table]] from the moment it exists, as
+  * do its `newSession()`s and the session clones `foreachBatch` bodies
+  * run in: nothing registers a function per query.
   */
 object GraftSession {
 
   /** Shared tuning applied to any builder (local or cluster). */
   def tune(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
+    b.withExtensions(GraftFunctions.inject)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       // AQE: runtime coalescing of small shuffle partitions + skew-join
       // splitting. At 100 TB this is what keeps a static partition count

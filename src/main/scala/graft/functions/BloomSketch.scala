@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** Mergeable MEMBERSHIP sketches as first-class columns — the fourth
   * sketch-at-rest next to cardinality ([[HllSketch]]), quantiles
@@ -103,12 +103,10 @@ object BloomSketch {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Register `bloom_build` / `bloom_merge` / `bloom_contains`.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("bloom_build", udaf(Build, Encoders.scalaLong))
-    spark.udf.register("bloom_merge", udaf(Merge, Encoders.BINARY))
-    spark.udf.register("bloom_contains",
-      (sk: Array[Byte], k: java.lang.Long) => k != null && contains(sk, k))
-  }
+  /** This family's SQL functions, for [[GraftFunctions.table]]. */
+  val functions: Seq[(String, UserDefinedFunction)] = Seq(
+    "bloom_build" -> udaf(Build, Encoders.scalaLong),
+    "bloom_merge" -> udaf(Merge, Encoders.BINARY),
+    "bloom_contains" -> udf((sk: Array[Byte], k: java.lang.Long) =>
+      k != null && contains(sk, k)))
 }

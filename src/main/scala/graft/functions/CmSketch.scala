@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** Mergeable FREQUENCY sketches as first-class columns — the third leg
   * of the sketch-at-rest story next to [[HllSketch]] (cardinality) and
@@ -170,14 +170,12 @@ object CmSketch {
     best
   }
 
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("cms_build", udaf(Build, Encoders.scalaLong))
-    spark.udf.register("cms_merge", udaf(Merge, Encoders.BINARY))
-    spark.udf.register("cms_est", (sk: Array[Byte], k: Long) => estimate(sk, k))
-    spark.udf.register("cms_count", (sk: Array[Byte]) => count(sk))
-    spark.udf.register("cms_diff",
-      (a: Array[Byte], b: Array[Byte]) => diffSketches(a, b))
-    spark.udf.register("cms_join_est",
-      (a: Array[Byte], b: Array[Byte]) => joinEstimate(a, b))
-  }
+  /** This family's SQL functions, for [[GraftFunctions.table]]. */
+  val functions: Seq[(String, UserDefinedFunction)] = Seq(
+    "cms_build" -> udaf(Build, Encoders.scalaLong),
+    "cms_merge" -> udaf(Merge, Encoders.BINARY),
+    "cms_est" -> udf((sk: Array[Byte], k: Long) => estimate(sk, k)),
+    "cms_count" -> udf((sk: Array[Byte]) => count(sk)),
+    "cms_diff" -> udf((a: Array[Byte], b: Array[Byte]) => diffSketches(a, b)),
+    "cms_join_est" -> udf((a: Array[Byte], b: Array[Byte]) => joinEstimate(a, b)))
 }

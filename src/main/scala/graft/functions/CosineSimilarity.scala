@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -111,68 +110,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration for the engine's native functions. Idempotent; called by
-  * any operator that uses them so the functions exist on whatever session
-  * the caller brought (driver sessions included). */
-object GraftFunctions {
-
-  private def intArg(e: Expression): Int = e.eval().asInstanceOf[Int]
-
-  /** Every native Catalyst function as (name, usage, builder): the one
-    * list that both [[register]] and [[graft.GraftExtensions]] read, so
-    * the two registration paths cannot drift apart. */
-  val natives: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("cosine_sim", "cosine_sim(array<float>, array<float>) -> double",
-      exprs => CosineSimilarity(exprs(0), exprs(1))),
-    ("l2_sq", "l2_sq(array<float>, array<float>) -> double",
-      exprs => L2Sq(exprs(0), exprs(1))),
-    ("md5_i64", "md5_i64(array<string>[, prefix]) -> array<bigint>", {
-      case Seq(e) => Md5I64Array(e)
-      case Seq(e, p) => Md5I64Array(e,
-        p.eval().asInstanceOf[org.apache.spark.unsafe.types.UTF8String].toString)
-    }),
-    ("minhash_sig", "minhash_sig(array<bigint>, k) -> array<bigint>",
-      exprs => MinhashSig(exprs(0), intArg(exprs(1)))),
-    ("simhash", "simhash(array<bigint>, bits) -> bigint",
-      exprs => Simhash(exprs(0), intArg(exprs(1)))),
-    ("simhash16", "simhash16(array<bigint>) -> bigint",
-      exprs => Simhash(exprs(0), 16)),
-    ("srp_sig", "srp_sig(array<float>, bits) -> bigint",
-      exprs => SrpSig(exprs(0), intArg(exprs(1)))),
-    ("word_shingles", "word_shingles(array<string>, n) -> array<string>",
-      exprs => WordShingles(exprs(0), intArg(exprs(1)))),
-    ("char_shingles", "char_shingles(string, n) -> array<string>",
-      exprs => CharShingles(exprs(0), intArg(exprs(1)))),
-    ("winnow_fps", "winnow_fps(string, k, w) -> array<bigint>",
-      exprs => WinnowFps(exprs(0), intArg(exprs(1)), intArg(exprs(2)))),
-    ("word_gram_hashes", "word_gram_hashes(array<string>, k) -> array<bigint>",
-      exprs => WordGramHashes(exprs(0), intArg(exprs(1)))),
-    ("intradoc_cut", "intradoc_cut(array<string>, k) -> " +
-      "struct<n_tokens:int, kept_tokens:bigint, clean_text:string>",
-      exprs => IntradocCut(exprs(0), intArg(exprs(1)))),
-    ("sorted_intersect_count",
-      "sorted_intersect_count(array<bigint>, array<bigint>) -> int",
-      exprs => SortedIntersectCount(exprs(0), exprs(1))))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // Per-function idempotence: each name registers only if absent, so a
-    // partially-registered session self-heals and repeated register()
-    // calls emit no "function X replaced" registry warnings. (A
-    // same-named FOREIGN temp function is left in place — same-name
-    // collisions are the caller's to resolve either way; clobbering
-    // theirs silently would be worse.)
-    natives.foreach { case (name, _, builder) =>
-      if (!reg.functionExists(
-          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    // the sketch-column UDAF/UDF families (each registrar is idempotent)
-    HllSketch.register(spark)
-    DdSketch.register(spark)
-    CmSketch.register(spark)
-    BloomSketch.register(spark)
-  }
 }

@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** COUNTING Bloom filter (Fan, Cao, Almeida, Broder 2000, "Summary
   * Cache", §4.3) — the deletable sibling of [[BloomSketch]], closing
@@ -145,14 +145,11 @@ object CountingBloom {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Register `cbloom_build` / `cbloom_merge` / `cbloom_diff` /
-    * `cbloom_contains`. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("cbloom_build", udaf(Build, Encoders.scalaLong))
-    spark.udf.register("cbloom_merge", udaf(Merge, Encoders.BINARY))
-    spark.udf.register("cbloom_diff",
-      (a: Array[Byte], b: Array[Byte]) => diffSketches(a, b))
-    spark.udf.register("cbloom_contains",
-      (sk: Array[Byte], k: java.lang.Long) => k != null && contains(sk, k))
-  }
+  /** This family's SQL functions, for [[GraftFunctions.table]]. */
+  val functions: Seq[(String, UserDefinedFunction)] = Seq(
+    "cbloom_build" -> udaf(Build, Encoders.scalaLong),
+    "cbloom_merge" -> udaf(Merge, Encoders.BINARY),
+    "cbloom_diff" -> udf((a: Array[Byte], b: Array[Byte]) => diffSketches(a, b)),
+    "cbloom_contains" -> udf((sk: Array[Byte], k: java.lang.Long) =>
+      k != null && contains(sk, k)))
 }

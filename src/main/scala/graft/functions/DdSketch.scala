@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** Mergeable QUANTILE sketches as first-class columns — the quantile
   * twin of [[HllSketch]]'s cardinality lifecycle.
@@ -158,14 +158,11 @@ object DdSketch {
     def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  /** Register `ddq_build` / `ddq_merge` / `ddq_quantile` / `ddq_count`.
-    * Idempotent — safe to call from every query that needs them. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("ddq_build", udaf(Build, Encoders.scalaLong))
-    spark.udf.register("ddq_merge", udaf(Merge, Encoders.BINARY))
-    spark.udf.register("ddq_quantile", (sk: Array[Byte], q: Double) => quantile(sk, q))
-    spark.udf.register("ddq_count", (sk: Array[Byte]) => count(sk))
-    spark.udf.register("ddq_diff",
-      (a: Array[Byte], b: Array[Byte]) => diffSketches(a, b))
-  }
+  /** This family's SQL functions, for [[GraftFunctions.table]]. */
+  val functions: Seq[(String, UserDefinedFunction)] = Seq(
+    "ddq_build" -> udaf(Build, Encoders.scalaLong),
+    "ddq_merge" -> udaf(Merge, Encoders.BINARY),
+    "ddq_quantile" -> udf((sk: Array[Byte], q: Double) => quantile(sk, q)),
+    "ddq_count" -> udf((sk: Array[Byte]) => count(sk)),
+    "ddq_diff" -> udf((a: Array[Byte], b: Array[Byte]) => diffSketches(a, b)))
 }

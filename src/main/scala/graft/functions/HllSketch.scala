@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** Mergeable HyperLogLog sketches as first-class columns.
   *
@@ -133,13 +133,10 @@ object HllSketch {
   def mergeSketches(a: Array[Byte], b: Array[Byte]): Array[Byte] =
     maxMerge(java.util.Arrays.copyOf(a, M), b)
 
-  /** Register `hll_build` / `hll_merge` / `hll_merge_est` / `hll_est` on
-    * the session. Idempotent — safe to call from every query that needs
-    * them. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("hll_build", udaf(Build, Encoders.scalaLong))
-    spark.udf.register("hll_merge", udaf(Merge, Encoders.BINARY))
-    spark.udf.register("hll_merge_est", udaf(MergeEst, Encoders.BINARY))
-    spark.udf.register("hll_est", (b: Array[Byte]) => estimate(b))
-  }
+  /** This family's SQL functions, for [[GraftFunctions.table]]. */
+  val functions: Seq[(String, UserDefinedFunction)] = Seq(
+    "hll_build" -> udaf(Build, Encoders.scalaLong),
+    "hll_merge" -> udaf(Merge, Encoders.BINARY),
+    "hll_merge_est" -> udaf(MergeEst, Encoders.BINARY),
+    "hll_est" -> udf((b: Array[Byte]) => estimate(b)))
 }

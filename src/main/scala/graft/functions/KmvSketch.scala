@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.{udaf, udf}
 
 /** Mergeable KMV (k-minimum-values / bottom-k theta) sketches — the
   * SET-EXPRESSION cardinality family HLL structurally lacks.
@@ -209,15 +209,12 @@ object KmvSketch {
     def outputEncoder: Encoder[Double] = Encoders.scalaDouble
   }
 
-  /** Register the KMV family on the session. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("kmv_build", udaf(Build, Encoders.scalaLong))
-    spark.udf.register("kmv_merge", udaf(Merge, Encoders.BINARY))
-    spark.udf.register("kmv_merge_est", udaf(MergeEst, Encoders.BINARY))
-    spark.udf.register("kmv_est", (b: Array[Byte]) => estimate(b))
-    spark.udf.register("kmv_intersect_est",
-      (a: Array[Byte], b: Array[Byte]) => intersectEst(a, b))
-    spark.udf.register("kmv_diff_est",
-      (a: Array[Byte], b: Array[Byte]) => diffEst(a, b))
-  }
+  /** This family's SQL functions, for [[GraftFunctions.table]]. */
+  val functions: Seq[(String, UserDefinedFunction)] = Seq(
+    "kmv_build" -> udaf(Build, Encoders.scalaLong),
+    "kmv_merge" -> udaf(Merge, Encoders.BINARY),
+    "kmv_merge_est" -> udaf(MergeEst, Encoders.BINARY),
+    "kmv_est" -> udf((b: Array[Byte]) => estimate(b)),
+    "kmv_intersect_est" -> udf((a: Array[Byte], b: Array[Byte]) => intersectEst(a, b)),
+    "kmv_diff_est" -> udf((a: Array[Byte], b: Array[Byte]) => diffEst(a, b)))
 }

@@ -29,7 +29,7 @@ import graft.core.Determinism.xhashSql
   */
 object Dedup {
 
-  import graft.functions.{GraftFunctions, HashKernels}
+  import graft.functions.HashKernels
 
   /** DuckDB form of the int64 shingle-hash array. */
   private def hsSql(sh: String): String =
@@ -79,7 +79,6 @@ object Dedup {
 
   private def bandedSignatures(sh0: DataFrame, numHashes: Int,
                                bands: Int): (DataFrame, String) = {
-    GraftFunctions.register(sh0.sparkSession)
     val sh = sh0.filter(size(col("sh")) > 0)
     val sig = sh.selectExpr("id", "md5_i64(sh) AS hs")
       .selectExpr("id", "hs", s"minhash_sig(hs, $numHashes) AS sig")
@@ -95,7 +94,6 @@ object Dedup {
     * bit-identical to a from-scratch run. */
   def signatureFrame(docs: DataFrame, idCol: String, textCol: String,
                      shingleN: Int, numHashes: Int): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.selectExpr(s"$idCol AS id", s"${wordsExpr(textCol)} AS w")
       .selectExpr("id", s"word_shingles(w, $shingleN) AS sh")
       .filter(size(col("sh")) > 0)
@@ -126,7 +124,6 @@ object Dedup {
     * per call. */
   def incrementalLshPairs(corpusSig: DataFrame, batchSig: DataFrame,
                           numHashes: Int, bands: Int, tau: Double): DataFrame = {
-    GraftFunctions.register(corpusSig.sparkSession)
     val rows = numHashes / bands
     def banded(sig: DataFrame, s: String): DataFrame =
       sig.selectExpr(s"id AS id_$s", s"hs AS hs_$s", s"sig AS sig_$s",
@@ -337,7 +334,6 @@ object Dedup {
   def minhashEstimatePairs(docs: DataFrame, idCol: String, textCol: String,
                            shingleN: Int, numHashes: Int, bands: Int,
                            tau: Double): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val sh = docs.selectExpr(s"$idCol AS id", s"${wordsExpr(textCol)} AS w")
       .selectExpr("id", s"word_shingles(w, $shingleN) AS sh")
     val (sig, bandKeys) = bandedSignatures(sh, numHashes, bands)
@@ -361,7 +357,6 @@ object Dedup {
   def minhashLshPairs(docs: DataFrame, idCol: String, textCol: String,
                       shingleN: Int, numHashes: Int, bands: Int,
                       tau: Double): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val sh = docs.selectExpr(s"$idCol AS id", s"${wordsExpr(textCol)} AS w")
       .selectExpr("id", s"word_shingles(w, $shingleN) AS sh")
     val (sig, bandKeys) = bandedSignatures(sh, numHashes, bands)
@@ -405,7 +400,6 @@ object Dedup {
     * equality on band keys, and the decile is a floor. */
   def lshCalibration(docs: DataFrame, idCol: String, textCol: String,
                      shingleN: Int, numHashes: Int, bands: Int): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val rows = numHashes / bands
     val bksA = bandKeyExprSeq(numHashes, bands, "sig_a")
     val bksB = bandKeyExprSeq(numHashes, bands, "sig_b")
@@ -510,7 +504,6 @@ object Dedup {
     * word shingles miss). */
   def charNgramPairs(docs: DataFrame, idCol: String, textCol: String,
                      n: Int, numHashes: Int, bands: Int, tau: Double): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     val sh = docs.selectExpr(s"$idCol AS id",
       s"char_shingles($textCol, $n) AS sh")
     val (sig, bandKeys) = bandedSignatures(sh, numHashes, bands)
@@ -537,7 +530,6 @@ object Dedup {
     * array. Integer arithmetic end-to-end → exact cross-engine. */
   def withSimhash(docs: DataFrame, idCol: String, textCol: String,
                   bits: Int = SimhashBits): DataFrame = {
-    GraftFunctions.register(docs.sparkSession)
     docs.selectExpr(s"$idCol AS id",
         s"md5_i64(${wordsExpr(textCol)}, 's99:') AS whs")
       .selectExpr("id", s"simhash(whs, $bits) AS sig")
@@ -638,7 +630,6 @@ object Dedup {
   def blockingAudit(docs0: DataFrame, idCol: String, textCol: String,
                     shingleN: Int, numHashes: Int, bands: Int,
                     maxHamming: Int, headWords: Int, tau: Double): DataFrame = {
-    GraftFunctions.register(docs0.sparkSession)
     val sig = signatureFrame(docs0, idCol, textCol, shingleN, numHashes)
       .transform(graft.core.EngineCache.persisted)
     val docs = docs0.selectExpr(s"$idCol AS id", s"$textCol AS text")

@@ -28,8 +28,8 @@ object Similarity {
     * rounded to 6dp via the cross-engine half-up (Determinism.dround).
     * Uses the native codegen'd [[graft.functions.CosineSimilarity]] kernel
     * (identical arithmetic order to [[cosineExprComposable]] — asserted in
-    * PlanSpec — so oracle hashes are unchanged). Callers must have run
-    * [[graft.functions.GraftFunctions.register]] on the session. */
+    * PlanSpec — so oracle hashes are unchanged). The session must carry
+    * [[graft.functions.GraftFunctions.table]]. */
   def cosineExpr(a: String, b: String): String =
     s"floor(cosine_sim($a, $b) * 1e6 + 0.5) / 1e6"
 
@@ -72,7 +72,6 @@ object Similarity {
     * every probes×corpus scored row first. Same total order
     * (cos DESC, cand_id ASC), identical output. */
   def bruteForceTopK(vectors: DataFrame, probeFilter: Column, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val probes = vectors.filter(probeFilter)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val corpus = vectors.select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
@@ -112,7 +111,6 @@ object Similarity {
     * partials, the exchange carries O(queries × partitions × k). */
   def filteredTopK(vectors: DataFrame, probeFilter: Column,
                    candWhere: String, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val probes = vectors.filter(probeFilter)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val corpus = vectors.filter(expr(candWhere))
@@ -153,7 +151,6 @@ object Similarity {
     * lives in the join, and the bounded top-k `Aggregator` still keeps
     * the exchange at O(probes × partitions × k). */
   def hardNegatives(vectors: DataFrame, probeFilter: Column, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val probes = vectors.filter(probeFilter)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("label").as("qlabel"))
@@ -185,7 +182,6 @@ object Similarity {
 
   /** IVF-style ANN: search only the probe's own coarse cell. */
   def ivfTopK(vectors: DataFrame, cellCol: String, probeFilter: Column, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val probes = vectors.filter(probeFilter)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col(cellCol).as("qcell"))
@@ -218,7 +214,6 @@ object Similarity {
   /** Near-duplicate pairs by embedding cosine within a blocking cell —
     * the embedding-space analog of LSH dedup. */
   def cosineNearDupPairs(vectors: DataFrame, cellCol: String, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val a = vectors.select(col("vec_id").as("id_a"), col("embedding").as("va"),
       col(cellCol).as("cell_a"))
     val b = vectors.select(col("vec_id").as("id_b"), col("embedding").as("vb"),
@@ -250,7 +245,6 @@ object Similarity {
     * signatures (persisted against the self-join recompute). */
   def srpCandidatePairs(vectors: DataFrame, bits: Int, bands: Int): DataFrame = {
     require(bits % bands == 0, s"bits $bits must divide into $bands bands")
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val rows = bits / bands
     val mask = (1L << rows) - 1
     val sig = vectors
@@ -330,7 +324,6 @@ object Similarity {
     * top-1 `Aggregator` (map-side partials), not a row_number window;
     * ties break toward the lower cell id. */
   def ivfAssign(vectors: DataFrame, cellCol: String): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val centArr = centroids(vectors, cellCol)
       .groupBy(col("cell"))
       .agg(expr("transform(array_sort(collect_list(struct(dim, centroid))), " +
@@ -386,7 +379,6 @@ object Similarity {
     * the oracle's (cos DESC, cell) ranking. */
   def kmeansLloyd(vectors: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds $rounds must be >= 1")
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val v = vectors.select(col("vec_id"), col("embedding"))
       .transform(graft.core.EngineCache.persisted)
     // r14 (q213's encoded-top-1 lesson applied to the assign step): the

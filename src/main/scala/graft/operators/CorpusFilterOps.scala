@@ -261,7 +261,6 @@ object CorpusFilterOps {
     // O(W) + an allocation per window), and the distinct stays ordered.
     // Values are property-asserted equal to the SQL form in DedupSpec;
     // the oracle keeps the window spelling, hash-green at two SFs.
-    graft.functions.GraftFunctions.register(docsF.sparkSession)
     docsF
       .filter(length(col("text")) >= WinK + WinW - 1)
       .select(col("doc_id"),

@@ -496,7 +496,6 @@ object CorpusOps {
 
   def hybridSearch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val sparse = bm25Search(spark, dir)
       .select(col("query_id"), col("doc_id"), col("rk").as("sparse_rk"))
     val e = embs(spark, dir)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Determinism._
 import graft.core.Tables
-import graft.functions.{GraftFunctions, TextFunctions}
+import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.llm.{Dedup, Multimodal, Packing, Similarity}
 

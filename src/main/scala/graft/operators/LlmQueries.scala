@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Determinism._
 import graft.core.Tables
-import graft.functions.{GraftFunctions, TextFunctions}
+import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.llm.{Dedup, Multimodal, Packing, Similarity}
 
@@ -481,7 +481,6 @@ object LlmQueries extends LlmAtRestOps with LlmSpanDedupOps
     * itself — a probe may only say "absent" when the key is truly
     * absent (no false negatives, structural: OR never clears a bit). */
   def bloomPersist(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomSketch.register(spark)
     val d = docs(spark, dir)
     graft.core.Warehouse.writeTable(
       d.filter(col("source") =!= BatchSource)
@@ -541,7 +540,6 @@ object LlmQueries extends LlmAtRestOps with LlmSpanDedupOps
   val CBloomDelRem = 3
 
   def cbloomDelete(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CountingBloom.register(spark)
     val d = docs(spark, dir)
     val suffix = dir.replaceAll("[^A-Za-z0-9._-]", "_").dropWhile(_ == '_')
     val stored = graft.core.Warehouse.tableOnce(spark,
@@ -602,7 +600,6 @@ object LlmQueries extends LlmAtRestOps with LlmSpanDedupOps
   val DecontamN = 4
   val EvalSource = "src19"
   def decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val d = docs(spark, dir)
     def shingled(df: DataFrame) = df
       .selectExpr("doc_id", s"${wordsExpr("text")} AS w")

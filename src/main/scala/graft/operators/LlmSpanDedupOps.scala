@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Determinism._
 import graft.core.Tables
-import graft.functions.{GraftFunctions, TextFunctions}
+import graft.functions.TextFunctions
 import graft.functions.TextFunctions._
 import graft.llm.{Dedup, Multimodal, Packing, Similarity}
 
@@ -200,7 +200,6 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
     * property-asserted bit-equal to the oracle's composable spelling in
     * DedupSpec. */
   private[operators] def gramsOf(docsDf: DataFrame): DataFrame = {
-    GraftFunctions.register(docsDf.sparkSession)
     docsDf.selectExpr("doc_id", s"${wordsExpr("text")} AS w")
       .selectExpr("doc_id", "CAST(size(w) AS INT) AS n_tokens",
         s"posexplode(word_gram_hashes(w, $SubdupK)) AS (p0, ghash)")
@@ -296,7 +295,6 @@ private[graft] trait LlmSpanDedupOps { this: LlmQueries.type =>
   /** [[intradocDedup]] over an arbitrary (doc_id, text) frame, unordered:
     * the spec and stream entry point. */
   def intradocDedupOf(docsDf: DataFrame): DataFrame = {
-    GraftFunctions.register(docsDf.sparkSession)
     docsDf
       .select(col("doc_id"),
         expr(s"intradoc_cut(${wordsExpr("text")}, $SubdupK)").as("cut"))

@@ -353,7 +353,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     ORDER BY vec_id, m"""
 
   def pqEncode(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     spark.sql(pqSparkSql(spark, dir))
   }
@@ -363,7 +362,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * rounds = 0 is the raw seed codebook. Spec hook proving the k-means
     * refinement actually lowers distortion. */
   def pqMeanError(spark: SparkSession, dir: String, rounds: Int): Double = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     spark.sql(s"WITH ${pqFlatBase(spark, dir, rounds)} " +
       "SELECT avg(CAST(d6 AS DOUBLE)) / 1e6 AS e FROM r WHERE rn = 1")
@@ -752,7 +750,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     ORDER BY probe_id, rk"""
 
   def pqAdcSearch(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     spark.sql(s"WITH ${pqFlatBase(spark, dir)} $pqAdcTail")
   }
@@ -788,7 +785,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   def annRecallAudit(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import graft.llm.Similarity
-    graft.functions.GraftFunctions.register(spark)
     val vecs = Tables.load(spark, dir, "embeddings")
     val k1 = LlmQueries.IvfK
     val tid = Thread.currentThread().getId
@@ -1494,7 +1490,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     ORDER BY probe_id, rk"""
 
   def ivfPqSearch(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     spark.sql(s"WITH ${pqFlatBase(spark, dir)} $pqIvfAdcTail")
   }
@@ -1535,7 +1530,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   }
 
   def ivfPqServe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val codesView = atRestCodesView(spark, dir)
     // d is restricted to probe rows before the join (predicate pushdown
@@ -1582,7 +1576,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   val AnnDelRem = 5
 
   def ivfPqDelete(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val codesView = atRestCodesView(spark, dir)
     val tombView = s"graft_ann_tomb_t${Thread.currentThread().getId}"
@@ -1633,7 +1626,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * one scan + rewrite of the code table (bytes ≈ PqM per vector),
     * never the embedding corpus. */
   def ivfPqPurge(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val prefix = "ivfpq_purge_"
     val codesView = atRestCodesView(spark, dir, prefix)
@@ -1787,7 +1779,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   }
 
   def annRerank(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val codesView = rerankCodesView(spark, dir)
     // the PQ base is restricted to PROBE rows: only their subvectors
@@ -1821,7 +1812,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * contract q145 establishes for the dedup signature table. */
   val PqBatchMod = 7 // batch = vec_id ≡ 7 (mod 10); probes (≡0 mod 100) stay in the base
   def ivfPqAppend(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val batchWhere = s"vec_id % 10 = $PqBatchMod"
     val tid = Thread.currentThread().getId
@@ -1887,7 +1877,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   val AnnUpdRem = 9 // disjoint from probes (0 mod 100) and q151's batch
 
   def ivfPqUpdate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val codesView = atRestCodesView(spark, dir, "ivfpq_updbase_")
     val pred = s"vec_id % $AnnUpdMod = $AnnUpdRem"
@@ -1933,7 +1922,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * appended codes are bit-compatible with the stored index. */
   def encodeWithFrozenCodebook(spark: SparkSession, dir: String,
                                batch: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // codebook builds lazily off the corpus table on first use
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val view = s"graft_pq_ingest_t${Thread.currentThread().getId}"
@@ -1975,7 +1963,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   }
 
   def jlDistortion(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     val (projSpark, _) = jlProjections
     spark.sql(s"""
@@ -2333,7 +2320,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   /** Core of q209 over any (vec_id, label, embedding) frame. */
   private[graft] def silhouetteOf(vecs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val v = vecs.transform(graft.core.EngineCache.persisted)
     val cents = v
       .select(col("label").as("cell"), posexplode(col("embedding")).as(Seq("dim", "x")))
@@ -2420,7 +2406,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   /** Core of q220 over any (vec_id, label, embedding) frame. */
   private[graft] def marginMineOf(vecs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(vecs.sparkSession)
     val e = vecs.select(col("vec_id"), col("label"), col("embedding"))
     val xs = e.filter(col("vec_id") % 2 === 0)
       .select(col("vec_id").as("xid"), col("label"), col("embedding").as("xv"))
@@ -2535,7 +2520,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     import org.apache.spark.sql.functions._
     import graft.llm.Similarity
     val spark = vecs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val v = vecs.transform(graft.core.EngineCache.persisted)
     val pool = Similarity.bruteForceTopK(v, expr(MmrProbeWhere), MmrPool)
       .select(col("query_id"), col("cand_id"),
@@ -2743,7 +2727,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     import org.apache.spark.sql.expressions.Window
     def P(df: DataFrame): DataFrame = graft.core.EngineCache.persisted(df)
     def B(df: DataFrame): DataFrame = graft.core.EngineCache.cut(df)._1
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     val v = P(vectors.select(col("vec_id"), col("embedding")))
     val probes = B(v.filter(probeWhere)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv")))
@@ -2911,11 +2894,11 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
   }
 
   /** (vec_id, sig) for an arbitrary embedding frame. Exposed to the
-    * geometry tooling ([[graft.ProfileNsw]]) so at-rest artifacts and
-    * verbs sign under the SAME geometry word. */
+    * geometry tooling (`graft.ProfileNsw`, since deleted; its source is at
+    * commit `7acfc0a`) so at-rest artifacts and verbs sign under the SAME
+    * geometry word. */
   private[graft] def nswSigsOf(vectors: DataFrame,
       geom: NswGeometry = NswGeometry.frozen): DataFrame = {
-    graft.functions.GraftFunctions.register(vectors.sparkSession)
     vectors.selectExpr("vec_id",
       s"srp_sig(embedding, ${geom.bits}) AS sig")
   }
@@ -3342,7 +3325,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     ORDER BY query_id, rnk"""
 
   def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     Tables.load(spark, dir, "embeddings").createOrReplaceTempView("embeddings")
     Tables.load(spark, dir, "documents").createOrReplaceTempView("documents")
     spark.sql(rrfSqlSkeleton(

@@ -2188,7 +2188,6 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
       dir.replaceAll("[^A-Za-z0-9._-]", "_").dropWhile(_ == '_')
     graft.core.Warehouse.tableOnce(spark, table) {
       import org.apache.spark.sql.functions._
-      graft.functions.BloomSketch.register(spark)
       rows.groupBy("file_id").agg(expr("bloom_build(p)").as("sk"),
         min("p").as("p_lo"), max("p").as("p_hi"))
     }
@@ -2206,7 +2205,6 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
                            man: DataFrame, rows: DataFrame,
                            filesTotal: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.BloomSketch.register(spark)
     val sq = spark
     import sq.implicits._
     val cand = man.select(col("file_id"), col("sk"))
@@ -2295,7 +2293,6 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
     val base = bloomLayoutTableOnce(spark, dir, "bfbase_",
       s"l_orderkey % 10 != $ZBatchMod")
     val baseMan = bloomManifestTableOnce(spark, dir, "bfbaseman_", base)
-    graft.functions.BloomSketch.register(spark)
     val batch = Tables.load(spark, dir, "lineitem")
       .filter(s"l_orderkey % 10 = $ZBatchMod")
       .selectExpr("l_orderkey AS o", "CAST(l_linenumber AS BIGINT) AS ln",
@@ -2424,7 +2421,6 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
                                         rowsTable: String, manTable: String,
                                         pred: String): Unit = {
     import org.apache.spark.sql.functions._
-    graft.functions.BloomSketch.register(spark)
     def filtersOf(df: DataFrame): DataFrame = df.groupBy("file_id")
       .agg(expr("bloom_build(p)").as("sk"),
         min("p").as("p_lo"), max("p").as("p_hi"))
@@ -3073,7 +3069,6 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
   private def profileRowsOf(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val spark = df.sparkSession
-    graft.functions.HllSketch.register(spark)
     val base = df.transform(graft.core.EngineCache.persisted)
     val n = base.count()
     val aggs = profCols.flatMap { c =>
@@ -3103,7 +3098,6 @@ private[graft] trait ScaleRelationalOps { this: ScaleOps.type =>
 
   def profileRefresh(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.HllSketch.register(spark)
     val isBatch = col("l_orderkey") % ProfBatchMod === ProfBatchRem
     val li = Tables.load(spark, dir, "lineitem")
     val table = "colprof_base_" +

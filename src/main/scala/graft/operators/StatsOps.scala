@@ -390,7 +390,6 @@ object StatsOps {
     * At 100 TB the sketch column persists next to each shard and any
     * later union query costs O(shards), never a rescan. */
   def hllCardinality(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HllSketch.register(spark)
     Tables.load(spark, dir, "events").createOrReplaceTempView("events")
     spark.sql(s"""
       WITH per AS (
@@ -447,7 +446,6 @@ object StatsOps {
     * same contract as q133; byte-identity of merged vs direct-built
     * sketches is asserted in FunctionsSpec. */
   def hllPersist(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.HllSketch.register(spark)
     Tables.load(spark, dir, "events").createOrReplaceTempView("events")
     // stage 1: ingest-time shard sketches, persisted as a WAREHOUSE table
     // (Hive shard=N layout, not scratch tmp — the sketch table is the
@@ -515,7 +513,6 @@ object StatsOps {
     * (type, user) projection; |A \ B| = |A| − |A ∩ B| keeps the
     * difference leg O(pairs). */
   def kmvSetExpr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.KmvSketch.register(spark)
     Tables.load(spark, dir, "events").createOrReplaceTempView("events")
     spark.sql(s"""
       WITH tu AS (SELECT DISTINCT event_type, user_id FROM events),
@@ -602,7 +599,6 @@ object StatsOps {
     * sort-based `percentile`, which is the GATE, not the capability —
     * the sketch exists precisely so the 100 TB run never pays it). */
   def ddqPersist(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DdSketch.register(spark)
     Tables.load(spark, dir, "orders").createOrReplaceTempView("orders")
     graft.core.Warehouse.writeTable(
       spark.sql(s"""
@@ -670,7 +666,6 @@ object StatsOps {
     * est ≤ exact + ⌈2N/width⌉ (the CM error bound — deterministic here
     * because the hash family is fixed). */
   def cmsPersist(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CmSketch.register(spark)
     Tables.load(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
     graft.core.Warehouse.writeTable(
       spark.sql(s"""
@@ -724,7 +719,6 @@ object StatsOps {
     * spelled TRUE — the hash match proves the post-delete estimates
     * bracket the post-delete exact counts. */
   def cmsDelete(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CmSketch.register(spark)
     Tables.load(spark, dir, "lineitem").createOrReplaceTempView("lineitem")
     val suffix = dir.replaceAll("[^A-Za-z0-9._-]", "_").dropWhile(_ == '_')
     val tid = Thread.currentThread().getId
@@ -786,7 +780,6 @@ object StatsOps {
     * gated q136-style against exact percentiles over the
     * tombstone-filtered rows. */
   def ddqDelete(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.DdSketch.register(spark)
     Tables.load(spark, dir, "orders").createOrReplaceTempView("orders")
     val suffix = dir.replaceAll("[^A-Za-z0-9._-]", "_").dropWhile(_ == '_')
     val tid = Thread.currentThread().getId
@@ -1355,7 +1348,6 @@ object StatsOps {
     * self-join (the quadratic-in-frequency case that breaks naive
     * |A|·|B|/distinct estimators), and a dimension join. */
   def joinSizeEst(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.CmSketch.register(spark)
     Seq("lineitem", "part", "orders", "customer").foreach(t =>
       Tables.load(spark, dir, t).createOrReplaceTempView(t))
     val w = graft.functions.CmSketch.Width

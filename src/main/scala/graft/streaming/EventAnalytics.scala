@@ -39,7 +39,6 @@ object EventAnalytics {
     * StreamingAnalyticsSpec. State is O(windows × types) × 4 KB. */
   def windowedUserSketches(events: DataFrame, watermark: String = "10 minutes",
                            window_ : String = "5 minutes"): DataFrame = {
-    graft.functions.HllSketch.register(events.sparkSession)
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), window_), col("event_type"))
@@ -56,7 +55,6 @@ object EventAnalytics {
     * State is O(windows × types) × 16 KB. */
   def windowedValueSketches(events: DataFrame, watermark: String = "10 minutes",
                             window_ : String = "5 minutes"): DataFrame = {
-    graft.functions.DdSketch.register(events.sparkSession)
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), window_), col("event_type"))
@@ -76,7 +74,6 @@ object EventAnalytics {
     * counter grid. */
   def windowedFreqSketches(events: DataFrame, watermark: String = "10 minutes",
                            window_ : String = "5 minutes"): DataFrame = {
-    graft.functions.CmSketch.register(events.sparkSession)
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), window_), col("event_type"))
@@ -94,7 +91,6 @@ object EventAnalytics {
   def windowedMembershipSketches(events: DataFrame,
                                  watermark: String = "10 minutes",
                                  window_ : String = "5 minutes"): DataFrame = {
-    graft.functions.BloomSketch.register(events.sparkSession)
     events
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), window_), col("event_type"))
@@ -217,7 +213,6 @@ object EventAnalytics {
   def startStreamingNswSigAppend(vecStream: DataFrame, sigsPath: String,
                                  checkpoint: String): StreamingQuery =
     BatchSink.start(vecStream, checkpoint) { (batch, batchId) =>
-      graft.functions.GraftFunctions.register(batch.sparkSession)
       BatchSink.land(batch.selectExpr("vec_id",
         s"srp_sig(embedding, ${graft.operators.LlmQueries.SrpBits}) AS sig"),
         sigsPath, batchId)
@@ -343,7 +338,6 @@ object EventAnalytics {
   def startStreamingBloomShards(rowStream: DataFrame, path: String,
                                 checkpoint: String): StreamingQuery =
     BatchSink.start(rowStream, checkpoint) { (batch, batchId) =>
-      graft.functions.BloomSketch.register(batch.sparkSession)
       BatchSink.land(batch
         .selectExpr("CAST(l_orderkey % 8 AS INT) AS shard", "l_partkey AS p")
         .groupBy("shard")
@@ -367,7 +361,6 @@ object EventAnalytics {
   def startStreamingKmvShards(eventStream: DataFrame, path: String,
                               checkpoint: String): StreamingQuery =
     BatchSink.start(eventStream, checkpoint) { (batch, batchId) =>
-      graft.functions.KmvSketch.register(batch.sparkSession)
       BatchSink.land(batch
         .selectExpr("event_type", "CAST(user_id % 8 AS INT) AS shard",
           "user_id")
@@ -467,7 +460,6 @@ object EventAnalytics {
   def startStreamingCbloomDeletes(docStream: DataFrame, decPath: String,
                                   checkpoint: String): StreamingQuery =
     BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
-      graft.functions.CountingBloom.register(batch.sparkSession)
       BatchSink.land(batch
         .select(graft.functions.TextFunctions.bagFingerprint("text").as("fp"))
         .agg(expr("cbloom_build(fp)").as("dsk")), decPath, batchId)

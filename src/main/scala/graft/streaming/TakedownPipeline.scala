@@ -64,9 +64,6 @@ object TakedownPipeline {
     * one-shot comparand — the spec's equality is between two call
     * sites of this code. */
   def artifactsOf(batch: DataFrame): Artifacts = {
-    graft.functions.CountingBloom.register(batch.sparkSession)
-    graft.functions.CmSketch.register(batch.sparkSession)
-    graft.functions.DdSketch.register(batch.sparkSession)
     val ids = batch.select(col("doc_id"))
     val gramDec = graft.operators.LlmQueries.gramDecrementsOf(batch)
       .transform(graft.core.EngineCache.persisted) // read twice: land + report

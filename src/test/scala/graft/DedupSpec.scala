@@ -327,7 +327,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("native hash kernels are bit-identical to their composable SQL forms") {
-    graft.functions.GraftFunctions.register(spark)
     val words = graft.core.Tables.load(spark, sfDir, "documents").limit(100)
       .selectExpr("split(trim(text), '\\\\s+') AS w")
     // md5_i64 == CAST(conv(substr(md5(s),1,15),16,10) AS BIGINT), per element
@@ -1041,7 +1040,6 @@ object DedupSpec {
       corpusSig: org.apache.spark.sql.DataFrame,
       batchSig: org.apache.spark.sql.DataFrame, numHashes: Int, bands: Int,
       tau: Double): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(corpusSig.sparkSession)
     val rows = numHashes / bands
     val bk = (0 until bands).map { b =>
       val slice = (0 until rows)
@@ -1076,7 +1074,6 @@ object DedupSpec {
   def intradocReference(
       docsDf: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val spark = docsDf.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     val view = s"intradoc_ref_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     docsDf.createOrReplaceTempView(view)
     val k = graft.operators.LlmQueries.SubdupK

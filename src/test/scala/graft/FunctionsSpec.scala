@@ -1,13 +1,52 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
-import graft.functions.VectorAggregates
+import graft.functions.{GraftFunctions, VectorAggregates}
 import graft.llm.Similarity
 import graft.core.Tables
 
 /** Native function + UDAF layer: the codegen'd cosine kernel and the
   * one-pass centroid Aggregator against their composable references. */
 class FunctionsSpec extends SparkSpec {
+
+  private def names(s: SparkSession) =
+    s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
+
+  /** `f` over a fresh session on the shared context, built without graft's
+    * extensions as a caller's own session would be. */
+  private def withVanillaSession[A](f: SparkSession => A): A = {
+    val shared = spark // force shared-session init first
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    try f(SparkSession.builder().master("local[4]").getOrCreate())
+    finally {
+      SparkSession.setDefaultSession(shared)
+      SparkSession.setActiveSession(shared)
+    }
+  }
+
+  /** The WARN-or-worse messages logged while `body` runs. */
+  private def warningsDuring(body: => Unit): Seq[String] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("graft-spec-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(Level.WARN))
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    root.addAppender(appender)
+    try body finally { root.removeAppender(appender); appender.stop() }
+    seen.asScala.toSeq
+  }
 
   test("one-pass centroid Aggregator matches the posexplode+avg reference") {
     val emb = Tables.load(spark, sfDir, "embeddings")
@@ -48,7 +87,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("GraftExtensions injects every native function via SparkSessionExtensions") {
-    import org.apache.spark.sql.SparkSession
     val shared = spark // force init of the shared session/context first
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
@@ -81,27 +119,62 @@ class FunctionsSpec extends SparkSpec {
       assert(k.getBoolean(0) && k.getInt(1) === 2 && k.getInt(2) === 2)
       assert(k.getString(3) === "a b")
       // both registration paths read one table: the extension injects
-      // exactly the native functions register() adds ("built-in" source;
-      // the sketch UDAF families register as Scala UDFs)
-      def names(s: SparkSession) =
-        s.sessionState.functionRegistry.listFunction().map(_.funcName).toSet
-      val vanilla = shared.newSession()
-      val builtin = names(vanilla)
-      graft.functions.GraftFunctions.register(vanilla)
-      val registered = (names(vanilla) -- builtin).filter(n =>
-        vanilla.sessionState.functionRegistry
-          .lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(n))
-          .exists(_.getSource == "built-in"))
-      assert(names(s2) -- builtin === registered)
-      assert(registered.size === 13)
+      // exactly the functions register() adds, all 41 of them
+      val tableNames = GraftFunctions.table.map(_._1.funcName).toSet
+      withVanillaSession { vanilla =>
+        val builtin = names(vanilla)
+        GraftFunctions.register(vanilla)
+        assert(names(s2) -- builtin === names(vanilla) -- builtin)
+        assert(names(vanilla) -- builtin === tableNames)
+      }
+      assert(tableNames.size === 41)
     } finally {
       SparkSession.setDefaultSession(shared)
       SparkSession.setActiveSession(shared)
     }
   }
 
+  test("a second register on a vanilla session adds and replaces nothing") {
+    withVanillaSession { vanilla =>
+      val reg = vanilla.sessionState.functionRegistry
+      def entries = reg.listFunction().map(id => id.funcName -> reg.lookupFunction(id)).toMap
+      // a same-named function of the caller's stays theirs
+      vanilla.udf.register("hll_est", (b: Array[Byte]) => -1.0)
+      val theirs = reg.lookupFunction(FunctionIdentifier("hll_est"))
+      GraftFunctions.register(vanilla)
+      val first = entries
+      assert(first("hll_est") === theirs)
+      val replaced = warningsDuring(GraftFunctions.register(vanilla))
+        .filter(_.contains("replaced a previously registered function"))
+      assert(replaced.isEmpty)
+      // same names, and each the very ExpressionInfo it had before
+      assert(entries === first)
+    }
+  }
+
+  test("unaliased sketch columns keep the names spark.udf.register gave them") {
+    val sq = spark; import sq.implicits._
+    val df = Seq(1L, 2L, 3L).toDF("v")
+    assert(df.agg(expr("hll_build(v)"), expr("ddq_build(v)")).columns.toSeq ===
+      Seq("hll_build(v)", "ddq_build(v)"))
+    val sk = df.agg(expr("hll_build(v)").as("hs"), expr("ddq_build(v)").as("ds"))
+    assert(sk.selectExpr("hll_est(hs)", "ddq_quantile(ds, 0.5)").columns.toSeq ===
+      Seq("hll_est(hs)", "ddq_quantile(ds, 0.5)"))
+  }
+
+  test("SparkEntry.queries runs a sketch query on a session built without extensions") {
+    val q = "q133_hll_sketch"
+    val want = SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).sorted
+    assert(want.nonEmpty)
+    withVanillaSession { vanilla =>
+      assert(!vanilla.sessionState.functionRegistry
+        .functionExists(FunctionIdentifier("hll_build")))
+      val got = SparkEntry.queries(q)(vanilla, sfDir).collect().map(_.toString).sorted
+      assert(got.toSeq === want.toSeq)
+    }
+  }
+
   test("kmv aggregator bytes equal the driver build whatever the partitioning") {
-    graft.functions.KmvSketch.register(spark)
     val sq = spark; import sq.implicits._
     val vals = (0L until 3000L).map(v => v * 17L % 997L) // dups + 997 distinct
     def viaSql(parts: Int): Array[Byte] =
@@ -123,7 +196,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim returns null on null input, not a crash or a zero") {
-    graft.functions.GraftFunctions.register(spark)
     val sq = spark; import sq.implicits._
     val df = Seq(
       (Some(Seq(1f, 0f)), Some(Seq(1f, 0f))),
@@ -137,7 +209,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim agrees with a hand computation") {
-    graft.functions.GraftFunctions.register(spark)
     val sq = spark; import sq.implicits._
     val got = Seq((Seq(1f, 2f, 3f), Seq(4f, 5f, 6f))).toDF("a", "b")
       .selectExpr("cosine_sim(a, b) AS cos").head.getDouble(0)

@@ -155,7 +155,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("native cosine_sim is bit-identical to the composable form and codegen'd") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.core.Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val pairs = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))
@@ -175,7 +174,6 @@ class PlanSpec extends SparkSpec {
   }
 
   test("native l2_sq is bit-identical to the composable form and codegen'd") {
-    graft.functions.GraftFunctions.register(spark)
     val emb = graft.core.Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val pairs = emb.select(col("vec_id").as("id_a"), col("embedding").as("va"))

@@ -842,7 +842,6 @@ class ScaleOpsSpec extends SparkSpec {
     val sq = spark
     import sq.implicits._
     import org.apache.spark.sql.functions.{col, expr, min, max}
-    graft.functions.BloomSketch.register(spark)
     // three files with disjoint p sets; probes: a present key (p=2, one
     // file), a key present in TWO files (p=7), and an absent key (99)
     val rows = Seq(
@@ -1685,7 +1684,6 @@ class ScaleOpsSpec extends SparkSpec {
     val updated = vecs.selectExpr("vec_id",
       s"CASE WHEN $pred THEN transform(embedding, x -> -x) " +
         "ELSE embedding END AS embedding")
-    graft.functions.GraftFunctions.register(spark)
     val newBatchSigs = updated.filter(pred)
       .selectExpr("vec_id", s"srp_sig(embedding, ${Q.SrpBits}) AS sig")
       .transform(graft.core.EngineCache.persisted)

@@ -185,7 +185,6 @@ class StatsOpsSpec extends SparkSpec {
 
   test("HLL sketch: accuracy, dedup-invariance, and union-correct merge") {
     import org.apache.spark.sql.functions._
-    HllSketch.register(spark)
     // 10k distinct longs → within 5% (expect ~1.6% at p=12)
     val a = spark.range(0, 10000)
       .agg(expr("hll_build(id)").as("sk"))
@@ -206,7 +205,6 @@ class StatsOpsSpec extends SparkSpec {
 
   test("HLL lifecycle: parquet round-trip + merge is byte-identical to direct build") {
     import org.apache.spark.sql.functions._
-    HllSketch.register(spark)
     // shard sketches (8 shards over 10k ids), persisted AT REST
     val tmp = java.nio.file.Files.createTempDirectory("graft-hll-spec").toString
     spark.range(0, 10000).withColumn("shard", (col("id") % 8).cast("int"))
@@ -237,7 +235,6 @@ class StatsOpsSpec extends SparkSpec {
   test("DDSketch lifecycle: parquet round-trip + merge equals direct build; " +
        "quantiles within alpha") {
     import org.apache.spark.sql.functions._
-    graft.functions.DdSketch.register(spark)
     val tmp = java.nio.file.Files.createTempDirectory("graft-ddq-spec").toString
     // shard sketches over 1..10000, persisted at rest
     spark.range(1, 10001).withColumn("shard", (col("id") % 8).cast("int"))

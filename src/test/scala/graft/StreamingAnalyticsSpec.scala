@@ -127,7 +127,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
       .toMap
     // batch build over the identical rows, same grouping
     import org.apache.spark.sql.functions.{col, expr, window}
-    graft.functions.HllSketch.register(spark)
     val batch = data.toDF()
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(expr("hll_build(user_id)").as("sk"))
@@ -166,7 +165,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val streamed = spark.table("ddq_stream_out").collect()
       .map(r => r.getTimestamp(0) -> r.getAs[Array[Byte]](2)).toMap
     import org.apache.spark.sql.functions.{col, expr, window}
-    graft.functions.DdSketch.register(spark)
     val batch = data.toDF()
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(expr("ddq_build(CAST(floor(value * 100 + 0.5) AS BIGINT))").as("sk"))
@@ -209,7 +207,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.getAs[Array[Byte]](2))
       .toMap
     import org.apache.spark.sql.functions.{col, expr, window}
-    graft.functions.CmSketch.register(spark)
     val batch = data.toDF()
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(expr("cms_build(user_id)").as("sk"))
@@ -251,7 +248,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
       .map(r => (r.getTimestamp(0), r.getString(1)) -> r.getAs[Array[Byte]](2))
       .toMap
     import org.apache.spark.sql.functions.{col, expr, window}
-    graft.functions.BloomSketch.register(spark)
     val batch = data.toDF()
       .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
       .agg(expr("bloom_build(user_id)").as("sk"))
@@ -552,7 +548,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import sq.implicits._
     implicit val ctx = sq.sqlContext
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.HllSketch.register(spark)
     val rnd = new scala.util.Random(31)
     val t0 = java.time.Instant.parse("2024-05-01T00:00:00Z")
     val rows = (0 until 240).map { i =>
@@ -633,7 +628,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import sq.implicits._
     implicit val ctx = sq.sqlContext
     import org.apache.spark.sql.functions.expr
-    graft.functions.BloomSketch.register(spark)
     val rnd = new scala.util.Random(31)
     val rows = (0 until 300).map { _ =>
       (rnd.nextInt(40).toLong, rnd.nextInt(2000).toLong) }
@@ -722,7 +716,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import sq.implicits._
     implicit val ctx = sq.sqlContext
     import org.apache.spark.sql.functions.expr
-    graft.functions.KmvSketch.register(spark)
     val rnd = new scala.util.Random(37)
     val rows = (0 until 400).map { _ =>
       (Seq("click", "view")(rnd.nextInt(2)), rnd.nextInt(120).toLong) }
@@ -874,7 +867,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     implicit val ctx = sq.sqlContext
     import org.apache.spark.sql.functions.expr
     val CB = graft.functions.CountingBloom
-    CB.register(spark)
     val corpus = Seq(
       (3L, "alpha beta gamma"), (6L, "delta epsilon zeta"),
       (16L, "eta theta iota"), (20L, "kappa lambda mu"))
@@ -998,7 +990,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import graft.operators.LlmQueries
     import graft.streaming.TakedownPipeline
     val CB = graft.functions.CountingBloom
-    CB.register(spark)
     // corpus: doc 3 shares its text with tombstoned 6 (grams + pair die
     // with 6, 3's gram incidences survive); 16 is tombstoned with
     // exclusive grams; 21/22 are a surviving near-dup pair; 20 is lone
@@ -1091,8 +1082,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     // decrements (text lengths) subtract byte-exactly — every LINEAR
     // sketch store services off the one feed (the q247/q248 verbs'
     // decrement sketches now arrive composed, not batch-side)
-    graft.functions.CmSketch.register(spark)
-    graft.functions.DdSketch.register(spark)
     val survivors = corpusDf.filter(!col("doc_id").isin(6L, 16L))
     def cmsOf(df: org.apache.spark.sql.DataFrame): Array[Byte] = df
       .select(explode(expr(
@@ -1758,7 +1747,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{broadcast, col}
     import graft.streaming.TakedownPipeline
     val S = graft.operators.ScaleOps
-    graft.functions.GraftFunctions.register(spark)
     // a doc-embedding store: vector key IS the document key, so the
     // one deletion feed that already drives the text stores carries
     // the vector tombstones too — VERDICT r11 task 4's missing edge
@@ -1825,7 +1813,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     implicit val ctx = sq.sqlContext
     import org.apache.spark.sql.functions.col
     val S = graft.operators.ScaleOps
-    graft.functions.GraftFunctions.register(spark)
     val vecs = graft.core.Tables.load(spark, sfDir, "embeddings")
       .transform(graft.core.EngineCache.persisted)
     val pred = s"vec_id % 10 = ${S.NswBatchMod}"
@@ -1877,5 +1864,28 @@ class StreamingAnalyticsSpec extends SparkSpec {
     assert(streamed == key(S.nswGraphOf(vecs)),
       "…and both must equal the full rebuild")
     graft.core.EngineCache.releaseAll()
+  }
+
+  test("a foreachBatch body's cloned session has every graft function with no register call") {
+    val sq = spark
+    import sq.implicits._
+    implicit val ctx = sq.sqlContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-fn-clone").toString
+    val source = MemoryStream[Long]
+    val seen = new java.util.concurrent.atomic.AtomicReference[(Boolean, Seq[String], Double)]()
+    val q = graft.streaming.BatchSink.start(source.toDF(), s"$dir/ckpt") { (batch, _) =>
+      val s = batch.sparkSession
+      val missing = graft.functions.GraftFunctions.table.map(_._1)
+        .filterNot(s.sessionState.functionRegistry.functionExists).map(_.funcName)
+      val est = batch.selectExpr("hll_est(hll_build(value))").head.getDouble(0)
+      seen.set((s ne sq, missing, est))
+    }
+    source.addData(1L, 2L, 3L)
+    q.processAllAvailable()
+    q.stop()
+    val (cloned, missing, est) = seen.get
+    assert(cloned, "the body must run in the stream's clone of the session")
+    assert(missing === Seq.empty)
+    assert(math.round(est) === 3L)
   }
 }
