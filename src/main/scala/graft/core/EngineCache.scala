@@ -69,19 +69,32 @@ object EngineCache {
     * fault-tolerant cut on a cluster would use the reliable `checkpoint`
     * against `spark.checkpoint.dir` instead. */
   def cut(df: DataFrame, metrics: Column*): (DataFrame, Row) = {
-    val obs = if (metrics.isEmpty) None else Some(Observation())
-    val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
-    val out = obs.fold(df)(o => df.observe(o, named.head, named.tail: _*))
-      .localCheckpoint(eager = true)
+    val (watched, read) = observed(df, metrics: _*)
+    val out = watched.localCheckpoint(eager = true)
     out.queryExecution.logical match {
       case l: LogicalRDD => track(l.rdd)
       case _ =>
     }
-    (out, obs.fold(Row.empty) { o =>
-      val m = o.get
-      Row.fromSeq(metrics.indices.map(i => m(s"m$i")))
-    })
+    (out, read())
   }
+
+  /** `df` carrying a fresh `Observation` of `metrics` (aggregate
+    * columns), and the reader of the observed row: call it after the
+    * one action that runs the returned frame; it blocks until that
+    * action's metrics arrive and returns them in argument order
+    * (`Row.empty` when none are given). The one observe-then-read
+    * spelling: [[cut]], the ingest pipeline's landing barrier and
+    * `Telemetry.observeBatch` read their scalars through it. */
+  def observed(df: DataFrame, metrics: Column*): (DataFrame, () => Row) =
+    if (metrics.isEmpty) (df, () => Row.empty)
+    else {
+      val obs = Observation()
+      val named = metrics.zipWithIndex.map { case (m, i) => m.as(s"m$i") }
+      (df.observe(obs, named.head, named.tail: _*), { () =>
+        val m = obs.get
+        Row.fromSeq(metrics.indices.map(i => m(s"m$i")))
+      })
+    }
 
   /** Unpersist every frame the engine persisted, and every cut it made,
     * since the last release. Call after materializing operator results;

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import graft.core.Determinism._
 import graft.core.Tables
 
@@ -1040,20 +1040,35 @@ object StatsOps {
   private def bridge9(e: String): String =
     s"CAST(sum(CAST(floor(($e) * 1e9 + 0.5) AS DECIMAL(38,0))) AS DOUBLE) / 1e9"
 
-  private def clsFeatsSql(tokExpr: String, punctExpr: String): String = s"""
+  private def clsFeatsSql(tokExpr: String, punctExpr: String): String = {
+    val Seq(f1, f2, f3) = clsFeats(tokExpr, punctExpr)
+    s"""
       SELECT doc_id,
-        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS yi,
+        $ClsLabelSql AS yi,
         CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END AS y,
-        CAST($tokExpr AS DOUBLE) / 256.0 AS f1,
-        CAST($punctExpr AS DOUBLE) / 64.0 AS f2,
-        CAST(n_chars AS DOUBLE) / 4096.0 AS f3
+        $f1 AS f1, $f2 AS f2, $f3 AS f3
       FROM documents"""
+  }
+
+  // the classifier's label and features (f1, f2, f3), spelled once for
+  // the feature relation and the per-row serving score
+  private val ClsLabelSql = "CASE WHEN lang = 'en' THEN 1 ELSE 0 END"
+  private def clsFeats(tokExpr: String, punctExpr: String): Seq[String] = Seq(
+    s"CAST($tokExpr AS DOUBLE) / 256.0", s"CAST($punctExpr AS DOUBLE) / 64.0",
+    "CAST(n_chars AS DOUBLE) / 4096.0")
+  private val ClsTokSpark =
+    s"size(${graft.functions.TextFunctions.wordsExpr("text")})"
+  private val ClsPunctSpark =
+    "(length(text) - length(regexp_replace(text, '[\\\\p{Punct}]', '')))"
+
+  /** The classifier's score of a linear term `z`, rounded to 6 places. */
+  private def clsScoreSql(z: String): String =
+    droundSql(s"0.5 + $z / (2.0 * (1.0 + abs($z)))", 6)
 
   /** GD chain from a feature relation named `feats` (engine-common). */
   private def clsChainSql(withFeats: Option[String]): String =
     clsCtes(withFeats) + s"""
-      SELECT doc_id, yi AS label,
-        ${droundSql("0.5 + z / (2.0 * (1.0 + abs(z)))", 6)} AS score
+      SELECT doc_id, yi AS label, ${clsScoreSql("z")} AS score
       FROM (SELECT f.doc_id, f.yi, w0 + w1 * f1 + w2 * f2 + w3 * f3 AS z
             FROM feats f CROSS JOIN w_$ClsIters) fin
       ORDER BY doc_id"""
@@ -1093,13 +1108,10 @@ object StatsOps {
     * name. Persisted once: every GD iteration scans it, and the regex
     * token/punct extraction should run exactly one corpus pass. */
   private def clsFeatsView(docsDf: DataFrame): String = {
-    import graft.functions.TextFunctions
     val spark = docsDf.sparkSession
     val view = s"graft_qcls_docs_t${Thread.currentThread().getId}"
     docsDf.createOrReplaceTempView(view)
-    spark.sql(clsFeatsSql(
-      s"size(${TextFunctions.wordsExpr("text")})",
-      s"(length(text) - length(regexp_replace(text, '[\\\\p{Punct}]', '')))")
+    spark.sql(clsFeatsSql(ClsTokSpark, ClsPunctSpark)
       .replace("FROM documents", s"FROM $view"))
       .transform(graft.core.EngineCache.persisted)
       .createOrReplaceTempView(s"${view}_feats")
@@ -1123,24 +1135,28 @@ object StatsOps {
     Array(r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3))
   }
 
-  /** Score a (doc_id, text, lang, n_chars) batch with frozen weights —
-    * the serving stage of the classifier, bit-identical to the scores
-    * [[qualityClassifierOf]] emits when `w` came from the same corpus
-    * (weight literals round-trip through Double.toString, which is
-    * exact). Only the batch is scanned; the model is four doubles. Rows
-    * are unordered (callers treat them as a set): a persisted sorted frame
-    * fails Spark 4.1 canonicalization once a view re-instantiates it, as
-    * InMemoryRelation.newInstance keeps its old output ordering. */
-  def scoreWithWeights(batch: DataFrame, w: Array[Double]): DataFrame = {
+  /** The frozen-weight quality score of one (text, n_chars) row: the
+    * serving stage of the classifier as a per-row column, bit-identical
+    * to the scores [[qualityClassifierOf]] emits when `w` came from the
+    * same corpus (the same feature and score SQL; weight literals
+    * round-trip through Double.toString, which is exact). The model is
+    * four doubles, so a filter or projection over it is a per-row map. */
+  def qualityScore(w: Array[Double]): Column = {
     require(w.length == 4)
-    val feats = clsFeatsView(batch)
     val Array(w0, w1, w2, w3) = w.map(d => s"CAST('${d.toString}' AS DOUBLE)")
-    batch.sparkSession.sql(s"""
-      SELECT doc_id, yi AS label,
-        ${droundSql("0.5 + z / (2.0 * (1.0 + abs(z)))", 6)} AS score
-      FROM (SELECT f.doc_id, f.yi,
-              $w0 + $w1 * f1 + $w2 * f2 + $w3 * f3 AS z
-            FROM $feats f) fin""")
+    val Seq(f1, f2, f3) = clsFeats(ClsTokSpark, ClsPunctSpark)
+    org.apache.spark.sql.functions.expr(
+      clsScoreSql(s"($w0 + $w1 * ($f1) + $w2 * ($f2) + $w3 * ($f3))"))
+  }
+
+  /** Score a (doc_id, text, lang, n_chars) batch with frozen weights:
+    * (doc_id, label, score) with [[qualityScore]] as the score. Only the
+    * batch is scanned, once, as a per-row projection. Rows are unordered
+    * (callers treat them as a set). */
+  def scoreWithWeights(batch: DataFrame, w: Array[Double]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr}
+    batch.select(col("doc_id"), expr(ClsLabelSql).as("label"),
+      qualityScore(w).as("score"))
   }
 
   def qualityClassifier(spark: SparkSession, dir: String): DataFrame =

@@ -1,7 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import graft.core.EngineCache
+import graft.llm.Dedup
+import graft.operators.{CorpusOps, LlmQueries, StatsOps}
 
 /** The COMPOSED streaming ingest edge — q190's cleaning funnel run at
   * stream time as ONE foreachBatch pipeline with ONE checkpoint, instead
@@ -14,43 +18,47 @@ import org.apache.spark.sql.functions._
   *     → BM25 postings/doclen append (q178) for the survivors
   *     → one exact-integer funnel row per micro-batch (q190's readout)
   *
-  * Every stage consumes its parent stage's LANDED output (the cut text
-  * is what gets signed; only near-dup survivors are indexed) — the
-  * staging q190's batch funnel prescribes. Each stage lands under
-  * `<out>/<stage>/batch_run=N` with idempotent overwrite and is read back
-  * from there with the stage's own schema (no Parquet footer-inference
-  * job), so a stage's plan is one stage over a small parquet scan, never
-  * the whole chain re-derived from the stream's input. The funnel row is
-  * one aggregate over all stages, not one aggregate per stage.
+  * Each stage lands under `<out>/<stage>/batch_run=N` with idempotent
+  * overwrite. The seven stages land in two waves, each one
+  * [[BatchSink.landAll]] whose stages are written at the same time:
   *
-  * The seven stages form four dependency levels, and each level lands
-  * as one wave through [[BatchSink.landAll]], its stages written at the
-  * same time:
+  *   A {scores, clean, spans, neardup} → B {postings, doclen, funnel}
   *
-  *   {scores} → {clean} → {spans, neardup} → {postings, doclen, funnel}
+  * The rule: a landed barrier at every non-per-row boundary; per-row
+  * stages fuse. The score, the quality floor and the intra-doc cut are
+  * per-row maps of the micro-batch, so wave A builds all four stages
+  * from the batch itself: scores and clean apply the per-row score
+  * ([[graft.operators.StatsOps.qualityScore]]), and spans and neardup
+  * probe frozen state with the un-landed cut of the same rows. Only the
+  * survivor set needs another stage's complete output (the near-dup
+  * hits), so wave B reads `clean` back from its landed directory, with
+  * the stage's own schema (no Parquet footer-inference job), and drops
+  * the hit ids. A replayed batch overwrites every wave-A directory
+  * before wave B reads any of them.
   *
-  * Overlapping a wave is safe because no stage of a wave reads another
-  * stage of the same wave: every stage still reads only its parents'
-  * landed output, and a wave is built only after the previous wave has
-  * landed and been read back. A checkpoint-replayed batch still
-  * overwrites every `batch_run=N` before any later wave reads it.
+  * The funnel and the hit ids ride on wave A's writes: each wave-A frame
+  * carries an `Observation` of its scalars, read off the same job that
+  * writes it — scores (count, n_quality), clean (count, Σ n_tokens,
+  * Σ kept_tokens), spans (Σ dup_tokens), neardup (the set of hit
+  * `batch_id`s). The funnel row is a one-row local frame of those
+  * values, and the survivors are landed clean minus the observed hit
+  * ids, a per-row filter with no join. Counts are by identity, under
+  * one precondition: `doc_id` is unique within a micro-batch. Then the
+  * scores count is n_raw, and, since the hits are signed from the cut
+  * (hits ⊆ clean), n_near_dup = |hit ids| and
+  * n_indexed = |clean| − |hit ids|.
   *
-  * A micro-batch of 10 documents runs 17 Spark jobs: the empty-batch
-  * check 1, scores 1, clean 2, spans 3, neardup 2, postings 3, doclen 2
-  * and funnel 3 (perfbench's stream workload, jobs grouped by SQL
-  * execution id). The waves' longest path is scores → clean → spans
-  * → postings or funnel. Three rules keep the counts there: a stage
-  * frame is not sorted (under AQE a sort costs a sampling job and a
-  * shuffle job), the intra-doc cut is a per-row kernel with no shuffle,
-  * and a probe of frozen state broadcasts the BATCH side (the near-dup
-  * bands, the span grams) and streams the stored rows through it, so
-  * no corpus frame is collected to the driver and the near-dup probe
-  * does not shuffle.
-  *
-  * The funnel counts by identity, under one precondition: `doc_id` is
-  * unique within a micro-batch. Then `scores` (one row per doc) gives
-  * n_raw and n_quality, and, since the hits are signed from `clean`
-  * (hits ⊆ clean), n_near_dup = |clean| − |survivors|.
+  * A micro-batch of 10 documents runs 12 Spark jobs: the empty-batch
+  * check 1, scores 1, clean 1, spans 3, neardup 2, postings 2, doclen 1
+  * and funnel 1 (perfbench's stream workload, jobs in the query's job
+  * group). Three more rules keep the counts there: a stage frame is
+  * not sorted (under AQE a sort costs a sampling job and a shuffle job),
+  * the intra-doc cut is a per-row kernel with no shuffle, and a probe of
+  * frozen state broadcasts the BATCH side (the near-dup bands, the span
+  * grams) and streams the stored rows through it, so no corpus frame is
+  * collected to the driver and the near-dup probe does not shuffle. The
+  * micro-batch's own input is read by the empty-batch check and by each
+  * wave-A stage: five O(batch) scans.
   *
   * Every stage touches O(batch) text plus frozen at-rest state. The
   * driver handles O(batch) rows per micro-batch whatever the corpus
@@ -83,86 +91,83 @@ object IngestPipeline {
                     hits: DataFrame, postings: DataFrame, doclen: DataFrame,
                     funnel: DataFrame)
 
+  /** One wave: (frame, stage, the scalars to observe on its write). */
+  private type Wave = Seq[(DataFrame, String, Seq[Column])]
+
   /** Run one batch of (doc_id, text, lang, n_chars) docs through the
-    * whole chain against frozen at-rest state, each stage persisted.
-    * The SAME stage code serves the streaming writer and the batch
-    * comparand — the spec's equality is between two call sites of this
-    * code, not two implementations. */
+    * whole chain against frozen at-rest state, each stage cut with its
+    * scalars observed ([[EngineCache.cut]]). The SAME stage code serves
+    * the streaming writer and the batch comparand — the spec's equality
+    * is between two call sites of this code, not two implementations. */
   def chainOf(batch: DataFrame, corpusGrams: DataFrame,
               corpusSig: DataFrame, cfg: Config): Stages =
     stagesOf(batch, corpusGrams, corpusSig, cfg)(
-      _.map { case (df, _) => graft.core.EngineCache.persisted(df) })
+      _.map { case (df, _, metrics) => EngineCache.cut(df, metrics: _*) })
 
-  /** The chain, built wave by wave: `barrier(wave)` takes one dependency
-    * level's (frame, stage) pairs, in landing order, and returns one
-    * frame per pair, in the same order. Each later wave is built from
-    * the barrier's return values, so a durable barrier cuts the lineage.
-    * The waves are {scores}, {clean}, {spans, neardup} and
-    * {postings, doclen, funnel}: no frame reads a sibling of its wave.
-    * Precondition: `doc_id` is unique within `batch`. The funnel counts
-    * by identity on it (one `scores` row per doc; hits ⊆ clean, as the
-    * hits are signed from `clean`). */
+  /** The chain, built wave by wave: `barrier(wave)` materializes one
+    * wave's frames, in landing order, and returns per frame the frame to
+    * build on and the row of its observed scalars. Wave B is built from
+    * wave A's return values, so a durable barrier cuts the lineage.
+    * Precondition: `doc_id` is unique within `batch` (the funnel counts
+    * by identity on it). */
   private def stagesOf(batch: DataFrame, corpusGrams: DataFrame,
                        corpusSig: DataFrame, cfg: Config)(
-      barrier: Seq[(DataFrame, String)] => Seq[DataFrame]): Stages = {
-    val Seq(scores) = barrier(Seq(
-      graft.operators.StatsOps.scoreWithWeights(batch, cfg.weights) -> "scores"))
-    val kept = batch.join(
-      scores.filter(col("score") >= cfg.scoreFloor).select("doc_id"),
-      "doc_id")
-    val Seq(clean) = barrier(Seq(graft.operators.LlmQueries
-      .intradocDedupOf(kept.select("doc_id", "text")) -> "clean"))
-    val cleanDocs = clean
+      barrier: Wave => Seq[(DataFrame, Row)]): Stages = {
+    def total(c: String): Column = coalesce(sum(c), lit(0L))
+    // the cut of the docs at or above the floor, a per-row map of the
+    // batch: landed as clean, and what spans and neardup probe with
+    val cut = LlmQueries.intradocDedupOf(batch
+      .filter(StatsOps.qualityScore(cfg.weights) >= cfg.scoreFloor)
+      .select("doc_id", "text"))
+    val cutDocs = cut.select(col("doc_id"), col("clean_text").as("text"))
+    val Seq((scores, sc), (clean, cl), (spans, sp), (hits, hi)) = barrier(Seq(
+      (StatsOps.scoreWithWeights(batch, cfg.weights), "scores",
+        Seq(count(lit(1)), count_if(col("score") >= cfg.scoreFloor))),
+      (cut, "clean",
+        Seq(count(lit(1)), total("n_tokens"), total("kept_tokens"))),
+      (LlmQueries.spanIncrementOf(cutDocs, corpusGrams), "spans",
+        Seq(total("dup_tokens"))),
+      (Dedup.incrementalLshPairs(corpusSig,
+          Dedup.signatureFrame(cutDocs, "doc_id", "text", cfg.shingleN,
+            cfg.numHashes),
+          cfg.numHashes, cfg.bands, cfg.tau), "neardup",
+        Seq(collect_set(col("batch_id"))))))
+    val hitIds = hi.getSeq[Long](0)
+    val survivors = clean
       .select(col("doc_id"), col("clean_text").as("text"))
-    val Seq(spans, hits) = barrier(Seq(
-      graft.operators.LlmQueries.spanIncrementOf(cleanDocs, corpusGrams) -> "spans",
-      graft.llm.Dedup.incrementalLshPairs(
-        corpusSig,
-        graft.llm.Dedup.signatureFrame(
-          cleanDocs, "doc_id", "text", cfg.shingleN, cfg.numHashes),
-        cfg.numHashes, cfg.bands, cfg.tau) -> "neardup"))
-    // a left-anti join ignores duplicate keys: no distinct (one shuffle)
-    val survivors = cleanDocs.join(
-      hits.select(col("batch_id").as("doc_id")), Seq("doc_id"), "left_anti")
+      .filter(!col("doc_id").isin(hitIds: _*))
     // q190's per-batch funnel row: every count an exact integer, every
-    // stage monotone vs the previous one. ONE aggregate over a union of
-    // per-stage projections: each branch puts 1 (a count) or the summed
-    // column into its own funnel column and null into the others.
-    // Counts are by identity (the precondition above).
-    def counted(df: DataFrame, cols: (String, Column)*): DataFrame = {
-      val own = cols.toMap
-      df.select(FunnelCols.map(c =>
-        own.getOrElse(c, lit(null)).cast("long").as(c)): _*)
-    }
-    val sums = FunnelCols.map(c => coalesce(sum(c), lit(0L)).as(c))
-    val Seq(postings, doclen, funnel) = barrier(Seq(
-      graft.operators.CorpusOps.bm25PostingsOf(survivors) -> "postings",
-      graft.operators.CorpusOps.bm25DoclenOf(survivors) -> "doclen",
-      Seq(
-        counted(scores, "n_raw" -> lit(1L),
-          "n_quality" -> when(col("score") >= cfg.scoreFloor, 1L).otherwise(0L)),
-        counted(clean, "tokens_raw" -> col("n_tokens"),
-          "tokens_after_cut" -> col("kept_tokens"), "n_near_dup" -> lit(1L)),
-        counted(spans, "corpus_dup_tokens" -> col("dup_tokens")),
-        counted(survivors, "n_near_dup" -> lit(-1L), "n_indexed" -> lit(1L))
-      ).reduce(_ unionByName _).agg(sums.head, sums.tail: _*) -> "funnel"))
-    Stages(scores, clean, spans, hits, postings, doclen, funnel)
+    // stage monotone vs the previous one
+    val funnelRow = Row(sc.getLong(0), sc.getLong(1), cl.getLong(1),
+      cl.getLong(2), sp.getLong(0), hitIds.size.toLong,
+      cl.getLong(0) - hitIds.size)
+    val funnel = batch.sparkSession.createDataFrame(
+      java.util.List.of(funnelRow),
+      StructType(FunnelCols.map(StructField(_, LongType, nullable = false))))
+    val Seq((postings, _), (doclen, _), (funnelOut, _)) = barrier(Seq(
+      (CorpusOps.bm25PostingsOf(survivors), "postings", Nil),
+      (CorpusOps.bm25DoclenOf(survivors), "doclen", Nil),
+      (funnel, "funnel", Nil)))
+    Stages(scores, clean, spans, hits, postings, doclen, funnelOut)
   }
 
   /** Start the composed pipeline: one stream, one checkpoint, seven
-    * batch_run-partitioned sinks landed in four waves, each stage read
+    * batch_run-partitioned sinks landed in two waves, each stage read
     * back from its own landed directory. */
   def start(docStream: DataFrame, corpusGrams: DataFrame,
             corpusSig: DataFrame, cfg: Config, outPath: String,
             checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
     BatchSink.start(docStream, checkpoint) { (batch, batchId) =>
       stagesOf(batch, corpusGrams, corpusSig, cfg) { wave =>
-        val dirs = wave.map { case (df, stage) => df -> s"$outPath/$stage" }
-        BatchSink.landAll(batchId)(dirs)
+        val landing = wave.map { case (df, stage, metrics) =>
+          EngineCache.observed(df, metrics: _*) -> s"$outPath/$stage"
+        }
+        BatchSink.landAll(batchId)(
+          landing.map { case ((df, _), dir) => df -> dir })
         // the stage's own schema: no footer-inference job per read-back
-        dirs.map { case (df, dir) =>
+        landing.map { case ((df, read), dir) =>
           batch.sparkSession.read.schema(df.schema)
-            .parquet(s"$dir/batch_run=$batchId")
+            .parquet(s"$dir/batch_run=$batchId") -> read()
         }
       }
     }

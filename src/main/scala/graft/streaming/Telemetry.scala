@@ -116,10 +116,9 @@ object Telemetry {
                    report: String => Unit = _ => ())
       : (org.apache.spark.sql.DataFrame, () => Map[String, Any]) = {
     import org.apache.spark.sql.functions._
-    val obs = org.apache.spark.sql.Observation(name)
-    val instrumented = df.observe(obs, count(lit(1)).as("rows"))
+    val (instrumented, read) = graft.core.EngineCache.observed(df, count(lit(1)))
     val finish = () => {
-      val metrics = obs.get
+      val metrics = Map[String, Any]("rows" -> read().getLong(0))
       metrics.foreach {
         case (k, v: Long) => report(s"$prefix.$name.$k:$v|c")
         case (k, v) => report(s"$prefix.$name.$k:$v|g")

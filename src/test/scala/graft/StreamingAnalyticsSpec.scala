@@ -1262,10 +1262,11 @@ class StreamingAnalyticsSpec extends SparkSpec {
   }
 
   /** Stream `docs` as ONE micro-batch (batch_run=0) through the ingest
-    * DAG into a fresh directory; returns that directory. */
+    * DAG into a fresh directory; returns that directory and the query's
+    * run id (the job group of every job the stream starts). */
   private def ingestOneBatch(fx: IngestFixture,
                              cfg: graft.streaming.IngestPipeline.Config,
-                             prefix: String): String = {
+                             prefix: String): (String, String) = {
     val sq = spark
     import sq.implicits._
     implicit val ctx = sq.sqlContext
@@ -1278,7 +1279,7 @@ class StreamingAnalyticsSpec extends SparkSpec {
       source.addData(fx.docs: _*)
       q.processAllAvailable()
     } finally q.stop()
-    dir
+    (dir, q.runId.toString)
   }
 
   test("ingest DAG lands a batch with no doc above the quality floor as empty stages") {
@@ -1288,7 +1289,7 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val fx = ingestFixture()
     // scores lie in (0, 1): a floor of 2.0 admits no doc
     val cfg = fx.cfg(scoreFloor = 2.0)
-    val dir = ingestOneBatch(fx, cfg, "graft-ingest-empty")
+    val (dir, _) = ingestOneBatch(fx, cfg, "graft-ingest-empty")
     val want = graft.streaming.IngestPipeline.chainOf(
       fx.docs.toDF("doc_id", "text", "lang", "n_chars"), fx.grams, fx.sig, cfg)
     def landed(stage: String) = spark.read.parquet(s"$dir/$stage/batch_run=0")
@@ -1398,8 +1399,8 @@ class StreamingAnalyticsSpec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
       InsertIntoHadoopFsRelationCommand, LogicalRelation}
     import org.apache.spark.sql.util.QueryExecutionListener
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec,
-      SparkPlan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec,
+      SortExec, SparkPlan}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
@@ -1432,74 +1433,214 @@ class StreamingAnalyticsSpec extends SparkSpec {
     // registered BEFORE start: the stream runs on a clone of this session,
     // which copies the listeners it has at that moment
     spark.listenerManager.register(listener)
-    val dir = try ingestOneBatch(fx, fx.cfg(scoreFloor = 0.0), "graft-ingest-lineage")
+    val (dir, _) = try ingestOneBatch(fx, fx.cfg(scoreFloor = 0.0), "graft-ingest-lineage")
       finally spark.listenerManager.unregister(listener)
     assert(!spark.read.parquet(s"$dir/postings/batch_run=0").isEmpty,
       "every doc passes a 0.0 floor, so some survivor is indexed")
+    val stages = Seq("scores", "clean", "spans", "neardup", "postings",
+      "doclen", "funnel")
     eventually(timeout(30.seconds)) {
-      assert(scans.containsKey("postings/batch_run=0") &&
-        scans.containsKey("doclen/batch_run=0"))
-    }
-    Seq("postings", "doclen").foreach { stage =>
-      assert(scans.get(s"$stage/batch_run=0") ===
-        Set("clean/batch_run=0", "neardup/batch_run=0"),
-        s"$stage must read only its parents' landed directories")
+      assert(stages.forall(st => plans.containsKey(s"$st/batch_run=0")))
     }
     def dirsScanned(p: SparkPlan): Set[String] = planNodes(p).collect {
       case f: FileSourceScanExec => f.relation.location.rootPaths
         .map(r => s"${r.getParent.getName}/${r.getName}").mkString(",")
     }.toSet
-    eventually(timeout(30.seconds)) {
-      assert(Seq("clean", "spans").forall(s => plans.containsKey(s"$s/batch_run=0")))
+    def exchanges(p: SparkPlan): Seq[Exchange] =
+      planNodes(p).collect { case e: Exchange => e }
+    // the micro-batch reaches a foreachBatch body as an RDD of its rows
+    def batchScans(p: SparkPlan): Seq[SparkPlan] =
+      planNodes(p).filter(_.isInstanceOf[RDDScanExec])
+    val Seq(scoresPlan, cleanPlan, spansPlan, neardupPlan, postingsPlan,
+      doclenPlan, funnelPlan) = stages.map(st => plans.get(s"$st/batch_run=0"))
+    // wave B: postings and doclen read the landed clean rows alone; the
+    // hit ids arrive as literals, so no join back to the neardup
+    // directory and no broadcast
+    Seq("postings" -> postingsPlan, "doclen" -> doclenPlan).foreach {
+      case (stage, plan) =>
+        assert(scans.get(s"$stage/batch_run=0") === Set("clean/batch_run=0"),
+          s"$stage must read only its parent's landed directory")
+        assert(dirsScanned(plan) === Set("clean/batch_run=0") &&
+          batchScans(plan).isEmpty,
+          s"$stage must scan the landed clean rows, not the stream:\n$plan")
+        assert(!planNodes(plan).exists(_.isInstanceOf[BroadcastExchangeLike]),
+          s"$stage must not broadcast:\n$plan")
+        // the survivors read the hits as is: no aggregate (a distinct)
+        // over the neardup directory alone
+        assert(!planNodes(plan).exists {
+          case a: BaseAggregateExec => dirsScanned(a) == Set("neardup/batch_run=0")
+          case _ => false
+        }, s"$stage must not aggregate the hits scan:\n$plan")
     }
-    // the intra-doc cut is a per-row map: at most the quality join's
-    // broadcast moves data
-    val cleanPlan = plans.get("clean/batch_run=0")
-    assert(dirsScanned(cleanPlan)("scores/batch_run=0") &&
-      dirsScanned(plans.get("spans/batch_run=0"))("clean/batch_run=0"),
-      "the guards below must see the executed write plans")
-    assert(!planNodes(cleanPlan).exists {
-      case _: BroadcastExchangeLike => false
-      case _: Exchange => true
-      case _ => false
-    }, s"clean must not shuffle:\n$cleanPlan")
+    assert(exchanges(doclenPlan).isEmpty, s"doclen must not move data:\n$doclenPlan")
+    // the funnel is one local row of the scalars wave A observed
+    assert(scans.get("funnel/batch_run=0") === Set("LocalRelation") &&
+      dirsScanned(funnelPlan).isEmpty && batchScans(funnelPlan).isEmpty &&
+      exchanges(funnelPlan).isEmpty,
+      s"the funnel must scan nothing and move nothing:\n$funnelPlan")
+    // wave A is built on the micro-batch: no stage of it reads a landed
+    // directory
+    Seq("scores" -> scoresPlan, "clean" -> cleanPlan, "spans" -> spansPlan,
+      "neardup" -> neardupPlan).foreach { case (stage, plan) =>
+        assert(batchScans(plan).nonEmpty && dirsScanned(plan).isEmpty,
+          s"$stage must scan the micro-batch and no landed stage:\n$plan")
+    }
+    // the score, the floor and the intra-doc cut are per-row maps: clean
+    // moves no data at all, not even a broadcast
+    assert(scans.get("clean/batch_run=0") === Set("LogicalRDD") &&
+      exchanges(cleanPlan).isEmpty, s"clean must not move data:\n$cleanPlan")
     // a landed stage frame is not sorted: no global sort on doc_id
-    val spansPlan = plans.get("spans/batch_run=0")
     assert(!planNodes(spansPlan).exists {
       case s: SortExec => s.global &&
         s.sortOrder.headOption.exists(_.child.references.exists(_.name == "doc_id"))
       case _ => false
     }, s"spans must not sort by doc_id:\n$spansPlan")
-    // the survivors' anti join reads the hits scan as is: no aggregate
-    // (a distinct) over the neardup directory alone
-    Seq("postings", "doclen").foreach { stage =>
-      val plan = plans.get(s"$stage/batch_run=0")
-      assert(!planNodes(plan).exists {
-        case a: BaseAggregateExec => dirsScanned(a) == Set("neardup/batch_run=0")
-        case _ => false
-      }, s"$stage must not aggregate the hits scan:\n$plan")
-    }
     // the probes of frozen state build on the batch: neardup does not
     // shuffle, and every broadcast in neardup and spans is built from the
-    // landed clean rows alone, never from the in-memory corpus frames
-    eventually(timeout(30.seconds)) {
-      assert(plans.containsKey("neardup/batch_run=0"))
-    }
-    val neardupPlan = plans.get("neardup/batch_run=0")
-    assert(!planNodes(neardupPlan).exists {
+    // micro-batch's rows alone, never from the in-memory corpus frames
+    assert(!exchanges(neardupPlan).exists {
       case _: BroadcastExchangeLike => false
-      case _: Exchange => true
-      case _ => false
+      case _ => true
     }, s"neardup must not shuffle:\n$neardupPlan")
     Seq("neardup" -> neardupPlan, "spans" -> spansPlan).foreach { case (stage, plan) =>
       val builds = planNodes(plan).collect { case b: BroadcastExchangeLike => b }
       assert(builds.nonEmpty, s"$stage must broadcast its batch side:\n$plan")
       builds.foreach { b =>
+        val leaves = planNodes(b).filter(_.children.isEmpty)
         assert(!planNodes(b).exists(_.isInstanceOf[InMemoryTableScanExec]) &&
-          dirsScanned(b) == Set("clean/batch_run=0"),
-          s"$stage must broadcast only the batch's landed rows:\n$b")
+          leaves.nonEmpty && leaves.forall(_.isInstanceOf[RDDScanExec]),
+          s"$stage must broadcast only the micro-batch's rows:\n$b")
       }
     }
+    graft.core.EngineCache.releaseAll()
+  }
+
+  test("ingest funnel and survivors equal the landed stages they were observed on, restart included") {
+    val sq = spark
+    import sq.implicits._
+    implicit val ctx = sq.sqlContext
+    import org.apache.spark.sql.functions.{col, count, count_if, sum}
+    val fx = ingestFixture()
+    val docs = fx.docs.toDF("doc_id", "text", "lang", "n_chars")
+    val scoreOf = graft.operators.StatsOps.scoreWithWeights(docs, fx.weights)
+      .select("doc_id", "score").as[(Long, Double)].collect().toMap
+    val sorted = scoreOf.values.toSeq.sorted
+    val cfg = fx.cfg(scoreFloor = sorted(sorted.length * 2 / 5))
+    val below = fx.docs.filter(d => scoreOf(d._1) < cfg.scoreFloor)
+    assert(below.nonEmpty)
+    val (h1, h2) = fx.docs.splitAt(fx.docs.length / 2)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest-observed").toString
+    type Source = MemoryStream[(Long, String, String, Long)]
+    def runOnce(preload: Seq[(Long, String, String, Long)])(
+        feed: (Source, org.apache.spark.sql.streaming.StreamingQuery) => Unit)
+        : Unit = {
+      val source = MemoryStream[(Long, String, String, Long)]
+      if (preload.nonEmpty) source.addData(preload: _*)
+      val q = graft.streaming.IngestPipeline.start(
+        source.toDF().toDF("doc_id", "text", "lang", "n_chars"),
+        fx.grams, fx.sig, cfg, dir, s"$dir/ckpt")
+      try feed(source, q) finally q.stop()
+    }
+    runOnce(Nil) { (s, q) => s.addData(h1: _*); q.processAllAvailable() }
+    // a crash after batch 0's wave A landed: its offset is logged but not
+    // committed, and no wave-B directory exists
+    Seq("ckpt/commits/0", "ckpt/commits/.0.crc", "postings/batch_run=0",
+      "doclen/batch_run=0", "funnel/batch_run=0").foreach { p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$dir/$p"))
+    }
+    // the restart replays batch 0 from the logged offset (its input is in
+    // the source before the query starts), then lands batch 1 and batch 2:
+    // only docs below the floor
+    runOnce(h1) { (s, q) =>
+      q.processAllAvailable()
+      s.addData(h2: _*)
+      q.processAllAvailable()
+      s.addData(below: _*)
+      q.processAllAvailable()
+    }
+    def landed(stage: String, n: Int) =
+      spark.read.parquet(s"$dir/$stage").filter(col("batch_run") === n)
+    def ids(df: org.apache.spark.sql.DataFrame, c: String) =
+      df.select(col(c).cast("long")).as[Long].collect().toSet
+    val funnel = spark.read.parquet(s"$dir/funnel")
+    val runs = funnel.select("batch_run").as[Int].collect().sorted.toSeq
+    assert(runs === Seq(0, 1, 2), "one funnel row per micro-batch")
+    runs.foreach { n =>
+      val f = landed("funnel", n).collect().head
+      val cols = Seq("n_raw", "n_quality", "tokens_raw", "tokens_after_cut",
+        "corpus_dup_tokens", "n_near_dup", "n_indexed")
+      assert(cols.forall(c => !f.isNullAt(f.fieldIndex(c))), s"batch $n: $f")
+      val got = cols.map(c => f.getAs[Long](c))
+      val sc = landed("scores", n)
+        .agg(count(col("doc_id")), count_if(col("score") >= cfg.scoreFloor)).head()
+      val cl = landed("clean", n)
+        .agg(sum("n_tokens"), sum("kept_tokens")).head()
+      val dup = landed("spans", n).agg(sum("dup_tokens")).head()
+      def long0(r: org.apache.spark.sql.Row, i: Int) =
+        if (r.isNullAt(i)) 0L else r.getAs[Number](i).longValue
+      val cleanIds = ids(landed("clean", n), "doc_id")
+      val hitIds = ids(landed("neardup", n), "batch_id")
+      assert(hitIds.subsetOf(cleanIds), s"batch $n: the hits are signed from clean")
+      assert(got === Seq(sc.getLong(0), sc.getLong(1), long0(cl, 0),
+        long0(cl, 1), long0(dup, 0), hitIds.size.toLong,
+        (cleanIds -- hitIds).size.toLong), s"batch $n's funnel")
+      Seq("postings", "doclen").foreach { stage =>
+        assert(ids(landed(stage, n), "doc_id") === cleanIds -- hitIds,
+          s"batch $n's $stage must index clean minus the near-dup hits")
+      }
+    }
+    // the all-below-floor batch: every sum 0, the hit set empty
+    val last = landed("funnel", 2).collect().head
+    assert(last.getAs[Long]("n_raw") === below.length.toLong)
+    assert(Seq("n_quality", "tokens_raw", "tokens_after_cut",
+      "corpus_dup_tokens", "n_near_dup", "n_indexed")
+      .forall(c => last.getAs[Long](c) == 0L), s"$last")
+    assert(landed("clean", 2).isEmpty && landed("neardup", 2).isEmpty)
+    // batches 0 and 1 exercise the survivor filter: some docs are indexed,
+    // some are near-dup hits
+    Seq("n_indexed", "n_near_dup").foreach { c =>
+      assert(runs.take(2).map(n => landed("funnel", n).head().getAs[Long](c)).sum > 0, c)
+    }
+    graft.core.EngineCache.releaseAll()
+  }
+
+  test("an ingest micro-batch runs at most 12 Spark jobs in its query's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val fx = ingestFixture()
+    // the frozen state is built before the stream starts, as a served
+    // pipeline builds it: the first batch must not pay the corpus caches
+    fx.grams.count()
+    fx.sig.count()
+    val sq = spark
+    import sq.implicits._
+    val sorted = graft.operators.StatsOps.scoreWithWeights(
+        fx.docs.toDF("doc_id", "text", "lang", "n_chars"), fx.weights)
+      .select("score").as[Double].collect().sorted
+    // jobs per job group, as a trace charges a stream's jobs to its run id
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(g => jobs.merge(g, 1, (a, b) => a + b))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val runId = try {
+      val (_, id) = ingestOneBatch(fx,
+        fx.cfg(scoreFloor = sorted(sorted.length * 2 / 5)), "graft-ingest-jobs")
+      // a job started after the stream stopped: once the listener has seen
+      // it, it has seen every job the stream started before it
+      val flush = s"flush-$id"
+      sc.setJobGroup(flush, flush)
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      eventually(timeout(30.seconds)) { assert(jobs.containsKey(flush)) }
+      id
+    } finally sc.removeSparkListener(listener)
+    val n = Option(jobs.get(runId)).fold(0)(_.intValue)
+    assert(n > 0, "the stream's jobs must carry its run id as their job group")
+    assert(n <= 12, s"one ingest micro-batch ran $n jobs")
     graft.core.EngineCache.releaseAll()
   }
 
