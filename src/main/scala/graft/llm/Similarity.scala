@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.VectorAggregates.{top1PerGroup, topKPerGroup}
 
 /** Similarity search over an embedding column (`ArrayType(FloatType)`).
   *
@@ -64,12 +65,12 @@ object Similarity {
 
   /** Exact brute-force cosine top-k for a probe subset.
     *
-    * The probes broadcast against one corpus scan; ranking is a bounded
-    * top-k `Aggregator` ([[graft.functions.VectorAggregates.TopKAgg]]),
-    * NOT a row_number window: partial aggregation reduces each scan
-    * partition to ≤ k candidates per query map-side, so the exchange
-    * carries O(queries × partitions × k) rows — a window would shuffle
-    * every probes×corpus scored row first. Same total order
+    * The probes broadcast against one corpus scan; ranking is
+    * [[graft.functions.VectorAggregates.topKPerGroup]]'s bounded top-k
+    * aggregate, NOT a row_number window: partial aggregation reduces
+    * each scan partition to ≤ k candidates per query map-side, so the
+    * exchange carries O(queries × partitions × k) rows — a window would
+    * shuffle every probes×corpus scored row first. Same total order
     * (cos DESC, cand_id ASC), identical output. */
   def bruteForceTopK(vectors: DataFrame, probeFilter: Column, k: Int): DataFrame = {
     val probes = vectors.filter(probeFilter)
@@ -78,12 +79,7 @@ object Similarity {
     broadcast(probes)
       .join(corpus, col("query_id") =!= col("cand_id"))
       .withColumn("cos", expr(cosineExpr("qv", "cv")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VectorAggregates
-        .topKOf(k, col("cos"), col("cand_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("query_id"), (col("i") + 1).cast("int").as("rnk"),
-        col("s.cand_id").as("cand_id"), col("s.cos").as("cos"))
+      .transform(topKPerGroup(_, "query_id", k, "cos", "cand_id"))
   }
 
   def bruteForceTopKSql(table: String, probeWhere: String, k: Int): String = s"""
@@ -107,7 +103,7 @@ object Similarity {
     * pushdown to parquet — a selective filter prunes I/O, not just
     * compute) and (b) the top-k is always k deep — post-filtering a
     * top-k list can silently return fewer than k when the filter bites.
-    * Same bounded top-k `Aggregator` as [[bruteForceTopK]]: map-side
+    * Same bounded top-k aggregate as [[bruteForceTopK]]: map-side
     * partials, the exchange carries O(queries × partitions × k). */
   def filteredTopK(vectors: DataFrame, probeFilter: Column,
                    candWhere: String, k: Int): DataFrame = {
@@ -118,12 +114,7 @@ object Similarity {
     broadcast(probes)
       .join(corpus, col("query_id") =!= col("cand_id"))
       .withColumn("cos", expr(cosineExpr("qv", "cv")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VectorAggregates
-        .topKOf(k, col("cos"), col("cand_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("query_id"), (col("i") + 1).cast("int").as("rnk"),
-        col("s.cand_id").as("cand_id"), col("s.cos").as("cos"))
+      .transform(topKPerGroup(_, "query_id", k, "cos", "cand_id"))
   }
 
   def filteredTopKSql(table: String, probeWhere: String, candWhere: String,
@@ -148,7 +139,7 @@ object Similarity {
     * contrastive objective learns the most from (random negatives are
     * trivially far). Unlike [[filteredTopK]]'s static predicate this is
     * a PER-PAIR relational condition (probe.label ≠ cand.label), so it
-    * lives in the join, and the bounded top-k `Aggregator` still keeps
+    * lives in the join, and the bounded top-k aggregate still keeps
     * the exchange at O(probes × partitions × k). */
   def hardNegatives(vectors: DataFrame, probeFilter: Column, k: Int): DataFrame = {
     val probes = vectors.filter(probeFilter)
@@ -159,12 +150,7 @@ object Similarity {
     broadcast(probes)
       .join(corpus, col("qlabel") =!= col("clabel"))
       .withColumn("cos", expr(cosineExpr("qv", "cv")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VectorAggregates
-        .topKOf(k, col("cos"), col("cand_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("query_id"), (col("i") + 1).cast("int").as("rnk"),
-        col("s.cand_id").as("cand_id"), col("s.cos").as("cos"))
+      .transform(topKPerGroup(_, "query_id", k, "cos", "cand_id"))
   }
 
   def hardNegativesSql(table: String, probeWhere: String, k: Int): String = s"""
@@ -320,9 +306,10 @@ object Similarity {
     * the deterministic per-cell means of [[centroids]] re-assembled into
     * float arrays (float cast is exact IEEE round-to-nearest in both
     * engines), BROADCAST against one corpus scan — k centroids vs 100 TB
-    * of vectors never shuffles the corpus. The argmax is the bounded
-    * top-1 `Aggregator` (map-side partials), not a row_number window;
-    * ties break toward the lower cell id. */
+    * of vectors never shuffles the corpus. The argmax is
+    * [[graft.functions.VectorAggregates.topKPerGroup]] at k = 1
+    * (map-side partials), not a row_number window; ties break toward
+    * the lower cell id. */
   def ivfAssign(vectors: DataFrame, cellCol: String): DataFrame = {
     val centArr = centroids(vectors, cellCol)
       .groupBy(col("cell"))
@@ -331,11 +318,8 @@ object Similarity {
     vectors.select(col("vec_id"), col("embedding"))
       .join(broadcast(centArr))
       .withColumn("cos", expr(cosineExpr("embedding", "cv")))
-      .groupBy(col("vec_id"))
-      .agg(graft.functions.VectorAggregates
-        .topKOf(1, col("cos"), col("cell").cast("long")).as("top"))
-      .select(col("vec_id"), col("top")(0).getField("cand_id").as("cell"),
-        col("top")(0).getField("cos").as("cos"))
+      .transform(topKPerGroup(_, "vec_id", 1, "cos", "cell"))
+      .select("vec_id", "cell", "cos")
   }
 
   def ivfAssignSql(table: String, cellCol: String): String = s"""
@@ -368,8 +352,9 @@ object Similarity {
     * for. Returns the final assignment (vec_id, cell, cos).
     *
     * Scale shape per round: centroids are k tiny rows — they BROADCAST
-    * against one corpus scan; the argmax is the bounded top-1 `Aggregator`
-    * (map-side partials, no row_number shuffle); the update explodes
+    * against one corpus scan; the argmax is the encoded top-1
+    * ([[graft.functions.VectorAggregates.top1PerGroup]]: map-side
+    * partials, no row_number shuffle); the update explodes
     * (cell, dim, value) and hash-aggregates with map-side combine. So each
     * round costs one corpus scan + one k×dims-bounded aggregation, and the
     * corpus itself never shuffles. The corpus frame is persisted across
@@ -381,47 +366,29 @@ object Similarity {
     require(rounds >= 1, s"rounds $rounds must be >= 1")
     val v = vectors.select(col("vec_id"), col("embedding"))
       .transform(graft.core.EngineCache.persisted)
-    // r14 (q213's encoded-top-1 lesson applied to the assign step): the
-    // argmax per vec_id is a corpus-sized GROUP cardinality, where the
-    // object-agg topKOf falls back to sort-based past the 128-key
-    // fallback threshold and pays encoder ser/de per scored row. But
-    // `cos` is already on the 1e-6 grid (cosineExpr's floor bridge) and
-    // the cell ids are FIXED for every round (they are the seed
-    // vec_ids), so top-1 by (cos DESC, cell ASC) encodes into one LONG:
-    // enc = (round(cos·1e6) + 1e6 + 1)·B − cell with B the first power
-    // of two above the largest seed id — a plain `max` that runs as a
-    // map-side-combinable HashAggregate. Decode is integer div
-    // arithmetic plus the SAME (double)m / 1e6 division the grid
-    // bridge performs, so cell and cos are bit-identical (cross-checked
-    // in PipelineOpsSpec). GUARDED: negative or huge seed ids (or an
-    // empty corpus) fall back to the object-agg spelling unchanged.
-    // The seed collect doubles as the corpus materialization barrier.
+    // The argmax per vec_id is a corpus-sized GROUP cardinality, so it is
+    // [[top1PerGroup]]'s encoded-long max, not the object top-k aggregate
+    // (which falls back to sort-based past 128 keys and pays encoder
+    // ser/de per scored row). `cos` is already on the 1e-6 grid
+    // (cosineExpr's floor bridge), so s = round(cos·1e6) + 1000001 is an
+    // integral score in [1, 2000001], and the cell ids are FIXED for every
+    // round (they are the seed vec_ids): their observed range is the id
+    // bound. Decoding s back is the SAME (double)m / 1e6 division the
+    // grid bridge performs, so cell and cos are bit-identical (cross-
+    // checked in PipelineOpsSpec). The seed collect doubles as the corpus
+    // materialization barrier.
     val seedIds = v.filter(col("vec_id") < k).select(col("vec_id"))
       .collect().map(_.getAs[Number](0).longValue)
-    val encB = if (seedIds.isEmpty) 0L
-      else java.lang.Long.highestOneBit(math.max(seedIds.max, 1L)) * 2
-    val encodedOk = seedIds.nonEmpty && seedIds.forall(_ >= 0) &&
-      encB > 0 && encB <= Long.MaxValue / 2000002L
+    val (idMin, idMax) =
+      if (seedIds.isEmpty) (0L, 0L) else (seedIds.min, seedIds.max)
     def assign(cents: DataFrame): DataFrame =
-      if (encodedOk)
-        v.join(broadcast(cents))
-          .withColumn("cos", expr(cosineExpr("embedding", "cv")))
-          .groupBy(col("vec_id"))
-          .agg(max(expr("(CAST(round(cos * 1e6) AS BIGINT) + 1000001L) * " +
-            s"${encB}L - CAST(cell AS BIGINT)")).as("enc"))
-          .select(col("vec_id"),
-            expr(s"((enc + ${encB - 1}L) div ${encB}L) * ${encB}L - enc")
-              .as("cell"),
-            expr(s"CAST((enc + ${encB - 1}L) div ${encB}L - 1000001L " +
-              "AS DOUBLE) / 1e6").as("cos"))
-      else
-        v.join(broadcast(cents))
-          .withColumn("cos", expr(cosineExpr("embedding", "cv")))
-          .groupBy(col("vec_id"))
-          .agg(graft.functions.VectorAggregates
-            .topKOf(1, col("cos"), col("cell")).as("top"))
-          .select(col("vec_id"), col("top")(0).getField("cand_id").as("cell"),
-            col("top")(0).getField("cos").as("cos"))
+      v.join(broadcast(cents))
+        .withColumn("cos", expr(cosineExpr("embedding", "cv")))
+        .withColumn("s", expr("CAST(round(cos * 1e6) AS BIGINT) + 1000001"))
+        .transform(top1PerGroup(_, "vec_id", "s", "cell", idMin, idMax,
+          2000001L))
+        .select(col("vec_id"), col("cell"),
+          expr("CAST(s - 1000001 AS DOUBLE) / 1e6").as("cos"))
     def update(assigned: DataFrame): DataFrame =
       assigned.join(v, "vec_id")
         .select(col("cell"), posexplode(col("embedding")).as(Seq("dim", "x")))

@@ -486,7 +486,7 @@ object CorpusOps {
     * 1/(C+rank) term is floor-bridged to an exact 1e9-grid integer, so
     * the fused score is a BIGINT sum — rank ties break by doc_id.
     * Scale shape: both input rankings are already k-bounded per query
-    * (BM25's windowed top-k, dense's bounded top-k `Aggregator`), so
+    * (BM25's windowed top-k, dense's bounded top-k aggregate), so
     * the fusion join touches O(queries × k) rows regardless of corpus
     * size. */
   val RrfC = 60              // the standard RRF damping constant
@@ -507,12 +507,9 @@ object CorpusOps {
       .join(e.select(col("vec_id").as("doc_id"), col("embedding").as("cv")),
         col("doc_id") =!= col("probe_id"))
       .withColumn("cos", expr(Similarity.cosineExpr("qv", "cv")))
-      .groupBy(col("query_id"))
-      .agg(graft.functions.VectorAggregates
-        .topKOf(Bm25TopK, col("cos"), col("doc_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("query_id"), col("s.cand_id").as("doc_id"),
-        (col("i") + 1).cast("int").as("dense_rk"))
+      .transform(graft.functions.VectorAggregates
+        .topKPerGroup(_, "query_id", Bm25TopK, "cos", "doc_id"))
+      .select(col("query_id"), col("doc_id"), col("rnk").as("dense_rk"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf9").desc, col("doc_id"))
     sparse.join(dense, Seq("query_id", "doc_id"), "full_outer")

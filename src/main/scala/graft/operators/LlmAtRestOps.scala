@@ -571,7 +571,8 @@ private[graft] trait LlmAtRestOps { this: LlmQueries.type =>
     * the fourth mergeable-sketch family (beside HLL/DDSketch/CMS/Bloom):
     * each source's distinct 3-word-shingle set reduces to its K
     * smallest 60-bit hashes — a [[KmvK]]-row sketch a billion-shingle
-    * source still fits in — built with the bounded TopKAgg (map-side
+    * source still fits in — built with the bounded
+    * [[graft.functions.VectorAggregates.bottomKDistinctOf]] (map-side
     * partials, never a per-source window sort). The pairwise estimate
     * is the classic KMV form: merge two sketches, keep the union's K
     * smallest, and the fraction present in BOTH estimates J(A,B). The

@@ -608,16 +608,17 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
     * [[MultiProbe]] nearest cells instead of one — recall climbs at
     * nprobe/K of the scan cost, which is exactly the trade a
     * billion-vector inverted file tunes. Centroids are K tiny rows
-    * (broadcast); cell ranking and the candidate top-k both ride the
-    * bounded TopKAgg; the corpus never shuffles. Oracle replays
-    * Lloyd → member centroids → cell ranking → search. */
+    * (broadcast); cell ranking and the candidate top-k both ride
+    * [[graft.functions.VectorAggregates.topKPerGroup]]; the corpus never
+    * shuffles. Oracle replays Lloyd → member centroids → cell ranking →
+    * search. */
   val MultiProbe = 2
 
   /** (vk, pcells, results) — the multiprobe internals, exposed so the
     * q169 audit can price the nprobe trade from the same frames. */
   def annMultiprobeParts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    import graft.functions.VectorAggregates.topKOf
+    import graft.functions.VectorAggregates.topKPerGroup
     val vecs = embs(spark, dir)
     val vk = vecs.select(col("vec_id"), col("embedding"))
       .join(Similarity.kmeansLloyd(vecs, KmK, KmRounds)
@@ -634,19 +635,16 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val pcells = broadcast(probes).join(broadcast(cents))
       .withColumn("ccos", expr(Similarity.cosineExpr("qv", "cv")))
-      .groupBy(col("query_id"))
-      .agg(topKOf(MultiProbe, col("ccos"), col("cell")).as("top"))
-      .select(col("query_id"), explode(col("top.cand_id")).as("cell"))
+      .transform(topKPerGroup(_, "query_id", MultiProbe, "ccos", "cell"))
+      .select("query_id", "cell")
     val results = pcells
       .join(broadcast(probes), "query_id")
       .join(vk, "cell")
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", expr(Similarity.cosineExpr("qv", "embedding")))
-      .groupBy(col("query_id"))
-      .agg(topKOf(IvfK, col("cos"), col("vec_id")).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("query_id"), (col("i") + 1).cast("int").as("rnk"),
-        col("s.cand_id").as("cand_id"), col("s.cos").as("cos"))
+      .transform(topKPerGroup(_, "query_id", IvfK, "cos", "vec_id"))
+      .select(col("query_id"), col("rnk"), col("vec_id").as("cand_id"),
+        col("cos"))
     (vk, pcells, results)
   }
 
@@ -1199,12 +1197,12 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
     * seeded-xhash mod 1e6 + 1 ∈ [1, 1e6] — one BIGINT both engines
     * grid identically (|s9| ≤ 1.4e10 < 2⁵³, exact as a double) — and
     * the per-language top-[[EsK]] by (s9 DESC, doc_id) IS the ES
-    * sample. Scale shape: the selection rides q39's bounded top-k
-    * `Aggregator` (map-side partials: the shuffle carries
-    * O(langs × partitions × K) rows, never a per-language corpus
-    * sort — the row_number spelling the oracle uses is the proof, not
-    * the plan), and token counts re-attach to the O(langs × K) winners
-    * by one broadcast join. */
+    * sample. Scale shape: the selection rides q39's
+    * [[graft.functions.VectorAggregates.topKPerGroup]] (map-side
+    * partials: the shuffle carries O(langs × partitions × K) rows,
+    * never a per-language corpus sort — the row_number spelling the
+    * oracle uses is the proof, not the plan), and token counts
+    * re-attach to the O(langs × K) winners by one broadcast join. */
   val EsK = 8
 
   private def esScoreSql(u6: String, w: String): String =
@@ -1227,12 +1225,9 @@ private[graft] trait LlmSamplingOps { this: LlmQueries.type =>
       .withColumn("u6",
         xhash(concat(lit("es:"), col("doc_id").cast("string"))) % 1000000 + 1)
       .withColumn("s9", expr(esScoreSql("u6", "toks")))
-    val top = scored.groupBy("lang")
-      .agg(graft.functions.VectorAggregates.topKOf(EsK,
-        col("s9").cast("double"), col("doc_id")).as("win"))
-      .select(col("lang"), posexplode(col("win")).as(Seq("pos", "w")))
-      .select(col("lang"), (col("pos") + 1).cast("long").as("rk"),
-        col("w.cand_id").as("doc_id"))
+    val top = graft.functions.VectorAggregates
+      .topKPerGroup(scored, "lang", EsK, "s9", "doc_id")
+      .select(col("lang"), col("rnk").cast("long").as("rk"), col("doc_id"))
     scored.select(col("doc_id"), col("toks"))
       .join(bcast(top), "doc_id")
       .select(col("lang"), col("rk"), col("doc_id"),

@@ -823,13 +823,11 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
       .select(col("vec_id").as("cand_id"), col("embedding").as("cv"))
     graft.core.EngineCache.persisted(
       broadcast(probes2).join(corpus2)
-        .withColumn("d6",
-          expr("CAST(floor(l2_sq(qv, cv) * 1e6 + 0.5) AS BIGINT)"))
-        .groupBy(col("probe_id"))
-        .agg(graft.functions.VectorAggregates
-          .topKOf(PqTopK, -col("d6").cast("double"), col("cand_id")).as("top"))
-        .select(col("probe_id").as("query_id"),
-          explode(col("top.cand_id")).as("cand_id")))
+        .withColumn("nd6",
+          expr("-CAST(floor(l2_sq(qv, cv) * 1e6 + 0.5) AS BIGINT)"))
+        .transform(graft.functions.VectorAggregates
+          .topKPerGroup(_, "probe_id", PqTopK, "nd6", "cand_id"))
+        .select(col("probe_id").as("query_id"), col("cand_id")))
       .createOrReplaceTempView(s"graft_ara_t2_t$tid")
     pqAdcSearch(spark, dir)
       .select(col("probe_id").as("query_id"), col("vec_id").as("cand_id"))
@@ -2389,8 +2387,8 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * never a cartesian — and per-cell work is |X_c|·|Y_c|. The scored
     * frame is the one quadratic-within-cell intermediate; it persists
     * because BOTH direction's top-k aggregations consume it, and each
-    * aggregation is the bounded [[graft.functions.VectorAggregates]]
-    * top-k (map-side k-bounded — the exchange carries O(n·k), the
+    * aggregation is [[graft.functions.VectorAggregates.topKPerGroup]]
+    * (map-side k-bounded — the exchange carries O(n·k), the
     * window form would shuffle every scored row).
     *
     * Determinism: c6 = floor(cos·1e6 + 0.5) as BIGINT the moment it
@@ -2415,14 +2413,10 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
       .select(col("xid"), col("yid"),
         expr("CAST(floor(cosine_sim(xv, yv) * 1e6 + 0.5) AS BIGINT)").as("c6"))
       .transform(graft.core.EngineCache.persisted)
-    def side(idCol: String, otherCol: String) = scored
-      .groupBy(col(idCol))
-      .agg(graft.functions.VectorAggregates
-        .topKOf(MineK, col("c6").cast("double"), col(otherCol)).as("top"))
-      .select(col(idCol), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col(idCol), col("s.cand_id").as(otherCol),
-        col("s.cos").cast("long").as("c6"),
-        (col("i") + 1).as("rk"))
+    def side(idCol: String, otherCol: String) = graft.functions.VectorAggregates
+      .topKPerGroup(scored, idCol, MineK, "c6", otherCol)
+      .select(col(idCol), col(otherCol), col("c6").cast("long").as("c6"),
+        col("rnk").as("rk"))
     val tx = side("xid", "yid").transform(graft.core.EngineCache.persisted)
     val ty = side("yid", "xid").transform(graft.core.EngineCache.persisted)
     val ax = tx.groupBy("xid").agg(sum("c6").as("sx6"), count(lit(1)).as("kx"))
@@ -2690,13 +2684,23 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     * (vec_id, embedding) frame: band-join candidates, exact cosine,
     * top-G per node. */
   private[graft] def nswGraphOf(vectors: DataFrame,
-      geom: NswGeometry = NswGeometry.frozen): DataFrame = {
+      geom: NswGeometry = NswGeometry.frozen): DataFrame =
+    nswTopG(graft.llm.Similarity.srpCandidatePairs(
+      vectors, geom.bits, geom.bands), None)
+
+  /** Edge selection, shared by the build and every repair: both
+    * directions of each scored candidate pair (id_a, id_b, cos), then
+    * the top-[[NswG]] per src by (cos DESC, dst). `srcs` (a vec_id
+    * frame) restricts it to the sources being repaired, by a broadcast
+    * semi-join ahead of the window. */
+  private def nswTopG(pairs: DataFrame, srcs: Option[DataFrame]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val pairs = graft.llm.Similarity.srpCandidatePairs(
-      vectors, geom.bits, geom.bands)
-    pairs.select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(pairs.select(col("id_b").as("src"),
-        col("id_a").as("dst"), col("cos")))
+    val directed = pairs
+      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
+      .unionByName(pairs
+        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
+    srcs.fold(directed)(s => directed.join(
+        broadcast(s.select(col("vec_id").as("src"))), Seq("src"), "left_semi"))
       .withColumn("rk", row_number().over(Window.partitionBy(col("src"))
         .orderBy(col("cos").desc, col("dst"))))
       .filter(col("rk") <= NswG)
@@ -2924,6 +2928,28 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     else
       graft.llm.Dedup.lshCandidatePairsTouching(sigP, bandKeysStr, keep)
 
+  /** The bounded top-G repair all three maintenance verbs run, over
+    * `sigP` (id, sig, embedding) — the signatures of the store being
+    * maintained with their current payloads: candidate pairs touching
+    * `srcs` (a vec_id frame), their payload cosine, the top-G of each
+    * source in `srcs`, and the stored rows minus those of every source
+    * in `replaced`, unioned with the fresh rows. A stored row outside
+    * `replaced` passes through verbatim. */
+  private def nswRepair(sigP: DataFrame, srcs: DataFrame, baseAdj: DataFrame,
+                        replaced: Seq[DataFrame], geom: NswGeometry): DataFrame = {
+    val bandKeysStr = srpBandKeys("sig", geom).mkString(", ")
+    val pairs = graft.llm.Dedup.joinBackPayload(
+        candidatePairsAdaptive(sigP, bandKeysStr, srcs.select("vec_id")),
+        sigP, "embedding")
+      .withColumn("cos",
+        expr(graft.llm.Similarity.cosineExpr("embedding_a", "embedding_b")))
+      .select(col("id_a"), col("id_b"), col("cos"))
+    replaced.foldLeft(baseAdj)((adj, r) => adj.join(
+        broadcast(r.select(col("vec_id").as("src"))), Seq("src"), "left_anti"))
+      .select("src", "dst", "cos")
+      .unionByName(nswTopG(pairs, Some(srcs)))
+  }
+
   /** Band-mate trigger: the base nodes sharing ≥ 1 band bucket with a
     * batch arrival — the ONLY base nodes whose deterministic top-G can
     * change when the batch joins the candidate pool (edge selection
@@ -2976,9 +3002,7 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
                                           baseAdj: DataFrame,
                                           batchSigsIn: DataFrame,
       geom: NswGeometry = NswGeometry.frozen): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     def P(df: DataFrame): DataFrame = graft.core.EngineCache.persisted(df)
-    val bandKeysStr = srpBandKeys("sig", geom).mkString(", ")
     val batchSigs = P(batchSigsIn.select("vec_id", "sig"))
     // affected base nodes: share >= 1 bucket with a batch arrival
     val affected = P(nswAppendAffectedOf(baseSigs, batchSigs, geom))
@@ -2994,28 +3018,8 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     val sigP = P(baseSigs.unionByName(batchSigs)
       .select(col("vec_id").as("id"), col("sig"))
       .join(vectors.select(col("vec_id").as("id"), col("embedding")), "id"))
-    val pairs = graft.llm.Dedup.joinBackPayload(
-        candidatePairsAdaptive(sigP, bandKeysStr, srcs.select("vec_id")),
-        sigP, "embedding")
-      .withColumn("cos",
-        expr(graft.llm.Similarity.cosineExpr("embedding_a", "embedding_b")))
-      .select(col("id_a"), col("id_b"), col("cos"))
-    val directed = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(pairs
-        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
-    val fresh = directed
-      .join(broadcast(srcs.select(col("vec_id").as("src"))),
-        Seq("src"), "left_semi")
-      .withColumn("rk", row_number().over(Window.partitionBy(col("src"))
-        .orderBy(col("cos").desc, col("dst"))))
-      .filter(col("rk") <= NswG)
-      .select("src", "dst", "cos")
     // untouched stored rows pass through verbatim — the at-rest scan
-    baseAdj.join(affected.select(col("vec_id").as("src")),
-        Seq("src"), "left_anti")
-      .select("src", "dst", "cos")
-      .unionByName(fresh)
+    nswRepair(sigP, srcs, baseAdj, Seq(affected), geom)
   }
 
   def nswAppendServe(spark: SparkSession, dir: String): DataFrame = {
@@ -3086,7 +3090,6 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
                                          vectors: DataFrame,
                                          tombIds: DataFrame,
       geom: NswGeometry = NswGeometry.frozen): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     def P(df: DataFrame): DataFrame = graft.core.EngineCache.persisted(df)
     val tombs = P(tombIds.toDF("vec_id"))
     // affected survivors: a stored out-edge points at a dead node —
@@ -3102,33 +3105,9 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     val sigP = P(survSigs
       .select(col("vec_id").as("id"), col("sig"))
       .join(vectors.select(col("vec_id").as("id"), col("embedding")), "id"))
-    val bandKeysStr = srpBandKeys("sig", geom).mkString(", ")
-    val pairs = graft.llm.Dedup.joinBackPayload(
-        candidatePairsAdaptive(sigP, bandKeysStr, affected.select("vec_id")),
-        sigP, "embedding")
-      .withColumn("cos",
-        expr(graft.llm.Similarity.cosineExpr("embedding_a", "embedding_b")))
-      .select(col("id_a"), col("id_b"), col("cos"))
-    val directed = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(pairs
-        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
-    val fresh = directed
-      .join(broadcast(affected.select(col("vec_id").as("src"))),
-        Seq("src"), "left_semi")
-      .withColumn("rk", row_number().over(Window.partitionBy(col("src"))
-        .orderBy(col("cos").desc, col("dst"))))
-      .filter(col("rk") <= NswG)
-      .select("src", "dst", "cos")
     // unaffected survivors pass through verbatim (by construction none
     // of their stored dsts died); dead srcs leave by anti-join
-    baseAdj
-      .join(broadcast(tombs.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(affected.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .select("src", "dst", "cos")
-      .unionByName(fresh)
+    nswRepair(sigP, affected, baseAdj, Seq(tombs, affected), geom)
   }
 
   def nswDeleteServe(spark: SparkSession, dir: String): DataFrame = {
@@ -3195,9 +3174,7 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
                                       baseAdj: DataFrame,
                                       pred: String,
       geom: NswGeometry = NswGeometry.frozen): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     def P(df: DataFrame): DataFrame = graft.core.EngineCache.persisted(df)
-    val bandKeysStr = srpBandKeys("sig", geom).mkString(", ")
     val tombs = P(baseSigs.filter(pred).select("vec_id"))
     val survSigs = P(baseSigs.filter(s"NOT ($pred)"))
     val batchSigs = P(nswSigsOf(updated.filter(pred), geom))
@@ -3216,30 +3193,7 @@ private[graft] trait ScaleAnnOps { this: ScaleOps.type =>
     val sigP = P(survSigs.unionByName(batchSigs)
       .select(col("vec_id").as("id"), col("sig"))
       .join(updated.select(col("vec_id").as("id"), col("embedding")), "id"))
-    val pairs = graft.llm.Dedup.joinBackPayload(
-        candidatePairsAdaptive(sigP, bandKeysStr, srcs.select("vec_id")),
-        sigP, "embedding")
-      .withColumn("cos",
-        expr(graft.llm.Similarity.cosineExpr("embedding_a", "embedding_b")))
-      .select(col("id_a"), col("id_b"), col("cos"))
-    val directed = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("cos"))
-      .unionByName(pairs
-        .select(col("id_b").as("src"), col("id_a").as("dst"), col("cos")))
-    val fresh = directed
-      .join(broadcast(srcs.select(col("vec_id").as("src"))),
-        Seq("src"), "left_semi")
-      .withColumn("rk", row_number().over(Window.partitionBy(col("src"))
-        .orderBy(col("cos").desc, col("dst"))))
-      .filter(col("rk") <= NswG)
-      .select("src", "dst", "cos")
-    baseAdj
-      .join(broadcast(tombs.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .join(broadcast(affected.select(col("vec_id").as("src"))),
-        Seq("src"), "left_anti")
-      .select("src", "dst", "cos")
-      .unionByName(fresh)
+    nswRepair(sigP, srcs, baseAdj, Seq(tombs, affected), geom)
   }
 
   def nswUpdateServe(spark: SparkSession, dir: String): DataFrame = {

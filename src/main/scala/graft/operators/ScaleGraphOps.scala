@@ -590,17 +590,13 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     *    the cached edges are never shuffled per round and the old
     *    `repartition(dst)` was one full 2|E|-row exchange bought for
     *    nothing (guide §2.4 — measured 2.76 s → 2.03 s on the build);
-    *  - the per-node top-1 prefers an ENCODED-LONG max over the
-    *    max-struct spelling: `c·B − lab` (B = the first power of two
-    *    above the largest node id) orders exactly like (c DESC, lab
-    *    ASC), and a LONG max runs as a map-side-combinable
-    *    HashAggregate where a struct buffer forces SortAggregate +
-    *    extra Sort (measured ~0.3-0.9 s/round at sf0.1; labels decode
-    *    with pure integer `div` arithmetic, no double rounding). The
-    *    encoding is GUARDED by the ids actually seen: it applies only
-    *    when ids are non-negative and c·B cannot overflow int64
-    *    (c ≤ |E|); otherwise the struct spelling runs unchanged —
-    *    so arbitrary-id graphs stay correct. */
+    *  - the per-node top-1 is
+    *    [[graft.functions.VectorAggregates.top1PerGroup]]: an
+    *    ENCODED-LONG max `c·B − lab` where the ids seen allow it (a
+    *    LONG max runs as a map-side-combinable HashAggregate where a
+    *    struct buffer forces SortAggregate + extra Sort, measured
+    *    ~0.3-0.9 s/round at sf0.1), the struct max otherwise — so
+    *    arbitrary-id graphs stay correct. */
   private def lpCore(li: DataFrame): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.functions._
     // r13 batch 3: the r13 batch-1 change dropped the old dst-keyed
@@ -615,21 +611,15 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
     val e = coPurchaseEdges(li, "src")
       .transform(graft.core.EngineCache.persisted)
     // one pass over the cached edges: id range (gates the encoded top-1)
-    // + |E| (its overflow bound) — doubles as the edge materialization
-    // barrier the old spelling paid the first round's join for
+    // + |E| (its score bound: c ≤ |E|) — doubles as the edge
+    // materialization barrier the old spelling paid the first round's
+    // join for
     val idStats = e.agg(
-      min(least(col("src"), col("dst"))).as("mn"),
-      max(greatest(col("src"), col("dst"))).as("mx"),
-      count(lit(1)).as("m")).head
-    val (encodedOk, encB) =
-      if (idStats.isNullAt(0) || idStats.isNullAt(1)) (false, 0L)
-      else {
-        val mn = idStats.getAs[Number](0).longValue
-        val mx = idStats.getAs[Number](1).longValue
-        val m = idStats.getLong(2)
-        val b = java.lang.Long.highestOneBit(math.max(mx, 1L)) * 2
-        (mn >= 0 && b > 0 && m + 1 <= Long.MaxValue / b, b)
-      }
+      coalesce(min(least(col("src"), col("dst"))), lit(0L)),
+      coalesce(max(greatest(col("src"), col("dst"))), lit(0L)),
+      count(lit(1))).head
+    val (idMin, idMax, m) = (idStats.getAs[Number](0).longValue,
+      idStats.getAs[Number](1).longValue, idStats.getLong(2))
     var lab = e.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("lab"))
     var labN = -1L // |lab| once read off a cut; gates q104's broadcast
@@ -639,22 +629,10 @@ private[graft] trait ScaleGraphOps { this: ScaleOps.type =>
         .groupBy(e("src").as("node"), col("lab"))
         .agg(count(lit(1)).as("c"))
       // top-1 = highest count, then LOWEST label — bit-identical to the
-      // oracle's (c DESC, lab) row_number pick in both spellings
-      lab =
-        if (encodedOk) {
-          // decode back to the label column's own dtype so the encoded
-          // path is schema-invisible (spec frames may carry int ids)
-          val labT = cnt.schema("lab").dataType.sql
-          cnt.groupBy("node")
-            .agg(max(col("c") * lit(encB) - col("lab")).as("enc"))
-            .select(col("node"), expr(
-              s"CAST(((enc + ${encB - 1}) div $encB) * $encB - enc " +
-                s"AS $labT)").as("lab"))
-        }
-        else
-          cnt.groupBy("node")
-            .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-            .select(col("node"), (-col("m.nl")).as("lab"))
+      // oracle's (c DESC, lab) row_number pick
+      lab = graft.functions.VectorAggregates
+        .top1PerGroup(cnt, "node", "c", "lab", idMin, idMax, m)
+        .select("node", "lab")
       if (i < LpIters) {
         val (c, r) = graft.core.EngineCache.cut(lab, count(lit(1)))
         lab = c

@@ -9,11 +9,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import graft.functions.{GraftFunctions, VectorAggregates}
-import graft.llm.Similarity
-import graft.core.Tables
 
 /** Native function + UDAF layer: the codegen'd cosine kernel and the
-  * one-pass centroid Aggregator against their composable references. */
+  * bounded aggregators against their composable references. */
 class FunctionsSpec extends SparkSpec {
 
   private def names(s: SparkSession) =
@@ -46,21 +44,6 @@ class FunctionsSpec extends SparkSpec {
     root.addAppender(appender)
     try body finally { root.removeAppender(appender); appender.stop() }
     seen.asScala.toSeq
-  }
-
-  test("one-pass centroid Aggregator matches the posexplode+avg reference") {
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val onePass = VectorAggregates.centroidsOnePass(emb, "label")
-      .select(col("cell"), posexplode(col("centroid")).as(Seq("dim", "c1")))
-    val reference = Similarity.centroids(emb, "label")
-      .withColumnRenamed("centroid", "c2")
-    val joined = onePass.join(reference, Seq("cell", "dim"), "full_outer")
-    assert(joined.filter(col("c1").isNull || col("c2").isNull).count() === 0,
-      "both forms must produce the same (cell, dim) keys")
-    // float inputs summed in different orders: agreement to 1e-7 is the
-    // right bar (values are O(1); double-vs-decimal path differs in ulps)
-    val maxDiff = joined.agg(max(abs(col("c1") - col("c2")))).head.getDouble(0)
-    assert(maxDiff < 1e-7, s"centroids diverged by $maxDiff")
   }
 
   test("bottom-k distinct Aggregator equals distinct+sort+take at every partitioning") {

@@ -549,6 +549,49 @@ class PipelineOpsSpec extends SparkSpec {
     }
   }
 
+  test("k-means assign's struct-max fallback equals the window pick on seed ids the encoding cannot take") {
+    val sq = spark
+    import sq.implicits._
+    import org.apache.spark.sql.expressions.Window
+    // seeds are the ids below k; seeds 0 and 1 (by position) point the
+    // same way, so the points near them tie on cos and the LOWER cell id
+    // must win; one round, the assignment against the seeds themselves
+    val dirs = Seq(Array(1f, 0f, 0f), Array(1f, 0f, 0f), Array(0f, 1f, 0f))
+    val points = Seq(Array(0.9f, 0.1f, 0f), Array(0.2f, 0.8f, 0.1f),
+      Array(0.5f, 0.5f, 0f), Array(0f, 0f, 1f), Array(1f, 0.01f, 0f))
+    def assigned(df: org.apache.spark.sql.DataFrame) = df
+      .select("vec_id", "cell", "cos").as[(Long, Long, Double)].collect().toSet
+    Seq(
+      "non-negative seed ids (the encoded max)" -> (3, Seq(2L, 0L, 1L)),
+      "negative seed ids" -> (0, Seq(-4L, -9L, -2L)),
+      "a Long.MinValue seed id" -> (0, Seq(-1L, Long.MinValue, -5L))
+    ).foreach { case (what, (k, seedIds)) =>
+      val v = (seedIds.zip(dirs) ++ points.zipWithIndex.map {
+        case (p, i) => (k + 10L + i, p) }).toDF("vec_id", "embedding")
+      val seeds = v.filter($"vec_id" < k)
+        .select($"vec_id".as("cell"), $"embedding".as("cv"))
+      val want = assigned(v.join(broadcast(seeds))
+        .withColumn("cos", expr(graft.llm.Similarity.cosineExpr("embedding", "cv")))
+        .withColumn("rn", row_number().over(Window.partitionBy("vec_id")
+          .orderBy($"cos".desc, $"cell")))
+        .filter($"rn" === 1))
+      val got = assigned(graft.llm.Similarity.kmeansLloyd(v, k, 1))
+      assert(got.size == 8 && got == want, s"$what: $got vs $want")
+      assert(got.exists(_._2 == seedIds.min), s"$what: the tie goes to the lower id")
+      graft.core.EngineCache.releaseAll()
+    }
+    // seed ids are below k, an Int, so an id range whose B overflows with
+    // the score range (scores reach 2000001) cannot come from kmeansLloyd
+    // itself; the pick gets that range here with the assign step's bounds
+    val big = 1L << 45
+    val scored = Seq((1L, 2000001L, big + 3), (1L, 2000001L, big),
+      (2L, 17L, big + 1), (2L, 1L, 0L)).toDF("vec_id", "s", "cell")
+    assert(graft.functions.VectorAggregates
+      .top1PerGroup(scored, "vec_id", "s", "cell", 0L, big + 3, 2000001L)
+      .as[(Long, Long, Long)].collect().toSet ==
+      Set((1L, big, 2000001L), (2L, big + 1, 17L)))
+  }
+
   test("filtered ANN is k-deep, respects the predicate, and beats post-filtering") {
     val got = LlmQueries.annFiltered(spark, sfDir).collect()
     val evenLabelIds = graft.core.Tables.load(spark, sfDir, "embeddings")

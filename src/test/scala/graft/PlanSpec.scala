@@ -55,9 +55,9 @@ class PlanSpec extends SparkSpec {
   test("ANN top-k is a partial aggregation, not a row_number window") {
     val p = plan(Similarity.bruteForceTopK(
       graft.core.Tables.load(spark, sfDir, "embeddings"), col("vec_id") < 5, 3))
-    // TopKAgg runs under the standard two-phase agg contract: a partial
-    // (map-side) aggregate below the exchange reduces each partition to
-    // <= k rows per query before anything shuffles
+    // VectorAggregates.topKPerGroup runs under the standard two-phase agg
+    // contract: a partial (map-side) aggregate below the exchange reduces
+    // each partition to <= k rows per query before anything shuffles
     assert(p.contains("Aggregate"), s"expected aggregate-based top-k:\n$p")
     assert(!p.contains("Window"),
       s"row_number window would shuffle every scored row:\n$p")

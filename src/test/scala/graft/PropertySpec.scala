@@ -638,6 +638,60 @@ object EngineProperties extends Properties("engine") {
       rec == win
     }
 
+  // (g, score, id) frames for the top-k law: scores from a five-value
+  // set, so ties are the rule, −0.0 and 0.0 among them; ids unique per
+  // group; ~6 rows a group, so k = 8 outruns most groups
+  private val genScored: Gen[List[(Int, Double, Long)]] =
+    Gen.chooseNum(0, 24).flatMap(n => Gen.listOfN(n, Gen.zip(
+      Gen.chooseNum(0, 3),
+      Gen.frequency(3 -> Gen.const(-0.0), 3 -> Gen.const(0.0),
+        2 -> Gen.const(0.5), 1 -> Gen.const(1.0), 1 -> Gen.const(-1.0)),
+      Gen.chooseNum(0L, 12L))))
+      .map(_.groupBy(r => (r._1, r._3)).values.map(_.head).toList)
+
+  property("top-k per group equals the row_number window, rnk included") =
+    forAll(genScored, Gen.oneOf(1, 2, 3, 8)) { (rows, k) =>
+      val sq = spark
+      import sq.implicits._
+      val df = rows.toDF("g", "score", "id")
+      // (g, rnk) keys each row, so sorting by it compares multisets;
+      // tuple equality reads −0.0 == 0.0, as the window's sort does
+      def rowsOf(out: org.apache.spark.sql.DataFrame) =
+        out.select("g", "rnk", "id", "score").as[(Int, Int, Long, Double)]
+          .collect().toSeq.sortBy(r => (r._1, r._2))
+      val viaWindow = rowsOf(df.withColumn("rnk", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("g")
+            .orderBy(col("score").desc, col("id"))))
+        .filter(col("rnk") <= k))
+      Seq(1, 3).forall(parts => rowsOf(graft.functions.VectorAggregates
+        .topKPerGroup(df.repartition(parts), "g", k, "score", "id")) == viaWindow)
+    }
+
+  // (g, s ≥ 1, id ≥ 0) frames for the top-1 pick, ties in s the rule
+  private val genTop1: Gen[List[(Long, Long, Long)]] =
+    Gen.chooseNum(0, 30).flatMap(n => Gen.listOfN(n, Gen.zip(
+      Gen.chooseNum(0L, 4L), Gen.chooseNum(1L, 4L), Gen.chooseNum(0L, 40L))))
+
+  property("encoded top-1 and its struct fallback both equal the window pick") =
+    forAll(genTop1) { rows =>
+      val sq = spark
+      import sq.implicits._
+      val df = rows.toDF("g", "s", "id").repartition(3)
+      def pick(out: org.apache.spark.sql.DataFrame) =
+        out.select("g", "id", "s").as[(Long, Long, Long)].collect().toSet
+      val viaWindow = pick(df.withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("g")
+            .orderBy(col("s").desc, col("id"))))
+        .filter(col("rn") === 1))
+      val ids = rows.map(_._3)
+      val (mn, mx) = if (ids.isEmpty) (0L, 0L) else (ids.min, ids.max)
+      def top1(idMin: Long) = pick(graft.functions.VectorAggregates
+        .top1PerGroup(df, "g", "s", "id", idMin, mx, 4L))
+      // the true bounds take the encoded max; a claimed negative id
+      // bound forces the struct fallback over the same rows
+      top1(mn) == viaWindow && top1(-1L) == viaWindow
+    }
+
   // q213's hash-agg top-1 rests on this: max of (count, −label) picks the
   // same (count DESC, label ASC) winner as the oracle's row_number sort
   property("max(struct(c, -lab)) picks the (c DESC, lab ASC) head") =

@@ -2007,6 +2007,39 @@ class ScaleOpsSpec extends SparkSpec {
     graft.core.EngineCache.releaseAll()
   }
 
+  test("label propagation's struct-max fallback equals the window pick on ids the encoding cannot take") {
+    val sq = spark
+    import sq.implicits._
+    // three overlapping baskets over five parts: neighbor-label counts
+    // tie, so the (count DESC, label ASC) order decides every round.
+    // The oracle's row_number spelling, run by Spark, is the reference.
+    def baskets(ids: Seq[Long]) = Seq(100L -> 0, 100L -> 1, 100L -> 2,
+      200L -> 2, 200L -> 3, 200L -> 4, 300L -> 0, 300L -> 4)
+      .map { case (o, i) => (o, ids(i)) }.toDF("l_orderkey", "l_partkey")
+    Seq(
+      "non-negative ids (the encoded max)" -> Seq(0L, 3L, 5L, 9L, 12L),
+      "a negative id" -> Seq(-7L, -3L, 0L, 5L, 9L),
+      "ids whose B overflows with the count range" ->
+        Seq(1L << 61, 3L, (1L << 61) + 1, 17L, 4L),
+      "a Long.MinValue id" -> Seq(Long.MinValue, -1L, 2L, Long.MaxValue, 40L)
+    ).foreach { case (what, ids) =>
+      val li = baskets(ids)
+      li.createOrReplaceTempView("lp_fallback_li")
+      val out = ScaleOps.labelPropOf(li)
+      val got = out.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      val want = spark.sql(ScaleOps.labelPropSql("lp_fallback_li", ScaleOps.LpIters))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got.size == 5 && got == want, s"$what: $got vs $want")
+      // the last round's pick is in the final plan: a struct max runs as
+      // a SortAggregate, the encoded LONG max as a HashAggregate
+      val structMax = planNodes(out.queryExecution.executedPlan).exists(
+        _.isInstanceOf[org.apache.spark.sql.execution.aggregate.SortAggregateExec])
+      assert(structMax == (ids.min < 0 || ids.max >= (1L << 61)), what)
+      graft.core.EngineCache.releaseAll()
+    }
+  }
+
   test("MMR demotes the redundant twin below the diverse candidate") {
     val sq = spark
     import sq.implicits._

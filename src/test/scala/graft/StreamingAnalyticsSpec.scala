@@ -17,6 +17,38 @@ class StreamingAnalyticsSpec extends SparkSpec {
                  value: Double = 1.0): Event =
     Event(id, new Timestamp(BASE + minute * 60000L), user, typ, value)
 
+  /** The directories [[graft.streaming.TakedownPipeline]] lands per batch. */
+  private val takedownStores =
+    Seq("ids", "gramdec", "cbloomdec", "cmsdec", "ddqdec", "report")
+
+  /** Restarts a stream so that it REPLAYS micro-batch `n`, as a crash
+    * between the sink write and the commit would: `n`'s commit-log entry
+    * and its checksum go before `restart` runs, which must put batch n's
+    * input in the source before its query starts. Each of `dirs` is a
+    * directory batch n wrote; the replay must rewrite it (data files
+    * before and after, none of them the same file), not append to it. */
+  private def replayBatch(ckpt: String, n: Int, dirs: String*)(
+      restart: => Unit): Unit = {
+    def dataFiles(d: String): Set[String] = {
+      val f = new java.io.File(d)
+      if (!f.isDirectory) Set.empty
+      else org.apache.commons.io.FileUtils.listFiles(f, null, true)
+        .toArray(Array.empty[java.io.File]).map(_.getName)
+        .filter(_.startsWith("part-")).toSet
+    }
+    val before = dirs.map(dataFiles)
+    Seq(s"commits/$n", s"commits/.$n.crc").foreach { p =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$ckpt/$p"))
+    }
+    restart
+    dirs.zip(before).foreach { case (d, was) =>
+      val now = dataFiles(d)
+      assert(was.nonEmpty && now.nonEmpty, s"$d: batch $n's output")
+      assert((now intersect was).isEmpty,
+        s"$d: the replay must rewrite batch $n's output, not append to it")
+    }
+  }
+
   test("tumbling window aggregates by event time and drops late rows past watermark") {
     val sq = spark
     import sq.implicits._
@@ -287,7 +319,9 @@ class StreamingAnalyticsSpec extends SparkSpec {
     // a fresh MemoryStream with the SAME checkpoint replays batch 0 with
     // the same batchId — the failure-retry scenario; dynamic partition
     // overwrite must replace the batch's partition, not append to it
-    runOnce(Seq(ev(1, 0), ev(2, 1)))
+    replayBatch(ckpt, 0, s"$rawPath/batch_id=0", s"$aggPath/batch_id=0") {
+      runOnce(Seq(ev(1, 0), ev(2, 1)))
+    }
 
     assert(spark.read.parquet(rawPath).count() === 2,
       "replayed batchId must overwrite its own partition (exactly-once)")
@@ -360,20 +394,23 @@ class StreamingAnalyticsSpec extends SparkSpec {
     def runOnce(feed: org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)] => Unit): Unit = {
       val source = MemoryStream[(Long, String)]
+      feed(source)
       val q = EventAnalytics.startStreamingNearDedupAccumulating(
         source.toDF().toDF("doc_id", "text"), corpusSig,
         LlmQueries.WordShingleN, LlmQueries.MinhashK, LlmQueries.MinhashBands,
         LlmQueries.MinhashTau, dir, s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
     runOnce { s => s.addData(h1.toIndexedSeq: _*) }
     // restart from the checkpoint: batch 0 replays (and must not see its
     // own earlier signature write), then batch 1 arrives
-    runOnce { s =>
-      s.addData(h1.toIndexedSeq: _*)
-      s.addData(h2.toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, s"$dir/sigs/batch_run=0",
+        s"$dir/hits/batch_run=0") {
+      runOnce { s =>
+        s.addData(h1.toIndexedSeq: _*)
+        s.addData(h2.toIndexedSeq: _*)
+      }
     }
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2))
@@ -638,17 +675,19 @@ class StreamingAnalyticsSpec extends SparkSpec {
     def runOnce(feed: org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Long)] => Unit): Unit = {
       val source = MemoryStream[(Long, Long)]
+      feed(source)
       val q = EventAnalytics.startStreamingBloomShards(
         source.toDF().toDF("l_orderkey", "l_partkey"),
         s"$dir/blooms", s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
     runOnce { s => s.addData(h1.toIndexedSeq: _*) }
-    runOnce { s =>
-      s.addData(h1.toIndexedSeq: _*)
-      s.addData(h2.toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, s"$dir/blooms/batch_run=0") {
+      runOnce { s =>
+        s.addData(h1.toIndexedSeq: _*)
+        s.addData(h2.toIndexedSeq: _*)
+      }
     }
     val got = spark.read.parquet(s"$dir/blooms")
       .groupBy("shard").agg(expr("bloom_merge(sk)").as("sk"))
@@ -688,17 +727,19 @@ class StreamingAnalyticsSpec extends SparkSpec {
         .MemoryStream[(Long, String, Option[Long], Option[Long])] => Unit)
         : Unit = {
       val source = MemoryStream[(Long, String, Option[Long], Option[Long])]
+      feed(source)
       val q = EventAnalytics.startStreamingViewDeltas(
         source.toDF().toDF("key", "grp", "old_cents", "new_cents"),
         s"$dir/deltas", s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
     runOnce { s => s.addData(b0.toIndexedSeq: _*) }
-    runOnce { s =>
-      s.addData(b0.toIndexedSeq: _*) // the replay
-      s.addData(b1.toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, s"$dir/deltas/batch_run=0") {
+      runOnce { s =>
+        s.addData(b0.toIndexedSeq: _*) // the replay
+        s.addData(b1.toIndexedSeq: _*)
+      }
     }
     val got = EventAnalytics.summaryFromDeltas(base, s"$dir/deltas")
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
@@ -726,17 +767,19 @@ class StreamingAnalyticsSpec extends SparkSpec {
     def runOnce(feed: org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(String, Long)] => Unit): Unit = {
       val source = MemoryStream[(String, Long)]
+      feed(source)
       val q = EventAnalytics.startStreamingKmvShards(
         source.toDF().toDF("event_type", "user_id"),
         s"$dir/kmv", s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
     runOnce { s => s.addData(h1.toIndexedSeq: _*) }
-    runOnce { s =>
-      s.addData(h1.toIndexedSeq: _*)
-      s.addData(h2.toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, s"$dir/kmv/batch_run=0") {
+      runOnce { s =>
+        s.addData(h1.toIndexedSeq: _*)
+        s.addData(h2.toIndexedSeq: _*)
+      }
     }
     val got = spark.read.parquet(s"$dir/kmv")
       .groupBy("event_type").agg(expr("kmv_merge(sk)").as("sk"))
@@ -1022,16 +1065,18 @@ class StreamingAnalyticsSpec extends SparkSpec {
     def runOnce(feed: org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String)] => Unit): Unit = {
       val source = MemoryStream[(Long, String)]
+      feed(source)
       val q = TakedownPipeline.start(
         source.toDF().toDF("doc_id", "text"), dir, s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
     runOnce { s => s.addData(tombRows.take(1).toIndexedSeq: _*) }
-    runOnce { s =>
-      s.addData(tombRows.take(1).toIndexedSeq: _*)
-      s.addData(tombRows.drop(1).toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, takedownStores.map(t => s"$dir/$t/batch_run=0"): _*) {
+      runOnce { s =>
+        s.addData(tombRows.take(1).toIndexedSeq: _*)
+        s.addData(tombRows.drop(1).toIndexedSeq: _*)
+      }
     }
     // 1. the id feed drives the pair-table anti-join == rebuild
     val ids = spark.read.parquet(s"$dir/ids").select("doc_id").distinct()
@@ -1158,10 +1203,10 @@ class StreamingAnalyticsSpec extends SparkSpec {
     def runOnce(feed: org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, String, String, Long)] => Unit): Unit = {
       val source = MemoryStream[(Long, String, String, Long)]
+      feed(source)
       val q = IngestPipeline.start(
         source.toDF().toDF("doc_id", "text", "lang", "n_chars"),
         corpusGrams, corpusSig, cfg, dir, s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
@@ -1170,9 +1215,12 @@ class StreamingAnalyticsSpec extends SparkSpec {
     // restart from the same checkpoint: batch 0 REPLAYS (the retry
     // scenario — idempotent overwrite must replace, not duplicate),
     // then micro-batch 1 delivers the rest
-    runOnce { s =>
-      s.addData(h1.toIndexedSeq: _*)
-      s.addData(h2.toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, Seq("scores", "clean", "spans", "neardup",
+        "postings", "doclen", "funnel").map(t => s"$dir/$t/batch_run=0"): _*) {
+      runOnce { s =>
+        s.addData(h1.toIndexedSeq: _*)
+        s.addData(h2.toIndexedSeq: _*)
+      }
     }
     // one-shot batch comparand: the SAME chain over all docs at once
     val want = IngestPipeline.chainOf(
@@ -1908,16 +1956,18 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-vtd").toString
     def runOnce(feed: MemoryStream[(Long, String)] => Unit): Unit = {
       val source = MemoryStream[(Long, String)]
+      feed(source)
       val q = TakedownPipeline.start(
         source.toDF().toDF("doc_id", "text"), dir, s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
     runOnce { s => s.addData(tombDocs.take(2).toIndexedSeq: _*) }
-    runOnce { s =>
-      s.addData(tombDocs.take(2).toIndexedSeq: _*)
-      s.addData(tombDocs.drop(2).toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, takedownStores.map(t => s"$dir/$t/batch_run=0"): _*) {
+      runOnce { s =>
+        s.addData(tombDocs.take(2).toIndexedSeq: _*)
+        s.addData(tombDocs.drop(2).toIndexedSeq: _*)
+      }
     }
     val ids = spark.read.parquet(s"$dir/ids").select("doc_id").distinct()
       .withColumnRenamed("doc_id", "vec_id")
@@ -1973,16 +2023,18 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-nswsa").toString
     def runOnce(feed: MemoryStream[(Long, Seq[Float])] => Unit): Unit = {
       val source = MemoryStream[(Long, Seq[Float])]
+      feed(source)
       val q = graft.streaming.EventAnalytics.startStreamingNswSigAppend(
         source.toDF().toDF("vec_id", "embedding"), s"$dir/sigs", s"$dir/ckpt")
-      feed(source)
       q.processAllAvailable()
       q.stop()
     }
     runOnce { s => s.addData(h1.toIndexedSeq: _*) }
-    runOnce { s =>
-      s.addData(h1.toIndexedSeq: _*)
-      s.addData(h2.toIndexedSeq: _*)
+    replayBatch(s"$dir/ckpt", 0, s"$dir/sigs/batch_run=0") {
+      runOnce { s =>
+        s.addData(h1.toIndexedSeq: _*)
+        s.addData(h2.toIndexedSeq: _*)
+      }
     }
     // landed signatures: split-invariant, replay-deduped, byte-equal
     // to the batch verb's own signing
